@@ -24,15 +24,16 @@ object GraftSql {
 
   def sql(spark: SparkSession, text: String): DataFrame = text match {
     case CreateExternal(name, cols, fmt, location) =>
-      val reader = Option(cols).map(_.trim).filter(_.nonEmpty) match {
-        case Some(defs) => spark.read.schema(parseSchema(defs))
-        case None       => spark.read
-      }
-      val df = fmt.toUpperCase match {
-        case "PARQUET" => reader.parquet(location)
-        case "CSV"     => reader.option("header", "true").csv(location)
-        case "JSON"    => reader.json(location)
-        case other     => throw new IllegalArgumentException(s"Unsupported file type: $other")
+      val declared = Option(cols).map(_.trim).filter(_.nonEmpty).map(parseSchema)
+      val reader = declared.fold(spark.read)(s => spark.read.schema(s))
+      val df = (fmt.toUpperCase, declared) match {
+        // no column list: the table's schema is inferred once per unchanged
+        // file set (graft.Tables.parquet), not by a Spark job per statement
+        case ("PARQUET", None) => graft.Tables.parquet(spark, location)
+        case ("PARQUET", _)    => reader.parquet(location)
+        case ("CSV", _)        => reader.option("header", "true").csv(location)
+        case ("JSON", _)       => reader.json(location)
+        case (other, _)        => throw new IllegalArgumentException(s"Unsupported file type: $other")
       }
       df.createOrReplaceTempView(name)
       df

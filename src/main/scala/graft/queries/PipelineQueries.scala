@@ -1853,6 +1853,30 @@ object PipelineQueries {
        |  GROUP BY 2, 3 ORDER BY c DESC, x, y LIMIT 16)""".stripMargin
   }
 
+  /** The three BPE training rounds over the ONE-scan word histogram
+    * (q_bpe_train, q_bpe_train_hist), shaped like Bpe.trainMergesHist: the
+    * histogram is persisted so every round reads it instead of re-deriving
+    * it from the corpus (vocab-bounded, spills to disk past memory), and
+    * it is released in a `finally` once the 48 result rows are collected —
+    * no cached block outlives the builder.
+    */
+  private def bpeTrainRounds(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val hist = Bpe.wordHistogram(t(s, d, "documents"), col("text"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rounds = (1 to 3).map { r =>
+        Bpe.pairCountsHist(hist, BpeMerges.take(16 * (r - 1)))
+          .orderBy(col("c").desc, col("x").asc, col("y").asc)
+          .limit(16)
+          .select(lit(r.toLong).as("round"), col("x"), col("y"),
+            col("c").cast("long").as("c"))
+      }.reduce(_ unionAll _)
+        .orderBy(col("round"), col("c").desc, col("x"), col("y"))
+      s.createDataFrame(java.util.Arrays.asList(rounds.collect(): _*), rounds.schema)
+    } finally hist.unpersist()
+  }
+
   /** DuckDB BM25 oracle CTE (k1=1.2, b=0.75, scores in integer micros),
     * mirroring Bm25.scoreMicros literal-for-literal — same association
     * order, CASTs on every decimal literal (DuckDB decimals would
@@ -4719,60 +4743,33 @@ object PipelineQueries {
               |FROM (${bpeRoundSql(1, 0)} UNION ALL ${bpeRoundSql(2, 16)}
               |      UNION ALL ${bpeRoundSql(3, 32)})
               |ORDER BY round, c DESC, x, y""".stripMargin),
-      (s, d) => {
-        // Served by the ONE-SCAN histogram core (r21, VERDICT item 4):
-        // pairCountsHist's frequency-weighted counts are bit-equal to
-        // pairCounts' corpus counts (merges/pairs never cross the ` | `
-        // word boundary — BpeSpec pins trainMergesHist == trainMerges,
-        // and q_bpe_train_hist has always emitted byte-identical rows to
-        // this query via this exact path), so the three evolving-merge
-        // rounds run over the vocab-scale histogram instead of three
-        // corpus scans with growing replace chains. The corpus-scan-per-
-        // round twin remains exercised by the shared trainer core
-        // (Bpe.trainMerges, BpeSpec); this query now prices the
-        // production (Sennrich '16) trainer shape.
-        val hist = Bpe.wordHistogram(t(s, d, "documents"), col("text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (1 to 3).map { r =>
-          Bpe.pairCountsHist(hist, BpeMerges.take(16 * (r - 1)))
-            .orderBy(col("c").desc, col("x").asc, col("y").asc)
-            .limit(16)
-            .select(lit(r.toLong).as("round"), col("x"), col("y"),
-              col("c").cast("long").as("c"))
-        }.reduce(_ unionAll _)
-          .orderBy(col("round"), col("c").desc, col("x"), col("y"))
-      }),
+      // Served by the ONE-SCAN histogram core (r21, VERDICT item 4):
+      // pairCountsHist's frequency-weighted counts are bit-equal to
+      // pairCounts' corpus counts (merges/pairs never cross the ` | `
+      // word boundary — BpeSpec pins trainMergesHist == trainMerges), so
+      // the three evolving-merge rounds run over the vocab-scale histogram
+      // instead of three corpus scans with growing replace chains. The
+      // corpus-scan-per-round twin remains exercised by the shared trainer
+      // core (Bpe.trainMerges, BpeSpec); this query prices the production
+      // (Sennrich '16) trainer shape.
+      (s, d) => bpeTrainRounds(s, d)),
 
     // The same three training rounds derived from the ONE-SCAN word
     // histogram (Bpe.trainMergesHist's shape — Sennrich '16's standard
     // formulation: merges x O(vocab), corpus-scan count independent of
     // merge count). Pair counts weighted by word frequency equal corpus
     // pair counts exactly (merges/pairs never cross the ` | ` boundary),
-    // so this emits BYTE-IDENTICAL rows to q_bpe_train via a different
-    // compute path; the oracle re-derives the trajectory from the same
-    // histogram in SQL. BpeSpec pins trainMergesHist == trainMerges.
+    // so this emits BYTE-IDENTICAL rows to q_bpe_train (both are served by
+    // bpeTrainRounds); its oracle re-derives the trajectory from the same
+    // histogram in SQL, q_bpe_train's from corpus scans. BpeSpec pins
+    // trainMergesHist == trainMerges.
     Q("q_bpe_train_hist",
       Some(s"""WITH $bpeHistSql
               |SELECT CAST(round AS BIGINT) AS round, x, y, CAST(c AS BIGINT) AS c
               |FROM (${bpeHistRoundSql(1, 0)} UNION ALL ${bpeHistRoundSql(2, 16)}
               |      UNION ALL ${bpeHistRoundSql(3, 32)})
               |ORDER BY round, c DESC, x, y""".stripMargin),
-      (s, d) => {
-        // persist the histogram like Bpe.trainMergesHist does — the three
-        // round branches below must read the ONE-scan table, not re-derive
-        // it from the corpus (the whole point of the histogram trainer);
-        // vocab-bounded, spills to disk past memory
-        val hist = Bpe.wordHistogram(t(s, d, "documents"), col("text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (1 to 3).map { r =>
-          Bpe.pairCountsHist(hist, BpeMerges.take(16 * (r - 1)))
-            .orderBy(col("c").desc, col("x").asc, col("y").asc)
-            .limit(16)
-            .select(lit(r.toLong).as("round"), col("x"), col("y"),
-              col("c").cast("long").as("c"))
-        }.reduce(_ unionAll _)
-          .orderBy(col("round"), col("c").desc, col("x"), col("y"))
-      }),
+      (s, d) => bpeTrainRounds(s, d)),
 
     // BPE encode under the learned merge table (inlined literal — trained
     // once at sf0.01 by Bpe.trainMerges(docs, text, 16, 3), reproducible

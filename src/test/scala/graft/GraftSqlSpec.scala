@@ -19,14 +19,45 @@ class GraftSqlSpec extends SparkTestBase {
     // deliberate divergence (file contents can't be trusted at plan time).
   }
 
-  test("round-trip on the reference's own sample parquet (read-only)") {
-    // The file mura's CREATE EXTERNAL TABLE doc-example targets
-    // (/root/reference/src/parser/mod.rs:26-28) but never loads.
-    val path = "/root/reference/src/examples/userdata1.parquet"
-    if (new java.io.File(path).exists()) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      GraftSql.sql(spark,
+  /** A stand-in for mura's sample `userdata1.parquet` (FIXTURES.md §2),
+    * which the mura `CREATE EXTERNAL TABLE` doc-example targets
+    * (mura's `src/parser/mod.rs:26-28`): the same 13 columns and
+    * 1000 deterministic rows, salary null on every 13th row. Spark writes
+    * `registration_dttm` as a microsecond TIMESTAMP (the sample's
+    * timestamp[ns] has no Spark writer). Written under a fresh tmp dir that
+    * is removed after `body`.
+    */
+  private def withUserdata[A](body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_userdata_").toFile
+    try {
+      val path = s"$dir/userdata1.parquet"
+      spark.range(1, 1001).selectExpr(
+        "timestamp_seconds(1454284800 + id * 3607) AS registration_dttm",
+        "CAST(id AS INT) AS id",
+        "concat('First', id) AS first_name",
+        "concat('Last', id) AS last_name",
+        "concat('user', id, '@example.com') AS email",
+        "IF(id % 2 = 0, 'Female', 'Male') AS gender",
+        "concat('10.0.', id div 256, '.', id % 256) AS ip_address",
+        "CAST(4000000000000000 + id * 7919 AS STRING) AS cc",
+        "element_at(array('Portugal', 'China', 'Indonesia', 'Brazil', 'France'), " +
+          "CAST(id % 5 + 1 AS INT)) AS country",
+        "date_format(date_add(DATE'1960-01-01', CAST(id * 17 AS INT)), 'M/d/yyyy') AS birthdate",
+        "IF(id % 13 = 0, CAST(NULL AS DOUBLE), 12000.0 + (id * 7919) % 275000) AS salary",
+        "concat('Title ', id % 40) AS title",
+        "IF(id % 11 = 0, '', concat('comment ', id)) AS comments")
+        .coalesce(1).write.parquet(path)
+      body(path)
+    } finally new scala.reflect.io.Directory(dir).deleteRecursively(): Unit
+  }
+
+  test("round-trip on a sample parquet shaped like the reference's userdata1") {
+    withUserdata { path =>
+      val df = GraftSql.sql(spark,
         s"CREATE EXTERNAL TABLE userdata STORED AS PARQUET LOCATION '$path'")
+      assert(df.columns.length == 13)
+      assert(df.schema("registration_dttm").dataType == TimestampType)
+      assert(df.schema("salary").dataType == DoubleType)
       assert(spark.sql("SELECT count(*) AS n FROM userdata").collect()(0).getLong(0) == 1000)
     }
   }
@@ -78,44 +109,45 @@ class GraftSqlSpec extends SparkTestBase {
     // projection, every comparison operator, AND/OR/NOT, IS [NOT] NULL,
     // CAST, ORDER BY, LIMIT — is the expression surface its logical plan
     // DECLARES (logicalplan.rs:27-149) executed end-to-end through
-    // GraftSql.sql. Expected values cross-checked against a direct
-    // spark.read.parquet of the same file inside this test.
-    val path = "/root/reference/src/examples/userdata1.parquet"
-    assume(new java.io.File(path).exists())
-    GraftSql.sql(spark,
-      s"CREATE EXTERNAL TABLE userdata_conf STORED AS PARQUET LOCATION '$path'")
-    val raw = spark.read.parquet(path)
+    // GraftSql.sql, over the userdata stand-in. Expected values
+    // cross-checked against a direct spark.read.parquet of the same file
+    // inside this test.
+    withUserdata { path =>
+      GraftSql.sql(spark,
+        s"CREATE EXTERNAL TABLE userdata_conf STORED AS PARQUET LOCATION '$path'")
+      val raw = spark.read.parquet(path)
 
-    // bare scan (the shape the reference's SELECT planner emits)
-    assert(GraftSql.sql(spark, "SELECT * FROM userdata_conf").count() == raw.count())
+      // bare scan (the shape the reference's SELECT planner emits)
+      assert(GraftSql.sql(spark, "SELECT * FROM userdata_conf").count() == raw.count())
 
-    // projection + all six comparisons + boolean composition
-    val got = GraftSql.sql(spark,
-      """SELECT id, first_name FROM userdata_conf
-        |WHERE (salary > 50000.0 AND salary <= 100000.0 AND id >= 10 AND id < 900)
-        |   OR (NOT (country <> 'Portugal') AND id = 7)""".stripMargin).count()
-    val want = {
-      import org.apache.spark.sql.functions._
-      raw.filter((col("salary") > 50000.0 && col("salary") <= 100000.0 &&
-          col("id") >= 10 && col("id") < 900) ||
-        (!(col("country") =!= "Portugal") && col("id") === 7)).count()
+      // projection + all six comparisons + boolean composition
+      val got = GraftSql.sql(spark,
+        """SELECT id, first_name FROM userdata_conf
+          |WHERE (salary > 50000.0 AND salary <= 100000.0 AND id >= 10 AND id < 900)
+          |   OR (NOT (country <> 'Portugal') AND id = 7)""".stripMargin).count()
+      val want = {
+        import org.apache.spark.sql.functions._
+        raw.filter((col("salary") > 50000.0 && col("salary") <= 100000.0 &&
+            col("id") >= 10 && col("id") < 900) ||
+          (!(col("country") =!= "Portugal") && col("id") === 7)).count()
+      }
+      assert(got == want && got > 0)
+
+      // IS NULL / IS NOT NULL (salary has genuine nulls in the sample file)
+      val nNull = GraftSql.sql(spark,
+        "SELECT id FROM userdata_conf WHERE salary IS NULL").count()
+      val nNotNull = GraftSql.sql(spark,
+        "SELECT id FROM userdata_conf WHERE salary IS NOT NULL").count()
+      assert(nNull > 0 && nNull + nNotNull == raw.count())
+
+      // CAST + ORDER BY (multi-key, asc/desc) + LIMIT
+      val top = GraftSql.sql(spark,
+        """SELECT id, CAST(salary AS BIGINT) AS sal
+          |FROM userdata_conf WHERE salary IS NOT NULL
+          |ORDER BY sal DESC, id ASC LIMIT 3""".stripMargin).collect()
+      assert(top.length == 3)
+      assert(top.sliding(2).forall(p => p(0).getLong(1) >= p(1).getLong(1)))
     }
-    assert(got == want && got > 0)
-
-    // IS NULL / IS NOT NULL (salary has genuine nulls in the sample file)
-    val nNull = GraftSql.sql(spark,
-      "SELECT id FROM userdata_conf WHERE salary IS NULL").count()
-    val nNotNull = GraftSql.sql(spark,
-      "SELECT id FROM userdata_conf WHERE salary IS NOT NULL").count()
-    assert(nNull > 0 && nNull + nNotNull == raw.count())
-
-    // CAST + ORDER BY (multi-key, asc/desc) + LIMIT
-    val top = GraftSql.sql(spark,
-      """SELECT id, CAST(salary AS BIGINT) AS sal
-        |FROM userdata_conf WHERE salary IS NOT NULL
-        |ORDER BY sal DESC, id ASC LIMIT 3""".stripMargin).collect()
-    assert(top.length == 3)
-    assert(top.sliding(2).forall(p => p(0).getLong(1) >= p(1).getLong(1)))
   }
 
   test("script splitter: semicolons in literals and -- comments survive correctly") {

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.ListenerBusBridge
 import org.apache.spark.sql.types._
+import graft.engine.GraftSql
 
 /** Schema smoke test over every table at every generated SF. The testdata is
   * regenerated by the driver between rounds and physical encodings have
@@ -75,20 +81,24 @@ class TablesSpec extends SparkTestBase {
 
   // --- Tables.tFan: the scale-adaptive scan fan-out (OPTIMIZATION_r20 §5/§14)
 
+  /** A fresh tmp dir, reaped when the JVM exits (fixture hygiene, ADVICE
+    * r20): walk-and-delete, deepest first, so files go before their parent.
+    */
+  private def tmpDir(prefix: String): java.nio.file.Path = {
+    val dir = Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      import scala.jdk.CollectionConverters._
+      if (Files.exists(dir))
+        Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
+    }))
+    dir
+  }
+
   /** Write `rows` ids as a parquet table named `documents` under a fresh tmp
     * dir, pre-partitioned into `files` output files, and return the dir.
     */
   private def fanFixture(files: Int, rows: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tfan_")
-    // fixture hygiene (ADVICE r20): reap the dir when the JVM exits —
-    // walk-and-register, deepest first, so files go before their parent
-    val reap = new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(dir))
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    })
-    Runtime.getRuntime.addShutdownHook(reap)
+    val dir = tmpDir("graft_tfan_")
     spark.range(rows.toLong).toDF("doc_id")
       .repartition(files)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -130,5 +140,140 @@ class TablesSpec extends SparkTestBase {
         "no exchange may be added when the scan already has >= cores splits " +
           "(the production-scale no-op branch)")
     } finally spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+  }
+
+  // --- Tables.parquet: schema inferred once per unchanged file set
+
+  private val sf001 = s"${new java.io.File(sf).getParent}/sf0.01"
+
+  /** Run `body` and count the Spark jobs it started. Jobs are matched by a
+    * local property set on this thread only, so a job from any other
+    * thread cannot land in the count.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val a = body
+      ListenerBusBridge.drain(spark)
+      (a, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def output(df: DataFrame) =
+    df.queryExecution.analyzed.output.map(a => (a.name, a.dataType, a.nullable, a.metadata))
+
+
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("schema reuse: a second Tables.t of an unchanged table starts no job and equals the inferred read") {
+    for (name <- Tables.names) {
+      Tables.t(spark, sf001, name)
+      val (df, jobs) = jobsDuring(Tables.t(spark, sf001, name))
+      assert(jobs == 0, s"$name: a repeat read of an unchanged table ran $jobs job(s)")
+      // the plain inferring read, normalized like Tables.t for events
+      val raw = spark.read.parquet(s"$sf001/$name.parquet")
+      val inferred = if (name == "events") Tables.normalizeEvents(raw) else raw
+      assert(df.schema == inferred.schema, s"$name: reused schema differs from inference")
+      assert(output(df) == output(inferred), s"$name: analyzed output differs from inference")
+    }
+  }
+
+  test("schema reuse: rewriting a table with a different schema re-infers") {
+    val dir = tmpDir("graft_schema_reuse_")
+    // the testdata layout: a single parquet FILE, replaced in place
+    val file = dir.resolve("t.parquet")
+    Files.copy(Paths.get(s"$sf/region.parquet"), file)
+    val path = file.toString
+    assert(Tables.parquet(spark, path).columns.toSeq == Seq("r_regionkey", "r_name"))
+    assert(jobsDuring(Tables.parquet(spark, path))._2 == 0)
+    Files.copy(Paths.get(s"$sf/nation.parquet"), file, StandardCopyOption.REPLACE_EXISTING)
+    val (df, jobs) = jobsDuring(Tables.parquet(spark, path))
+    assert(jobs > 0, "a rewritten file must be re-inferred")
+    assert(df.columns.toSeq == Seq("n_nationkey", "n_name", "n_regionkey"))
+    assert(df.count() == 25L)
+    // the Spark layout: a directory of part files, overwritten
+    val sparkDir = dir.resolve("s.parquet").toString
+    spark.range(10).toDF("a").write.parquet(sparkDir)
+    assert(Tables.parquet(spark, sparkDir).columns.toSeq == Seq("a"))
+    spark.range(10).selectExpr("CAST(id AS STRING) AS b", "id AS c")
+      .write.mode("overwrite").parquet(sparkDir)
+    val rewritten = Tables.parquet(spark, sparkDir)
+    assert(rewritten.schema("b").dataType == StringType && rewritten.columns.length == 2)
+  }
+
+  test("schema reuse: toggling spark.sql.legacy.parquet.nanosAsLong re-infers") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val path = s"$sf/region.parquet"
+    Tables.parquet(spark, path)
+    val flipped = (!spark.conf.getOption(key).contains("true")).toString
+    withConf(key, flipped) {
+      assert(jobsDuring(Tables.parquet(spark, path))._2 > 0,
+        "a changed parquet conf must force a re-inference")
+      assert(jobsDuring(Tables.parquet(spark, path))._2 == 0,
+        "the re-inferred schema is reused under the same conf")
+    }
+  }
+
+  test("schema reuse: mura CREATE EXTERNAL TABLE after Tables.views starts no job") {
+    Tables.views(spark, sf001)
+    try {
+      // the spelled and the qualified location share one entry
+      for (loc <- Seq(s"$sf001/orders.parquet", s"file:$sf001/orders.parquet",
+          s"$sf001//orders.parquet")) {
+        val (df, jobs) = jobsDuring(GraftSql.sql(spark,
+          s"CREATE EXTERNAL TABLE orders_ddl STORED AS PARQUET LOCATION '$loc'"))
+        assert(jobs == 0, s"CREATE EXTERNAL TABLE at '$loc' ran $jobs job(s)")
+        assert(df.schema == spark.table("orders").schema)
+      }
+    } finally {
+      (Tables.names :+ "orders_ddl").foreach(spark.catalog.dropTempView)
+    }
+  }
+
+  test("tFan: the cached split count follows a table rewrite") {
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = fanFixture(files = 1, rows = 4000)
+    assume(Tables.t(spark, dir, "documents").rdd.getNumPartitions < cores)
+    assert(Tables.tFan(spark, dir, "documents").rdd.getNumPartitions == cores)
+    spark.range(4000).toDF("doc_id").repartition(cores * 2)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val scanParts = Tables.t(spark, dir, "documents").rdd.getNumPartitions
+    assume(scanParts >= cores, s"rewrite must split >= cores ($scanParts vs $cores)")
+    val fanned = Tables.tFan(spark, dir, "documents")
+    assert(fanned.rdd.getNumPartitions == scanParts)
+    assert(!fanned.queryExecution.executedPlan.toString.toLowerCase.contains("roundrobin"),
+      "the single-split count from before the rewrite was served")
+  }
+
+  test("tFan: the cached split count follows spark.sql.files.maxPartitionBytes") {
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = fanFixture(files = 1, rows = 4000)
+    assume(Tables.t(spark, dir, "documents").rdd.getNumPartitions < cores)
+    assert(Tables.tFan(spark, dir, "documents").rdd.getNumPartitions == cores)
+    // 1 KB splits cut the one file into more splits than cores
+    withConf("spark.sql.files.maxPartitionBytes", "1024") {
+      val scanParts = Tables.t(spark, dir, "documents").rdd.getNumPartitions
+      assume(scanParts > cores, s"1 KB splits must exceed cores ($scanParts vs $cores)")
+      assert(Tables.tFan(spark, dir, "documents").rdd.getNumPartitions == scanParts,
+        "a split count cached under other split sizing was served")
+    }
   }
 }
