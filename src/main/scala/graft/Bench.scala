@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every registered query executed to completion
   * against SPARK_GRAFT_SF_DIR, one JSON line out.
   *
@@ -35,16 +33,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
 
     // Every batch action the bench runs is audited by the session-level
     // plan lint (the same rules LintSpec gates the board with at build
@@ -102,7 +91,8 @@ object Bench {
     // sustained all-core probe IS sensitive to that regime. Emitted as
     // calib_mc_sec:[pre,post] beside calib_sec.
     //
-    // Work sizing (r17): ProbeSoak measured this round's hardware at
+    // Work sizing (r17): the calibration record in BASELINE.md
+    // ("Multi-core sustained probe") puts this round's hardware at
     // 2-3× the 0.220 reference — the 400M short probe finishes in
     // ~0.1-0.15 s there, where per-job fixed overhead (scheduler, JIT
     // tiers, codegen cache) is a LARGE share of the reading and decays
@@ -134,10 +124,11 @@ object Bench {
     calibrate()       // warmup the probe's codegen path too
     val calibPre = minOf3(() => calibrate())
     // distinct literal => distinct generated class; THREE warm runs, not
-    // one — ProbeSoak's convergence curve shows the sustained probe
-    // plateaus after ~4-5 executions on fresh-JVM hardware, and the pre
-    // bracket must start from the plateau for pre/post agreement to
-    // mean "machine stayed the same" rather than "JVM aged".
+    // one — the convergence curve in BASELINE.md ("Multi-core sustained
+    // probe") shows the sustained probe plateaus after ~4-5 executions
+    // on fresh-JVM hardware, and the pre bracket must start from the
+    // plateau for pre/post agreement to mean "machine stayed the same"
+    // rather than "JVM aged".
     (1 to 3).foreach(_ => calibrateMc())
     val calibMcPre = minOf3(() => calibrateMc())
 

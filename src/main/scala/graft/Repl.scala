@@ -92,7 +92,7 @@ object Repl {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local("graft-repl")
+    val spark = GraftSession.local("*")
     println("graft> SQL REPL (blank line or :quit to exit; :explain <sql> for plans; :load <file.sql> for scripts)")
     var line = ""
     while ({ print("graft> "); Console.flush(); line = StdIn.readLine(); line != null && line.trim.nonEmpty && line.trim != ":quit" }) {

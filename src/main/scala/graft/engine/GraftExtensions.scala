@@ -1,15 +1,13 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: the no-fork plugin path
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.engine.GraftExtensions`) registering graft's
-  * custom expressions and the as-of planner strategy with every session
-  * built from that builder.
+  * (`withExtensions(new GraftExtensions)` on a session builder, or
+  * `spark.sql.extensions=graft.engine.GraftExtensions`) registering every
+  * function of [[GraftFunctions.table]] and the as-of planner strategy and
+  * rule with every session built from that builder.
   *
   * This is the registry design the reference sketched and never shipped
   * (name-keyed function nodes with no registry,
@@ -19,31 +17,8 @@ import graft.functions._
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def fn(name: String, usage: String, builder: Seq[Expression] => Expression):
-      (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo("graft", name, usage), builder)
-
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(fn("cosine_sim",
-      "cosine_sim(a, b) - cosine similarity of two float/double arrays",
-      exprs => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction(fn("dot_product",
-      "dot_product(a, b) - dot product of two float/double arrays",
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction(fn("hamming64",
-      "hamming64(a, b) - hamming distance of two 64-bit hashes",
-      exprs => HammingDistance64(
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), org.apache.spark.sql.types.LongType))))
-    e.injectFunction(fn("fingerprint64",
-      "fingerprint64(s) - 64-bit content fingerprint",
-      exprs => Fingerprint64(exprs(0), 42L)))
-    e.injectFunction(fn("simhash64",
-      "simhash64(tokens) - 64-bit simhash over a token array",
-      exprs => SimHash64(exprs(0), 42L)))
-    e.injectFunction(fn("char_entropy",
-      "char_entropy(s) - Shannon entropy (bits) of the code-point distribution",
-      exprs => CharEntropy(exprs(0))))
+    GraftFunctions.table.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
   }

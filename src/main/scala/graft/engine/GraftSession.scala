@@ -2,36 +2,42 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: the one place a SparkSession is
+  * built. Bench, Verify, the REPL, the tests and the dev tools all start
+  * here and set any extra conf of their own after the build.
   *
   * The reference (mura) is a single-process REPL (`src/main.rs:27-61` in
   * /root/reference) whose "session" is a fresh parser+planner per line. Our
   * session is a configured SparkSession: Catalyst supplies the
   * parse/analyze/optimize/execute lifecycle the reference only declares
-  * (`README.md:10`), and our custom functions are registered on top.
+  * (`README.md:10`), and [[GraftExtensions]] adds our custom functions and
+  * the as-of planner strategy.
   *
   * Scale notes (100 TB posture, tested at local[32]):
   *  - AQE on: runtime coalescing, skew-join splitting, join-strategy switch.
-  *  - shuffle.partitions default kept modest locally; on a real cluster this
-  *    is overridden per-job (or left to AQE's coalescing from a high initial).
+  *  - shuffle.partitions = the context's default parallelism (the core
+  *    count locally); on a real cluster this is overridden per-job (or left
+  *    to AQE's coalescing from a high initial).
   *  - session TZ pinned UTC so timestamp semantics match the DuckDB oracle.
   */
 object GraftSession {
 
-  def local(appName: String = "graft", cores: String = "*"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+  /** A `local[cores]` session; `cores` is anything Spark accepts inside
+    * the brackets (`"*"`, `"8"`, `"4,2"` for 4 threads with 2 task tries).
+    */
+  def local(cores: String): SparkSession = {
+    val spark = SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.sql.warehouse.dir",
+        sys.props("java.io.tmpdir") + "/graft-warehouse")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toString)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     spark
   }
 }

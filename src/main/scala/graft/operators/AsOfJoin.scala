@@ -191,21 +191,14 @@ object AsOfJoin {
 
   /** The same semantics through the custom-operator path: a Catalyst
     * logical node ([[graft.plans.AsOfJoinNode]]) lowered by a planner
-    * strategy to a merge-based physical operator. Registered lazily on the
-    * session's extraStrategies.
+    * strategy to a merge-based physical operator. The strategy is installed
+    * on the session on first use (GraftFunctions.installAsOf).
     */
   def native(left: DataFrame, right: DataFrame, keyCol: String,
       leftTsCol: String, rightTsCol: String,
       payloadCols: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PushFilterThroughAsOfJoin)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PushFilterThroughAsOfJoin
-    }
+    graft.functions.GraftFunctions.installAsOf(spark)
     val lPlan = left.queryExecution.analyzed
     // Re-alias every right column: when both sides derive from the same
     // base DataFrame they share exprIds, and an ambiguous key attribute

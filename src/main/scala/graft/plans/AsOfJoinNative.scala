@@ -139,8 +139,8 @@ case class AsOfJoinExec(
 }
 
 /** Planner strategy lowering [[AsOfJoinNode]] to [[AsOfJoinExec]] —
-  * registered via `spark.experimental.extraStrategies` (see
-  * [[graft.functions.GraftFunctions.register]]).
+  * injected by [[graft.engine.GraftExtensions]], or added once by
+  * [[graft.functions.GraftFunctions.installAsOf]] on other sessions.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -1,0 +1,89 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.PlainSession
+import graft.functions.GraftFunctions
+
+/** The session factory and the function table: one way to build a
+  * session, one list of SQL functions, the as-of strategy installed once
+  * whichever registration path ran.
+  */
+class GraftSessionSpec extends SparkTestBase {
+
+  private val names = GraftFunctions.table.map(_._1.funcName)
+
+  private def usageOf(s: SparkSession, name: String): String =
+    s.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0)).mkString("\n")
+
+  private def asOfStrategies(s: SparkSession): Int =
+    s.sessionState.planner.strategies.count(_ eq graft.plans.AsOfJoinStrategy)
+
+  test("factory conf: local[4,2], shuffle = cores, AQE, UTC, no UI, tmpdir warehouse") {
+    val conf = spark.sparkContext.getConf
+    assert(spark.sparkContext.master == "local[4,2]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.ui.enabled") == "false")
+    val warehouse = Paths.get(new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")))
+    assert(warehouse.startsWith(Paths.get(sys.props("java.io.tmpdir"))), warehouse)
+  }
+
+  test("GraftSession is the only SparkSession builder in src/main") {
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val root = Paths.get("src/main/scala")
+    val builders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toSeq
+    assert(builders == Seq("graft/engine/GraftSession.scala"))
+  }
+
+  test("the function table has 12 distinct functions, each resolvable with its usage") {
+    assert(names.size == 12 && names.distinct.size == 12)
+    GraftFunctions.table.foreach { case (id, info, _) =>
+      assert(spark.catalog.functionExists(id.funcName), id.funcName)
+      assert(usageOf(spark, id.funcName).contains(info.getUsage), id.funcName)
+    }
+  }
+
+  test("a session without the extensions gets the same functions from register") {
+    val plain = PlainSession.on(spark)
+    assert(names.forall(n => !plain.catalog.functionExists(n)),
+      "the plain session already had graft functions")
+    GraftFunctions.register(plain)
+    assert(names.filter(plain.catalog.functionExists) == names)
+    GraftFunctions.table.foreach { case (id, info, _) =>
+      assert(usageOf(plain, id.funcName) == usageOf(spark, id.funcName), id.funcName)
+    }
+    val cos = plain.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D))").head().getDouble(0)
+    assert(cos == 1.0)
+  }
+
+  test("the as-of strategy is installed once whichever path ran") {
+    import spark.implicits._
+    def asOfJoin(s: SparkSession): Unit = {
+      val l = s.createDataset(Seq((1L, 10L))).toDF("k", "ts")
+      val r = s.createDataset(Seq((1L, 5L, 7L))).toDF("k", "rts", "v")
+      val got = graft.operators.AsOfJoin.native(l, r, "k", "ts", "rts", Seq("v"))
+        .select(col("v")).as[Long].collect()
+      assert(got.toSeq == Seq(7L))
+    }
+    GraftFunctions.register(spark)
+    asOfJoin(spark)
+    GraftFunctions.register(spark)
+    assert(asOfStrategies(spark) == 1)
+    assert(!spark.experimental.extraOptimizations.contains(graft.plans.PushFilterThroughAsOfJoin))
+
+    val plain = PlainSession.on(spark)
+    assert(asOfStrategies(plain) == 0)
+    asOfJoin(plain)
+    GraftFunctions.register(plain)
+    asOfJoin(plain)
+    assert(asOfStrategies(plain) == 1)
+    assert(plain.experimental.extraOptimizations.count(_ eq graft.plans.PushFilterThroughAsOfJoin) == 1)
+  }
+}

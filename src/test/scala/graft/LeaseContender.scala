@@ -26,7 +26,7 @@ package graft
 object LeaseContender {
   def main(args: Array[String]): Unit = {
     val Array(mode, root, sfDir, tag, leaseMs) = args
-    val spark = graft.engine.GraftSession.local(s"graft-contender-$mode", "2")
+    val spark = graft.engine.GraftSession.local("2")
     spark.conf.set("spark.graft.artifacts.root", root)
     spark.conf.set("spark.graft.artifacts.leaseMs", leaseMs)
     if (mode == "watch") {

@@ -9,6 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * local[4] fails the job on the first task failure).
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = graft.engine.GraftSession.local("graft-test", "4,2")
+  lazy val spark: SparkSession = graft.engine.GraftSession.local("4,2")
   val sf: String = "/root/testdata/sf0.001"
 }

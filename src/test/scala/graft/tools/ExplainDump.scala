@@ -1,12 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: dump `.explain("formatted")` for the headline queries into
   * EXPLAINS.md so plan shape (pushdown, broadcast, partial agg, codegen
   * spans) is reviewable without running Spark.
-  * Usage: `sbt "runMain graft.ExplainDump [sfDir]"`.
+  * Usage: `sbt "Test/runMain graft.ExplainDump [sfDir]"`.
   */
 object ExplainDump {
   val headline: Seq[String] = Seq(
@@ -71,20 +70,13 @@ object ExplainDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
+    val spark = graft.engine.GraftSession.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans of the headline queries\n\n")
     sb.append(s"Generated by `graft.ExplainDump` on `$sfDir` " +
       "(local[4], AQE initial plans). Regenerate after plan-affecting " +
-      "changes: `sbt \"runMain graft.ExplainDump\"`.\n")
+      "changes: `sbt \"Test/runMain graft.ExplainDump\"`.\n")
     headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Phase-cost probe for the incremental cluster-append path — splits the
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions.col
   *   update = Dedup.updateClusters (contract → CC → expand)
   *   full   = the full rebuild both are judged against
   *
-  * Usage: runMain graft.IncrProbe <dir> <den> [reps]
+  * Usage: Test/runMain graft.IncrProbe <dir> <den> [reps]
   * Every phase is warmed once; reported numbers are min over `reps`
   * (default 3) — the same min-of-runs discipline as Bench.
   */
@@ -24,16 +23,7 @@ object IncrProbe {
     val den = args(1).toInt
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
     import graft.operators.Dedup
 
     val docs = Tables.t(spark, dir, "documents")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Incremental cluster-maintenance cost-shape probe (the soak leg of the
@@ -24,7 +23,7 @@ import org.apache.spark.sql.functions.col
   * corpus re-hash anywhere, so the cost tracks the increment and its
   * candidates, never the corpus.
   *
-  * Usage: runMain graft.IncrSoak <dir> <den...>
+  * Usage: Test/runMain graft.IncrSoak <dir> <den...>
   *   e.g. IncrSoak /tmp/graft_sf1 16 8 4   (increments of 1/16, 1/8, 1/4)
   * or `IncrSoak <dir> nights` — the cluster CYCLE ladder: two
   * successive nightly rolls on the 3-night split (id%4 ∈ {0,1} base,
@@ -40,16 +39,7 @@ object IncrSoak {
     val dens = if (nightsMode) Seq.empty[Int]
       else args.drop(1).map(_.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
     import graft.operators.Dedup
 
     val docs = Tables.t(spark, dir, "documents")

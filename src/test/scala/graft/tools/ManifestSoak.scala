@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Append-night cost ladder for the curation manifest, parameterized by
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * they are what the nightly amortizes (reported as base=). Every run
   * asserts the three shapes produce row-identical manifests.
   *
-  * Usage: runMain graft.ManifestSoak <dir> <den...>
+  * Usage: Test/runMain graft.ManifestSoak <dir> <den...>
   *   e.g. ManifestSoak /tmp/graft_sf10m 64 16 4
   * or `ManifestSoak <dir> nights` — the delta CYCLE ladder: two
   * successive delta nights on the 3-night split (id%4 ∈ {0,1} base,
@@ -39,16 +39,7 @@ object ManifestSoak {
     val dens = if (args.lift(1).contains("nights")) Seq.empty[Int]
       else args.drop(1).map(_.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
     import graft.operators.{Decontaminate, Dedup, TextAnalysis}
 
     val docs = Tables.t(spark, dir, "documents")

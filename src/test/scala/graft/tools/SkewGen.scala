@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial-skew soak generator: the sf1-scale replica [[SoakGen]]
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * All remaps are deterministic (xxhash64 of stable keys), so reruns
   * produce the identical corpus. Dev tool, not library surface.
-  * Usage: runMain graft.SkewGen [srcDir dstDir copies]
+  * Usage: Test/runMain graft.SkewGen [srcDir dstDir copies]
   */
 object SkewGen {
   private val KeyStride = 10000000L
@@ -40,13 +40,7 @@ object SkewGen {
     val dst = if (args.length > 1) args(1) else "/tmp/graft_skew1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -25,7 +25,7 @@ import scala.collection.mutable.ArrayBuffer
   *     the joins, grouped top-k, both anomaly monitors (global window vs
   *     chunked), and the LSH dedup chain uncapped vs maxBucket-capped.
   *
-  * Dev tool, not library surface. Usage: runMain graft.SkewSoak [dir]
+  * Dev tool, not library surface. Usage: Test/runMain graft.SkewSoak [dir]
   */
 object SkewSoak {
 
@@ -60,16 +60,7 @@ object SkewSoak {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_skew1"
     val phase = if (args.length > 1) args(1) else "all" // sweep | board | all
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
     val stats = new TaskStats
     spark.sparkContext.addSparkListener(stats)
 

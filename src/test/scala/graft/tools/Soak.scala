@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Heavy-tail soak runner: times a named subset of SparkEntry.queries
   * against a data dir (same measurement discipline as Bench — noop sink,
   * cache cleared between queries), one line per query. Used with
   * [[SoakGen]]'s sf1 replica to check runtimes scale ~linearly from
-  * sf0.1. Usage: runMain graft.Soak <dir> <query...>
+  * sf0.1. Usage: Test/runMain graft.Soak <dir> <query...>
   */
 object Soak {
   def main(args: Array[String]): Unit = {
@@ -14,16 +13,7 @@ object Soak {
     val dir = args(0)
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 soak-data generator: scales the sf0.1 testdata ~10x by key-shifted
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * per-copy perturbation on the first component.
   *
   * Dev tool for the BASELINE.md heavy-tail soak — not part of the library
-  * surface. Usage: runMain graft.SoakGen [srcDir dstDir copies [mutate]]
+  * surface. Usage: Test/runMain graft.SoakGen [srcDir dstDir copies [mutate]]
   *
   * `mutate` mode (round 11, for the 100x point-check): the per-copy
   * copytag prefix makes cross-copy docs NEAR-DUPS (j ~ 0.96), so pair
@@ -38,13 +38,7 @@ object SoakGen {
     val copies = if (args.length > 2) args(2).toInt else 10
     val mutate = args.length > 3 && args(3) == "mutate"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local(cpus)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
