@@ -1,22 +1,28 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ParquetFooterBridge
 import org.apache.spark.sql.types.StructType
 
 /** Test-table access. One parquet per table under the scale-factor dir
-  * (TESTDATA.md). Every base-table read goes through [[parquet]], which
-  * infers a table's schema once per unchanged file set: Spark's parquet
-  * schema inference is a Spark job of its own (one task reading footers),
-  * paid on every schema-less `spark.read.parquet`. The reused schema is
-  * handed to `spark.read.schema(..).parquet`, so Catalyst's column
-  * pruning / predicate pushdown still reach the scan.
+  * (TESTDATA.md). Every schema-less parquet read in the library goes
+  * through [[parquet]]: base tables, artifact dirs, mura's `CREATE
+  * EXTERNAL TABLE … STORED AS PARQUET`. It never starts a Spark job to
+  * learn a schema. A miss lists the path once on the driver and reads the
+  * footer of the one file Spark's inference would read (`_common_metadata`,
+  * else `_metadata`, else the first data file in path order; every data
+  * file plus the summary files under `spark.sql.parquet.mergeSchema`),
+  * where a schema-less `spark.read.parquet` reads those footers in a
+  * one-task Spark job of its own. The schema is handed to
+  * `spark.read.schema(..).parquet`, so Catalyst's column pruning /
+  * predicate pushdown still reach the scan.
   *
-  * Invariant: a cached schema is served only while its key still matches —
-  * the qualified path, the (path, length, modification time) of every leaf
-  * file under it, and the session's set `spark.sql.parquet.*` /
-  * `spark.sql.legacy.parquet.*` values (the confs inference reads). A
-  * rewritten file or a flipped conf re-infers.
+  * Invariant: a remembered schema is served only while its key still
+  * matches — the qualified path, the (path, length, modification time) of
+  * every leaf file under it, and the session's set `spark.sql.parquet.*` /
+  * `spark.sql.legacy.parquet.*` values (the confs the footer conversion
+  * reads). A rewritten file or a flipped conf reads the footers again.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -28,50 +34,91 @@ object Tables {
     case _        => parquet(spark, s"$dir/$name.parquet")
   }
 
-  /** `spark.read.parquet(path)` with the inferred schema reused while the
-    * file set and the parquet confs are unchanged (the invariant above).
-    * A miss runs the plain inferring read and remembers its schema; a path
-    * that cannot be listed (absent, a glob) is read plainly and not
-    * remembered, so Spark reports it exactly as before.
+  /** `spark.read.parquet(path)` with its schema read on the driver: no
+    * Spark job. A miss reads the schema from parquet footers
+    * ([[footerSchema]]), reads `spark.read.schema(..).parquet(path)` with
+    * it and remembers the result's schema (partition columns included)
+    * while the file set and the parquet confs are unchanged (the invariant
+    * above). A path that cannot be listed (absent, a glob) or holds no file
+    * to read a schema from is read plainly and not remembered, so Spark
+    * reports it exactly as before.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    fileKey(spark, path) match {
+    leafFiles(spark, path) match {
       case None => spark.read.parquet(path)
-      case Some((qualified, files)) =>
-        val valid = (files, setConfs(spark, "spark.sql.parquet.", "spark.sql.legacy.parquet."))
-        schemas.get(qualified) match {
+      case Some((root, leaves)) =>
+        val valid = (fingerprint(leaves), setConfs(spark, "spark.sql.parquet.", "spark.sql.legacy.parquet."))
+        schemas.get(root.toString) match {
           case (`valid`, schema) => spark.read.schema(schema).parquet(path)
-          case _ =>
-            val df = spark.read.parquet(path)
-            schemas.put(qualified, (valid, df.schema))
-            df
+          case _ => footerSchema(spark, root, leaves) match {
+            case None => spark.read.parquet(path)
+            case Some(footer) =>
+              val df = spark.read.schema(footer).parquet(path)
+              schemas.put(root.toString, (valid, df.schema))
+              df
+          }
         }
     }
 
-  /** Qualified path -> (validity key, inferred schema). JVM-wide: the key
-    * carries everything the schema depends on, so sessions share safely.
+  /** Qualified path -> (validity key, schema). JVM-wide: the key carries
+    * everything the schema depends on, so sessions share safely.
     */
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, (Any, StructType)]()
 
-  /** The qualified path and the (path, length, modification time) of every
-    * leaf file under it, or None when the path cannot be listed.
+  private val summaryFiles = Set("_common_metadata", "_metadata")
+
+  /** The schema Spark's parquet inference gives the table at `root`, read
+    * from footers in this thread. The files are the ones
+    * `ParquetUtils.inferSchema` touches: the leaf files the file index
+    * hands it ([[inferable]]) in path order; with
+    * `spark.sql.parquet.mergeSchema` off, `_common_metadata`, else
+    * `_metadata`, else the first data file; with it on, every data file
+    * (none under `spark.sql.parquet.respectSummaryFiles`) plus the summary
+    * files.
     */
-  private def fileKey(spark: SparkSession,
-      path: String): Option[(String, Seq[(String, Long, Long)])] = {
+  private def footerSchema(spark: SparkSession, root: Path,
+      leaves: Seq[FileStatus]): Option[StructType] = {
+    val visible = leaves.filter(f => inferable(root, f.getPath)).sortBy(_.getPath.toString)
+    def named(name: String) = visible.filter(_.getPath.getName == name)
+    val data = visible.filterNot(f => summaryFiles(f.getPath.getName))
+    val conf = spark.sessionState.conf
+    val touch =
+      if (conf.isParquetSchemaMergingEnabled)
+        (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++
+          named("_metadata") ++ named("_common_metadata")
+      else (named("_common_metadata") ++ named("_metadata") ++ data).take(1)
+    ParquetFooterBridge.schema(spark, touch)
+  }
+
+  /** Whether the file index of `root` offers `file` to schema inference:
+    * the root file itself unless its name is hidden; below a root
+    * directory, a file with no hidden name on any level, directly under
+    * the root or under `k=v` partition directories only.
+    */
+  private def inferable(root: Path, file: Path): Boolean =
+    !ParquetFooterBridge.hiddenName(file.getName) && (file == root ||
+      Iterator.iterate(file.getParent)(_.getParent).takeWhile(p => p != null && p != root)
+        .forall(p => p.getName.contains("=") && !ParquetFooterBridge.hiddenName(p.getName)))
+
+  /** The qualified path and every leaf file under it, or None when the path
+    * cannot be listed.
+    */
+  private def leafFiles(spark: SparkSession, path: String): Option[(Path, Seq[FileStatus])] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val qualified = fs.makeQualified(p)
       val it = fs.listFiles(qualified, true)
-      val files = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some((qualified.toString, files.result().sorted))
+      val files = Seq.newBuilder[FileStatus]
+      while (it.hasNext) files += it.next()
+      Some((qualified, files.result()))
     } catch { case _: java.io.IOException => None }
   }
+
+  /** The (path, length, modification time) of every leaf file. */
+  private def fingerprint(leaves: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    leaves.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
 
   /** The session's explicitly set values of the confs under `prefixes`. */
   private def setConfs(spark: SparkSession, prefixes: String*): Seq[(String, String)] =
@@ -81,14 +128,14 @@ object Tables {
 
   /** Read the events parquet WITHOUT mutating session conf unless the file
     * actually ships the legacy TIMESTAMP(NANOS) encoding. Spark 4 rejects a
-    * NANOS footer at schema-inference time unless
+    * NANOS footer when converting its schema unless
     * `spark.sql.legacy.parquet.nanosAsLong` is set, so: try the plain read
     * first (the common, current-generation path — zero conf mutation), and
     * only on the NANOS rejection set the flag and retry. The flag then stays
     * on for the session — it only affects NANOS columns, and once one legacy
     * file is present every events read in that suite needs it anyway. The
-    * flag is part of [[parquet]]'s key, so the retry infers afresh and
-    * later reads under the flag reuse that schema.
+    * flag is part of [[parquet]]'s key, so the retry reads the footer
+    * afresh and later reads under the flag reuse that schema.
     */
   private def readEvents(spark: SparkSession, path: String): DataFrame =
     try parquet(spark, path)
@@ -168,10 +215,11 @@ object Tables {
 
   private def scanSplits(spark: SparkSession, dir: String, name: String,
       df: DataFrame): Int =
-    fileKey(spark, s"$dir/$name.parquet") match {
+    leafFiles(spark, s"$dir/$name.parquet") match {
       case None => df.rdd.getNumPartitions
-      case Some((qualified, files)) =>
-        val valid = (files,
+      case Some((root, leaves)) =>
+        val qualified = root.toString
+        val valid = (fingerprint(leaves),
           setConfs(spark, "spark.sql.files.", "spark.sql.leafNodeDefaultParallelism"),
           spark.sparkContext.defaultParallelism)
         splits.get(qualified) match {
@@ -192,7 +240,7 @@ object Tables {
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     // readEvents sets the legacy-nanos flag only if this file needs it; the
-    // inferred schema below then matches what the stream source will read.
+    // schema read below then matches what the stream source will read.
     val physical = readEvents(spark, path).schema
     normalizeEvents(fileStream(spark, path, physical))
   }

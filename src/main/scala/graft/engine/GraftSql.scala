@@ -27,8 +27,8 @@ object GraftSql {
       val declared = Option(cols).map(_.trim).filter(_.nonEmpty).map(parseSchema)
       val reader = declared.fold(spark.read)(s => spark.read.schema(s))
       val df = (fmt.toUpperCase, declared) match {
-        // no column list: the table's schema is inferred once per unchanged
-        // file set (graft.Tables.parquet), not by a Spark job per statement
+        // no column list: the schema comes from the parquet footer, read on
+        // the driver once per unchanged file set (graft.Tables.parquet)
         case ("PARQUET", None) => graft.Tables.parquet(spark, location)
         case ("PARQUET", _)    => reader.parquet(location)
         case ("CSV", _)        => reader.option("header", "true").csv(location)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Small-file compaction — the table-maintenance pass every long-lived
   * 100 TB dataset needs: streaming ingestion and partitioned writes leave
@@ -85,7 +86,7 @@ object Compact {
   def rewrite(spark: SparkSession, inDir: String, outDir: String,
       targetFileBytes: Long, partitionCols: Seq[String] = Nil): DataFrame = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val df = spark.read.parquet(inDir)
+    val df = Tables.parquet(spark, inDir)
     if (partitionCols.isEmpty) {
       val n = targetPartitions(spark, inDir, targetFileBytes)
       df.repartition(n).write.mode("overwrite").parquet(outDir)
@@ -109,7 +110,7 @@ object Compact {
         .select(dataCols.toSeq: _*)
         .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(outDir)
     }
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
   }
 
   /** Same pass, but range-partitioned and sorted by `sortCols` so the
@@ -119,10 +120,10 @@ object Compact {
       targetFileBytes: Long, sortCols: Seq[String]): DataFrame = {
     val n = targetPartitions(spark, inDir, targetFileBytes)
     val cols = sortCols.map(org.apache.spark.sql.functions.col)
-    spark.read.parquet(inDir)
+    Tables.parquet(spark, inDir)
       .repartitionByRange(n, cols: _*)
       .sortWithinPartitions(cols: _*)
       .write.mode("overwrite").parquet(outDir)
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
   }
 }

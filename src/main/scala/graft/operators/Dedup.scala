@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions._
 
 /** Deduplication operators for large-scale document corpora — north-star
@@ -1028,13 +1029,13 @@ object Dedup {
       threshold: Double = 0.7, k: Int = 126, bands: Int = 21): Unit = {
     val spark = incr.sparkSession
     val newPairs = minHashIncrementalFromBands(incr, oldDocs, idCol,
-        hashedCol, spark.read.parquet(artDir + "/bands"), threshold, k, bands)
+        hashedCol, Tables.parquet(spark, artDir + "/bands"), threshold, k, bands)
       .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
       .unionAll(minHashPairsHashed(incr, idCol, hashedCol, threshold, k, bands)
         .select(col("id_a"), col("id_b")))
-    updateClusters(spark.read.parquet(artDir + "/clusters"), newPairs)
+    updateClusters(Tables.parquet(spark, artDir + "/clusters"), newPairs)
       .write.mode("overwrite").parquet(outDir + "/clusters")
-    spark.read.parquet(artDir + "/bands")
+    Tables.parquet(spark, artDir + "/bands")
       .unionAll(bandedSignatures(incr, idCol, hashedCol, k, bands))
       .write.mode("overwrite").parquet(outDir + "/bands")
   }

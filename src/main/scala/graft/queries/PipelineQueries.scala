@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables.{t, tFan}
 import graft.operators._
 
@@ -183,7 +184,7 @@ object PipelineQueries {
       val docs = tFan(s, d, "documents")
       val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
       val gated = docs.filter(col("source") =!= "src0").filter(gate)
-      val losers = s.read.parquet(materializedClusterDir(s, d))
+      val losers = Tables.parquet(s, materializedClusterDir(s, d))
         .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
       val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
       Decontaminate.decontaminate(deduped,
@@ -210,8 +211,7 @@ object PipelineQueries {
       val docs = tFan(s, d, "documents")
       val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
       val gated = docs.filter(col("source") =!= "src0").filter(gate)
-      val losers = s.read
-        .parquet(materializedCompactClusterDir(s, d) + "/clusters")
+      val losers = Tables.parquet(s, materializedCompactClusterDir(s, d) + "/clusters")
         .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
       val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
       Decontaminate.decontaminate(deduped,
@@ -252,13 +252,13 @@ object PipelineQueries {
       .write.mode("overwrite").parquet(dir + "/benchgrams")
     val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
     val gated = base.filter(col("source") =!= "src0").filter(gate)
-    val losers = s.read.parquet(clusterDir)
+    val losers = Tables.parquet(s, clusterDir)
       .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
     val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
     val contaminated = deduped
       .select(col("doc_id"), explode(
         Decontaminate.ngramHashes(col("text"), 13)).as("g"))
-      .join(s.read.parquet(dir + "/benchgrams"), "g")
+      .join(Tables.parquet(s, dir + "/benchgrams"), "g")
       .select("doc_id").distinct()
     deduped.join(contaminated, Seq("doc_id"), "left_anti")
       .select("doc_id", "source")
@@ -277,18 +277,18 @@ object PipelineQueries {
       keptDir: String, benchGramsDir: String, losersNewDir: String,
       losersOldDir: String, incr: org.apache.spark.sql.DataFrame,
       outDir: String): Unit = {
-    def losersOf(cd: String) = s.read.parquet(cd)
+    def losersOf(cd: String) = Tables.parquet(s, cd)
       .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
     val newlyLosing = losersOf(losersNewDir)
       .join(losersOf(losersOldDir), Seq("doc_id"), "left_anti")
-    val keptOld = s.read.parquet(keptDir)
+    val keptOld = Tables.parquet(s, keptDir)
       .join(newlyLosing, Seq("doc_id"), "left_anti")
     val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
     val incrGated = incr.filter(col("source") =!= "src0").filter(gate)
     val contaminated = incrGated
       .select(col("doc_id"), explode(
         Decontaminate.ngramHashes(col("text"), 13)).as("g"))
-      .join(s.read.parquet(benchGramsDir), "g")
+      .join(Tables.parquet(s, benchGramsDir), "g")
       .select("doc_id").distinct()
     val newKept = incrGated.select("doc_id", "source")
       .join(contaminated, Seq("doc_id"), "left_anti")
@@ -594,7 +594,7 @@ object PipelineQueries {
         expr("transform(centroid, x -> cast(x as float))").as("centroid"))
     trained.write.mode("overwrite").parquet(dir + "/centroids")
     val cents = Similarity.centroidRows(
-      s.read.parquet(dir + "/centroids"), "cell", "centroid")
+      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
     Similarity.ivfAssignCells(corpus, "vec_id", "embedding", cents)
       .write.mode("overwrite").partitionBy("cell").parquet(dir + "/postings")
   }
@@ -621,8 +621,8 @@ object PipelineQueries {
     */
   private def hottestCellRatioMicro(s: org.apache.spark.sql.SparkSession,
       idxDir: String, sub: String): Long = {
-    val k = s.read.parquet(idxDir + "/centroids").count()
-    val counts = s.read.parquet(s"$idxDir/$sub")
+    val k = Tables.parquet(s, idxDir + "/centroids").count()
+    val counts = Tables.parquet(s, s"$idxDir/$sub")
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .collect().map(_.getLong(1))
     val total = counts.sum
@@ -687,9 +687,9 @@ object PipelineQueries {
     val emb = t(s, d, "embeddings")
     val queries = probeSet(emb)
     val approx = Similarity.ivfKnnFromIndex(
-        s.read.parquet(idxDir + "/postings"), queries,
+        Tables.parquet(s, idxDir + "/postings"), queries,
         "vec_id", "embedding", k = 10,
-        s.read.parquet(idxDir + "/centroids"), "cell", "centroid",
+        Tables.parquet(s, idxDir + "/centroids"), "cell", "centroid",
         nProbe = 4)
       .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
     val agg = Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
@@ -710,7 +710,7 @@ object PipelineQueries {
     val emb = t(s, d, "embeddings")
     val queries = probeSet(emb)
     val (cents, books) = readIvfPqModel(s, idxDir)
-    val approx = Pq.ivfPqTopK(s.read.parquet(idxDir + "/codes"), queries,
+    val approx = Pq.ivfPqTopK(Tables.parquet(s, idxDir + "/codes"), queries,
         "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
       .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
     val agg = Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
@@ -837,9 +837,9 @@ object PipelineQueries {
         gatedTag(s, "ivfreg", annGates: _*), Seq(
       "markers/v0.done" -> { dir =>
         val incr = materializedIvfIncrIndexDir(s, d)
-        s.read.parquet(incr + "/centroids").coalesce(1)
+        Tables.parquet(s, incr + "/centroids").coalesce(1)
           .write.mode("overwrite").parquet(dir + "/v0/centroids")
-        s.read.parquet(incr + "/postings")
+        Tables.parquet(s, incr + "/postings")
           .select(col("c_id"), col("c_vec"), col("cell"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(dir + "/v0/postings")
@@ -882,7 +882,7 @@ object PipelineQueries {
   private def materializedIvfNightsDir(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
     def cents(dir: String) = Similarity.centroidRows(
-      s.read.parquet(dir + "/centroids"), "cell", "centroid")
+      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
     def appendNight(night: Int)(dir: String): Unit = {
       val g = ArtifactCache.nextGen(s, dir, "postings")
       Similarity.ivfAssignCells(
@@ -920,17 +920,17 @@ object PipelineQueries {
   private def materializedIvfCycleDir(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
     def cents(dir: String) = Similarity.centroidRows(
-      s.read.parquet(dir + "/centroids"), "cell", "centroid")
+      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
     ArtifactCache.staged(s, d, "embeddings", "ivfcycle", Seq(
       "centroids/_SUCCESS" -> { dir =>
-        s.read.parquet(materializedIvfNightsDir(s, d) + "/centroids")
+        Tables.parquet(s, materializedIvfNightsDir(s, d) + "/centroids")
           .coalesce(1).write.mode("overwrite").parquet(dir + "/centroids")
       },
       "postings/gen=0/_SUCCESS" -> { dir =>
         // COMPACT the night-1 state: ONE scan of generations <= 1 (the
         // gen partition column prunes night 2's files at the listing),
         // the gen dimension dropped, one partitionBy(cell) rewrite
-        s.read.parquet(materializedIvfNightsDir(s, d) + "/postings")
+        Tables.parquet(s, materializedIvfNightsDir(s, d) + "/postings")
           .filter(col("gen") <= 1)
           .select(col("c_id"), col("c_vec"), col("cell"))
           .write.mode("overwrite").partitionBy("cell")
@@ -963,7 +963,7 @@ object PipelineQueries {
   private def materializedIvfIncrIndexDir(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
     def cents(dir: String) = Similarity.centroidRows(
-      s.read.parquet(dir + "/centroids"), "cell", "centroid")
+      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
     ArtifactCache.staged(s, d, "embeddings", "ivfincr", Seq(
       "centroids/_SUCCESS" -> { dir =>
         val base = t(s, d, "embeddings").filter(col("vec_id") % 4 =!= 3)
@@ -1006,9 +1006,9 @@ object PipelineQueries {
     ArtifactCache.dir(s, d, "embeddings", "ivfcompact",
         Seq("centroids/_SUCCESS", "postings/_SUCCESS")) { dir =>
       val incr = materializedIvfIncrIndexDir(s, d)
-      s.read.parquet(incr + "/centroids").coalesce(1)
+      Tables.parquet(s, incr + "/centroids").coalesce(1)
         .write.mode("overwrite").parquet(dir + "/centroids")
-      s.read.parquet(incr + "/postings")
+      Tables.parquet(s, incr + "/postings")
         .select(col("c_id"), col("c_vec"), col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(dir + "/postings")
     }
@@ -1095,7 +1095,7 @@ object PipelineQueries {
     def baseOf(df: org.apache.spark.sql.DataFrame) =
       df.filter(col("vec_id") % 4 =!= 3)
     def storedCents(dir: String): Array[Array[Double]] =
-      s.read.parquet(dir + "/centroids").collect()
+      Tables.parquet(s, dir + "/centroids").collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
         .sortBy(_._1).map(_._2)
     ArtifactCache.staged(s, d, "embeddings", "ivfpqincr", Seq(
@@ -1148,11 +1148,11 @@ object PipelineQueries {
     ArtifactCache.dir(s, d, "embeddings", "ivfpqcompact",
         Seq("centroids/_SUCCESS", "books/_SUCCESS", "codes/_SUCCESS")) { dir =>
       val incr = materializedIvfPqIncrIndexDir(s, d)
-      s.read.parquet(incr + "/centroids").coalesce(1)
+      Tables.parquet(s, incr + "/centroids").coalesce(1)
         .write.mode("overwrite").parquet(dir + "/centroids")
-      s.read.parquet(incr + "/books").coalesce(1)
+      Tables.parquet(s, incr + "/books").coalesce(1)
         .write.mode("overwrite").parquet(dir + "/books")
-      s.read.parquet(incr + "/codes")
+      Tables.parquet(s, incr + "/codes")
         .select(col("vec_id"), col("pq_code"), col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(dir + "/codes")
     }
@@ -1184,10 +1184,10 @@ object PipelineQueries {
       "markers/v0.done" -> { dir =>
         val incr = materializedIvfPqIncrIndexDir(s, d)
         Seq("centroids", "books").foreach { t0 =>
-          s.read.parquet(s"$incr/$t0").coalesce(1)
+          Tables.parquet(s, s"$incr/$t0").coalesce(1)
             .write.mode("overwrite").parquet(s"$dir/v0/$t0")
         }
-        s.read.parquet(incr + "/codes")
+        Tables.parquet(s, incr + "/codes")
           .select(col("vec_id"), col("pq_code"), col("cell"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(dir + "/v0/codes")
@@ -1213,10 +1213,10 @@ object PipelineQueries {
 
   private def readIvfPqModel(s: org.apache.spark.sql.SparkSession,
       idx: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cents = s.read.parquet(idx + "/centroids").collect()
+    val cents = Tables.parquet(s, idx + "/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
-    val bookRows = s.read.parquet(idx + "/books").collect()
+    val bookRows = Tables.parquet(s, idx + "/books").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
       .toMap
     val m = bookRows.keys.map(_._1).max + 1
@@ -1366,7 +1366,7 @@ object PipelineQueries {
     * model-table contract. */
   private def loadMerges(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String)] =
-    s.read.parquet(dir).orderBy("ord").collect()
+    Tables.parquet(s, dir).orderBy("ord").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
 
   private def storeMerges(s: org.apache.spark.sql.SparkSession,
@@ -1472,7 +1472,7 @@ object PipelineQueries {
         gatedTag(s, "bpereg",
           "spark.graft.bpe.refreshCptMicro" -> Long.MaxValue.toString), Seq(
       "markers/v0.done" -> { dir =>
-        s.read.parquet(materializedBpeBaseDir(s, d)).coalesce(1)
+        Tables.parquet(s, materializedBpeBaseDir(s, d)).coalesce(1)
           .write.mode("overwrite").parquet(dir + "/v0")
         ArtifactCache.publishCurrent(s, dir, "v0")
         touch(dir, "markers/v0.done")
@@ -1514,7 +1514,7 @@ object PipelineQueries {
         gatedTag(s, "lrreg",
           "spark.graft.lr.refreshPsiMicro" -> "-1"), Seq(
       "markers/v0.done" -> { dir =>
-        s.read.parquet(materializedLrBaseModelDir(s, d)).coalesce(1)
+        Tables.parquet(s, materializedLrBaseModelDir(s, d)).coalesce(1)
           .write.mode("overwrite").parquet(dir + "/v0")
         ArtifactCache.publishCurrent(s, dir, "v0")
         touch(dir, "markers/v0.done")
@@ -1522,7 +1522,7 @@ object PipelineQueries {
       "markers/refresh.done" -> { dir =>
         val psi = panelPsiBySource(s, d, "quality").localCheckpoint(true)
         if (panelTrips(psi, s, "spark.graft.lr.refreshPsiMicro")) {
-          s.read.parquet(materializedLrModelDir(s, d)).coalesce(1)
+          Tables.parquet(s, materializedLrModelDir(s, d)).coalesce(1)
             .write.mode("overwrite").parquet(dir + "/v1")
           ArtifactCache.publishCurrent(s, dir, "v1")
         }
@@ -1857,15 +1857,13 @@ object PipelineQueries {
     * (q_bpe_train, q_bpe_train_hist), shaped like Bpe.trainMergesHist: the
     * histogram is persisted so every round reads it instead of re-deriving
     * it from the corpus (vocab-bounded, spills to disk past memory), and
-    * it is released in a `finally` once the 48 result rows are collected —
-    * no cached block outlives the builder.
+    * it is released once the 48 result rows are collected — no cached
+    * block outlives the builder.
     */
   private def bpeTrainRounds(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val hist = Bpe.wordHistogram(t(s, d, "documents"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rounds = (1 to 3).map { r =>
+      d: String): org.apache.spark.sql.DataFrame =
+    Persisted.collect(Bpe.wordHistogram(t(s, d, "documents"), col("text"))) { hist =>
+      (1 to 3).map { r =>
         Bpe.pairCountsHist(hist, BpeMerges.take(16 * (r - 1)))
           .orderBy(col("c").desc, col("x").asc, col("y").asc)
           .limit(16)
@@ -1873,9 +1871,7 @@ object PipelineQueries {
             col("c").cast("long").as("c"))
       }.reduce(_ unionAll _)
         .orderBy(col("round"), col("c").desc, col("x"), col("y"))
-      s.createDataFrame(java.util.Arrays.asList(rounds.collect(): _*), rounds.schema)
-    } finally hist.unpersist()
-  }
+    }
 
   /** DuckDB BM25 oracle CTE (k1=1.2, b=0.75, scores in integer micros),
     * mirroring Bm25.scoreMicros literal-for-literal — same association
@@ -2174,7 +2170,7 @@ object PipelineQueries {
               |ORDER BY d.doc_id""".stripMargin),
       (s, d) => {
         val docs = t(s, d, "documents")
-        val clusters = s.read.parquet(materializedClusterDir(s, d))
+        val clusters = Tables.parquet(s, materializedClusterDir(s, d))
         docs.select(col("doc_id"), col("source"))
           .join(clusters.filter(col("v") =!= col("cluster_rep"))
               .select(col("v").as("doc_id")),
@@ -2203,11 +2199,11 @@ object PipelineQueries {
         val base = docs.filter(col("doc_id") % 4 =!= 3)
         val incr = docs.filter(col("doc_id") % 4 === 3)
         val art = materializedBaseClusterDir(s, d)
-        val existing = s.read.parquet(art + "/clusters")
+        val existing = Tables.parquet(s, art + "/clusters")
         // candidates from the STORED band table — the corpus is never
         // re-hashed in-query; verification reads candidate olds only
         val newPairs = Dedup.minHashIncrementalFromBands(incr, base,
-            "doc_id", sh, s.read.parquet(art + "/bands"),
+            "doc_id", sh, Tables.parquet(s, art + "/bands"),
             threshold = 0.7, k = 126, bands = 21)
           .select(col("new_id").as("id_a"), col("old_id").as("id_b"))
           .unionAll(Dedup.minHashPairsHashed(incr, "doc_id", sh,
@@ -2230,7 +2226,7 @@ object PipelineQueries {
     Q("q_dedup_clusters_compact", FullClosureOracleSql,
       (s, d) => {
         val dir = materializedCompactClusterDir(s, d)
-        s.read.parquet(dir + "/clusters")
+        Tables.parquet(s, dir + "/clusters")
           .select(col("v").as("doc_id"), col("cluster_rep"))
           .orderBy("doc_id")
       }),
@@ -2246,7 +2242,7 @@ object PipelineQueries {
     Q("q_dedup_clusters_cycle", FullClosureOracleSql,
       (s, d) => {
         val dir = materializedClusterNight2Dir(s, d)
-        s.read.parquet(dir + "/clusters")
+        Tables.parquet(s, dir + "/clusters")
           .select(col("v").as("doc_id"), col("cluster_rep"))
           .orderBy("doc_id")
       }),
@@ -2769,10 +2765,10 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfIndexDir(s, d)
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -2794,10 +2790,10 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfIncrIndexDir(s, d)
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -2816,10 +2812,10 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfCompactIndexDir(s, d)
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -2838,10 +2834,10 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfNightsDir(s, d)
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -2858,10 +2854,10 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfCycleDir(s, d)
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -2887,10 +2883,10 @@ object PipelineQueries {
               |FROM cnt, tot, kk ORDER BY cell""".stripMargin),
       (s, d) => {
         val idx = materializedIvfIncrIndexDir(s, d)
-        val k = s.read.parquet(idx + "/centroids").count()
+        val k = Tables.parquet(s, idx + "/centroids").count()
         // checkpoint the <=k-row histogram: its two consumers (rows +
         // the total) must not re-pay the postings scan (review r18)
-        val cnt = s.read.parquet(idx + "/postings")
+        val cnt = Tables.parquet(s, idx + "/postings")
           .groupBy(col("cell").cast("long").as("cell"))
           .agg(count(lit(1)).as("n_vecs"))
           .localCheckpoint(true)
@@ -2936,9 +2932,9 @@ object PipelineQueries {
         val queries = probeSet(emb)
         val idx = materializedIvfIncrIndexDir(s, d)
         val approx = Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"), queries,
+            Tables.parquet(s, idx + "/postings"), queries,
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
         Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
@@ -2968,10 +2964,10 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfRefreshDir(s, d)
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -2996,10 +2992,10 @@ object PipelineQueries {
           throw new IllegalStateException(s"registry $reg has no current pointer"))
         val idx = s"$reg/$cur"
         Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select("q_id", "c_id", "rn")
           .orderBy("q_id", "rn")
@@ -3033,7 +3029,7 @@ object PipelineQueries {
           .map(_.getPath.getName).sorted
         versions.map { v =>
           (v, if (v == cur) 1L else 0L,
-            s.read.parquet(s"$reg/$v/postings").count())
+            Tables.parquet(s, s"$reg/$v/postings").count())
         }.toDF("version", "is_current", "n_vecs")
           .orderBy("version")
       }),
@@ -3079,7 +3075,7 @@ object PipelineQueries {
               case _ => false
             })).toLong
           (family, cur, nVersions, nGens,
-            s.read.parquet(payload(s"$reg/$cur")).count())
+            Tables.parquet(s, payload(s"$reg/$cur")).count())
         }
         Seq(
           audit("bpe", materializedBpeRegistryDir(s, d), 0L, identity),
@@ -3127,9 +3123,9 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 5)
         val idx = materializedIvfIndexDir(s, d)
         val approx = Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"), queries,
+            Tables.parquet(s, idx + "/postings"), queries,
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
         Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
@@ -3182,8 +3178,8 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val queries = emb.filter(col("vec_id") < 5)
         val idx = materializedIvfIndexDir(s, d)
-        val postings = s.read.parquet(idx + "/postings")
-        val centroids = s.read.parquet(idx + "/centroids")
+        val postings = Tables.parquet(s, idx + "/postings")
+        val centroids = Tables.parquet(s, idx + "/centroids")
         val exact = Similarity.bruteForceKnn(emb, queries,
           "vec_id", "embedding", 10).select("q_id", "c_id")
         (1 to 4).map { p =>
@@ -3604,7 +3600,7 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfPqIndexDir(s, d)
         val (cents, books) = readIvfPqModel(s, idx)
-        Pq.ivfPqTopK(s.read.parquet(idx + "/codes"),
+        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), col("rn"))
@@ -3627,7 +3623,7 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfPqIncrIndexDir(s, d)
         val (cents, books) = readIvfPqModel(s, idx)
-        Pq.ivfPqTopK(s.read.parquet(idx + "/codes"),
+        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), col("rn"))
@@ -3646,7 +3642,7 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfPqCompactIndexDir(s, d)
         val (cents, books) = readIvfPqModel(s, idx)
-        Pq.ivfPqTopK(s.read.parquet(idx + "/codes"),
+        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), col("rn"))
@@ -3666,7 +3662,7 @@ object PipelineQueries {
         val emb = t(s, d, "embeddings")
         val idx = materializedIvfPqRefreshDir(s, d)
         val (cents, books) = readIvfPqModel(s, idx)
-        Pq.ivfPqTopK(s.read.parquet(idx + "/codes"),
+        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), col("rn"))
@@ -3689,7 +3685,7 @@ object PipelineQueries {
         val dir = materializedIvfPqRegistryDir(s, d)
         val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
         val (cents, books) = readIvfPqModel(s, s"$dir/$cur")
-        Pq.ivfPqTopK(s.read.parquet(s"$dir/$cur/codes"),
+        Pq.ivfPqTopK(Tables.parquet(s, s"$dir/$cur/codes"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), col("rn"))
@@ -3726,7 +3722,7 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 5)
         val idx = materializedIvfPqIndexDir(s, d)
         val (cents, books) = readIvfPqModel(s, idx)
-        val approx = Pq.ivfPqTopK(s.read.parquet(idx + "/codes"), queries,
+        val approx = Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"), queries,
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
         Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
@@ -3782,7 +3778,7 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 5)
         val idx = materializedIvfPqIndexDir(s, d)
         val (cents, books) = readIvfPqModel(s, idx)
-        val codes = s.read.parquet(idx + "/codes")
+        val codes = Tables.parquet(s, idx + "/codes")
         val exact = Similarity.bruteForceKnn(emb, queries,
           "vec_id", "embedding", 10).select("q_id", "c_id")
         (1 to 3).map { p =>
@@ -4057,10 +4053,11 @@ object PipelineQueries {
     // Corpus-quantile quality filter: keep docs at/above the 25th-percentile
     // quality score. The threshold is ONE tree-aggregated scalar broadcast
     // into a map-side filter — no global sort, no single-partition window —
-    // so the shape survives a 1000-executor scale-up unchanged. The scored
-    // projection (3 narrow columns) is persisted across its two consumers
-    // (threshold aggregate + filter) so the regex-heavy scoring pass runs
-    // once; at 100 TB this intermediate is ~1% of input and spills to disk.
+    // so the threshold survives a 1000-executor scale-up unchanged. The
+    // scored projection (3 narrow columns) is persisted across its two
+    // consumers (threshold aggregate + filter) so the regex-heavy scoring
+    // pass runs once, and released once the kept rows are collected: the
+    // driver holds 16 bytes per kept document (~1.2 MB at sf0.1).
     Q("q_quality_filter", {
       val q = TextAnalysis.qualityScoreSql("text")
       Some(s"""WITH scored AS (
@@ -4076,17 +4073,17 @@ object PipelineQueries {
         // bind the tokenization once — n_tokens + qualityScoreRaw
         // reference it four times (no codegen CSE across HOFs)
         val toks = col("__toks")
-        val scored = t(s, d, "documents")
+        Persisted.collect(t(s, d, "documents")
           .withColumn("__toks", TextAnalysis.tokens(col("text")))
           .select(col("doc_id"),
             size(toks).cast("long").as("n_tokens"),
-            TextAnalysis.qualityScoreRaw(col("text"), toks).as("q"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val thr = scored.agg(expr("percentile(q, 0.25)").as("t"))
-        scored.crossJoin(broadcast(thr))
-          .filter(col("q") >= col("t"))
-          .select("doc_id", "n_tokens")
-          .orderBy("doc_id")
+            TextAnalysis.qualityScoreRaw(col("text"), toks).as("q"))) { scored =>
+          val thr = scored.agg(expr("percentile(q, 0.25)").as("t"))
+          scored.crossJoin(broadcast(thr))
+            .filter(col("q") >= col("t"))
+            .select("doc_id", "n_tokens")
+            .orderBy("doc_id")
+        }
       }),
 
     // Hashed bag-of-words linear scoring — the fastText-classifier shape
@@ -4234,7 +4231,7 @@ object PipelineQueries {
     Q("q_linear_apply_from_model", LrTrainApplyOracleSql,
       (s, d) => {
         val docs = t(s, d, "documents")
-        val weights = s.read.parquet(materializedLrModelDir(s, d))
+        val weights = Tables.parquet(s, materializedLrModelDir(s, d))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
           .sortBy(_._1).map(_._2).toSeq
         TextAnalysis.linearMargins(docs, "doc_id", "text", weights)
@@ -4281,7 +4278,7 @@ object PipelineQueries {
           if (panelTrips(psi, s, "spark.graft.lr.refreshPsiMicro"))
             materializedLrModelDir(s, d) // retrain on the current corpus
           else materializedLrBaseModelDir(s, d) // frozen keeps serving
-        val weights = s.read.parquet(modelDir)
+        val weights = Tables.parquet(s, modelDir)
           .collect().map(r => (r.getLong(0), r.getLong(1)))
           .sortBy(_._1).map(_._2).toSeq
         val comp = TextAnalysis.linearMargins(docs, "doc_id", "text",
@@ -4309,7 +4306,7 @@ object PipelineQueries {
       (s, d) => {
         val dir = materializedLrRegistryDir(s, d)
         val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
-        val weights = s.read.parquet(s"$dir/$cur")
+        val weights = Tables.parquet(s, s"$dir/$cur")
           .collect().map(r => (r.getLong(0), r.getLong(1)))
           .sortBy(_._1).map(_._2).toSeq
         TextAnalysis.linearMargins(t(s, d, "documents"), "doc_id", "text",
@@ -4493,7 +4490,7 @@ object PipelineQueries {
       Some(s"""WITH RECURSIVE ${manifestKeepCtes()}
               |$manifestKeepSelect""".stripMargin),
       (s, d) =>
-        s.read.parquet(materializedManifestDir(s, d))
+        Tables.parquet(s, materializedManifestDir(s, d))
           .select("doc_id", "source")
           .orderBy("doc_id")),
 
@@ -4508,7 +4505,7 @@ object PipelineQueries {
       Some(s"""WITH RECURSIVE ${manifestKeepCtes()}
               |$manifestKeepSelect""".stripMargin),
       (s, d) =>
-        s.read.parquet(materializedManifestIncrDir(s, d))
+        Tables.parquet(s, materializedManifestIncrDir(s, d))
           .select("doc_id", "source")
           .orderBy("doc_id")),
 
@@ -4526,7 +4523,7 @@ object PipelineQueries {
       Some(s"""WITH RECURSIVE ${manifestKeepCtes(" AND doc_id % 4 <> 3")}
               |$manifestKeepSelect""".stripMargin),
       (s, d) =>
-        s.read.parquet(materializedDeltaManifestDir(s, d))
+        Tables.parquet(s, materializedDeltaManifestDir(s, d))
           .select("doc_id", "source")
           .orderBy("doc_id")),
 
@@ -4543,7 +4540,7 @@ object PipelineQueries {
       Some(s"""WITH RECURSIVE ${manifestKeepCtes(" AND doc_id % 4 < 2")}
               |$manifestKeepSelect""".stripMargin),
       (s, d) =>
-        s.read.parquet(materializedDelta2ManifestDir(s, d))
+        Tables.parquet(s, materializedDelta2ManifestDir(s, d))
           .select("doc_id", "source")
           .orderBy("doc_id")),
 
@@ -4583,22 +4580,21 @@ object PipelineQueries {
               |  AND d.doc_id NOT IN (SELECT doc_id FROM bad)
               |ORDER BY artifact, k""".stripMargin),
       (s, d) => {
-        val clusters = s.read
-          .parquet(materializedCompactClusterDir(s, d) + "/clusters")
+        val clusters = Tables.parquet(s, materializedCompactClusterDir(s, d) + "/clusters")
           .select(lit("clusters").as("artifact"),
             col("v").cast("long").as("k"),
             col("cluster_rep").cast("string").as("v"))
         val idx = materializedIvfIncrIndexDir(s, d)
         val ann = Similarity.ivfKnnFromIndex(
-            s.read.parquet(idx + "/postings"),
+            Tables.parquet(s, idx + "/postings"),
             t(s, d, "embeddings").filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10,
-            s.read.parquet(idx + "/centroids"), "cell", "centroid",
+            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
             nProbe = 4)
           .select(lit("ann").as("artifact"),
             (col("q_id") * 100 + col("rn")).cast("long").as("k"),
             col("c_id").cast("string").as("v"))
-        val manifest = s.read.parquet(materializedDeltaManifestDir(s, d))
+        val manifest = Tables.parquet(s, materializedDeltaManifestDir(s, d))
           .select(lit("manifest").as("artifact"),
             col("doc_id").cast("long").as("k"),
             col("source").as("v"))
@@ -4631,9 +4627,9 @@ object PipelineQueries {
               |FROM dd WINDOW w AS (PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
               |ORDER BY doc_id""".stripMargin),
       (s, d) => {
-        val manifest = s.read.parquet(materializedManifestDir(s, d))
+        val manifest = Tables.parquet(s, materializedManifestDir(s, d))
           .select("doc_id")
-        val merges = s.read.parquet(materializedBpeMergesDir(s, d))
+        val merges = Tables.parquet(s, materializedBpeMergesDir(s, d))
           .orderBy("ord").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
         val kept = tFan(s, d, "documents")
@@ -4799,7 +4795,7 @@ object PipelineQueries {
     Q("q_bpe_encode_from_table", BpeEncodeOracleSql,
       (s, d) => {
         val dir = materializedBpeMergesDir(s, d)
-        val merges = s.read.parquet(dir).orderBy("ord").collect()
+        val merges = Tables.parquet(s, dir).orderBy("ord").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
         val toks = Bpe.encode(col("text"), merges)
         t(s, d, "documents").filter(col("doc_id") < 300)
@@ -4833,7 +4829,7 @@ object PipelineQueries {
               |FROM tk GROUP BY source ORDER BY source""".stripMargin),
       (s, d) => {
         val dir = materializedBpeMergesDir(s, d)
-        val merges = s.read.parquet(dir).orderBy("ord").collect()
+        val merges = Tables.parquet(s, dir).orderBy("ord").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
         tFan(s, d, "documents")
           .select(col("source"),

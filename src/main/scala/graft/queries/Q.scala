@@ -28,6 +28,22 @@ private[queries] object Money {
     org.apache.spark.sql.functions.round(c * 100, 0).cast("long")
 }
 
+/** A frame cached for the span of one query build. `result` reads the
+  * persisted (MEMORY_AND_DISK) `frame` as often as it likes; its rows are
+  * collected while the cache is warm and returned as a local relation, and
+  * the cache is released before returning, on failure too. For a result
+  * the driver can hold (a few rows, or one narrow row per kept document).
+  */
+private[queries] object Persisted {
+  def collect(frame: DataFrame)(result: DataFrame => DataFrame): DataFrame = {
+    val cached = frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val df = result(cached)
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    } finally cached.unpersist()
+  }
+}
+
 /** Scratch directories for queries that exercise the write path: each
   * caller gets a per-JVM-run unique root (keyed by applicationId, so
   * concurrent runs on the same machine never race between one run's

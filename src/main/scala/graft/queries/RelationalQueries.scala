@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables.{t, views}
 
 /** Top-level so Catalyst-generated deserializers can instantiate them. */
@@ -640,7 +641,7 @@ object RelationalQueries {
           .partitionBy("lang")
           .option("maxRecordsPerFile", 200)
           .parquet(out)
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy("lang", "source")
           .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
           .orderBy("lang", "source")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables.{t, tFan}
 import graft.operators._
 
@@ -275,7 +276,7 @@ object ScaleQueries {
           .sortWithinPartitions("z")
           .drop("z")
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .filter(col("p_size") <= 10)
           .groupBy("p_size")
           .agg(count(lit(1)).as("n"),

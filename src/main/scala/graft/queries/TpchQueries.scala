@@ -419,22 +419,22 @@ object TpchQueries {
         // frames get fresh exprIds, which defeats ReuseExchange (verified:
         // two hashpartitioning(l_suppkey) exchanges in the executed plan),
         // so the grouped result — supplier-cardinality, tiny next to the
-        // fact — is persisted across its two consumers. Harness clears
-        // cache between queries.
-        val revenue = t(s, d, "lineitem")
+        // fact — is persisted across its two consumers and released once
+        // the top suppliers (a few rows) are collected.
+        Persisted.collect(t(s, d, "lineitem")
           .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
             col("l_shipdate") < lit("1996-04-01 00:00:00").cast("timestamp"))
           .groupBy(col("l_suppkey").as("supplier_no"))
           .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            .as("total_cents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val top = revenue.agg(max(col("total_cents")).as("m"))
-        revenue.crossJoin(broadcast(top))
-          .filter(col("total_cents") === col("m"))
-          .join(t(s, d, "supplier"),
-            col("supplier_no") === col("s_suppkey"))
-          .select("s_suppkey", "s_name", "total_cents")
-          .orderBy("s_suppkey")
+            .as("total_cents"))) { revenue =>
+          val top = revenue.agg(max(col("total_cents")).as("m"))
+          revenue.crossJoin(broadcast(top))
+            .filter(col("total_cents") === col("m"))
+            .join(t(s, d, "supplier"),
+              col("supplier_no") === col("s_suppkey"))
+            .select("s_suppkey", "s_name", "total_cents")
+            .orderBy("s_suppkey")
+        }
       }),
 
     // Q19: discounted revenue — disjunctive (OR-of-ANDs) brand/size/
@@ -641,21 +641,22 @@ object TpchQueries {
              |ORDER BY value_cents DESC, l_partkey""".stripMargin),
       (s, d) => {
         // same double-consumer shape as Q15: persist the part-cardinality
-        // grouped result so the fact join+aggregate runs once
-        val v = t(s, d, "lineitem")
+        // grouped result so the fact join+aggregate runs once; each kept
+        // part holds over 0.2% of the total, so at most 500 rows come back
+        Persisted.collect(t(s, d, "lineitem")
           .join(t(s, d, "supplier").select("s_suppkey", "s_nationkey"),
             col("l_suppkey") === col("s_suppkey"))
           .join(broadcast(t(s, d, "nation")).filter(col("n_name") === "NATION_3"),
             col("s_nationkey") === col("n_nationkey"))
           .groupBy("l_partkey")
-          .agg(sum(cents(col("l_extendedprice"))).as("value_cents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tot = v.agg(sum(col("value_cents")).as("t"))
-        v.crossJoin(broadcast(tot))
-          .filter(col("value_cents").cast("double") >
-            lit(0.002) * col("t").cast("double"))
-          .select("l_partkey", "value_cents")
-          .orderBy(col("value_cents").desc, col("l_partkey"))
+          .agg(sum(cents(col("l_extendedprice"))).as("value_cents"))) { v =>
+          val tot = v.agg(sum(col("value_cents")).as("t"))
+          v.crossJoin(broadcast(tot))
+            .filter(col("value_cents").cast("double") >
+              lit(0.002) * col("t").cast("double"))
+            .select("l_partkey", "value_cents")
+            .orderBy(col("value_cents").desc, col("l_partkey"))
+        }
       }),
 
     // Q16: parts/supplier relationship — anti-join a supplier blocklist

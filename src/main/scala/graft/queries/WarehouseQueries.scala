@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables.{t, tFan}
 import graft.operators._
 
@@ -198,7 +199,7 @@ object WarehouseQueries {
         val dim = t(s, d, "orders").select(col("o_orderpriority").as("pri"))
           .distinct()
           .filter(col("pri").isin("1-URGENT", "2-HIGH"))
-        s.read.parquet(base)
+        Tables.parquet(s, base)
           .join(dim, col("o_orderpriority") === col("pri"))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n"),
@@ -810,7 +811,7 @@ object WarehouseQueries {
         // slice 1 lands before the stream starts
         docs.filter(col("doc_id") % 2 === 0).coalesce(1)
           .write.mode("overwrite").parquet(land)
-        val schema = s.read.parquet(land).schema
+        val schema = Tables.parquet(s, land).schema
         // Null-tolerant accumulator: a NULL-text document's digest is
         // restored to NULL on emission (StreamingDedup's sentinel), and
         // ConcurrentHashMap forbids null keys — so a plain HashMap with
@@ -872,7 +873,7 @@ object WarehouseQueries {
           .createTempDirectory("qcms2b-ckpt").toString
         docs.filter(col("doc_id") % 2 === 0).coalesce(1)
           .write.mode("overwrite").parquet(land)
-        val schema = s.read.parquet(land).schema
+        val schema = Tables.parquet(s, land).schema
         // (row, bucket) -> latest emitted count; foreachBatch runs on the
         // stream's microbatch thread, so guard the map explicitly.
         val acc = scala.collection.mutable.HashMap[(Int, Long), Long]()
@@ -959,8 +960,8 @@ object WarehouseQueries {
         val sink = "q_stream_curation_vs_store_sink"
         // the nightly artifact must exist before the stream starts — the
         // production ordering (ingest consumes what the batch job wrote)
-        val losers = s.read
-          .parquet(PipelineQueries.compactClusterArtifactDir(s, d) + "/clusters")
+        val losers = Tables.parquet(s,
+            PipelineQueries.compactClusterArtifactDir(s, d) + "/clusters")
           .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
         graft.streaming.StateScope.withStateConf(s) {
           val ok = graft.Tables.tableStream(s, d, "documents")
@@ -1065,7 +1066,7 @@ object WarehouseQueries {
         val docs = t(s, d, "documents")
         // the reference side is the FROZEN artifact, not a live recompute
         // — the full production lifecycle: freeze once, monitor forever
-        val refCnt = s.read.parquet(materializedPsiRefDir(s, d))
+        val refCnt = Tables.parquet(s, materializedPsiRefDir(s, d))
         val spine = docs.filter(col("source") =!= "src0")
           .select(col("source")).distinct()
           .crossJoin(s.range(16).select(col("id").as("bucket")))
@@ -1109,7 +1110,7 @@ object WarehouseQueries {
       (s, d) => {
         import graft.operators.{Drift, HistQuantile}
         val docs = t(s, d, "documents")
-        val refCnt = s.read.parquet(materializedPsiRefDir(s, d))
+        val refCnt = Tables.parquet(s, materializedPsiRefDir(s, d))
         val curCnt = HistQuantile.sketchBy(
             docs.filter(col("source") =!= "src0"),
             Nil, col("n_chars"), lo = 0L, hi = 1024L, buckets = 16)

@@ -15,8 +15,11 @@ import org.apache.spark.sql.types.StructType
   */
 object GraftSources {
 
+  /** With no schema, the schema comes from the footers, read on the driver
+    * ([[graft.Tables.parquet]]), not from a Spark job.
+    */
   def readParquet(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+    schema.fold(graft.Tables.parquet(spark, path))(s => spark.read.schema(s).parquet(path))
 
   def readCsv(spark: SparkSession, path: String, schema: Option[StructType] = None,
       header: Boolean = true, delimiter: String = ","): DataFrame = {

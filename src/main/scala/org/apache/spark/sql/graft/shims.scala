@@ -68,3 +68,59 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** Parquet schema from file footers, read on the driver. Spark's own
+  * inference (`ParquetFileFormat.mergeSchemasInParallel`) reads the same
+  * footers inside a Spark job; this is its per-file body run in the
+  * calling thread: the footer without row groups, converted by a
+  * converter built from the same session confs, merged with the same
+  * case sensitivity, failing with the same errors. Which files to touch
+  * is the caller's choice ([[graft.Tables.parquet]]). Access-only, like
+  * the other bridges here.
+  */
+object ParquetFooterBridge {
+  import org.apache.hadoop.fs.FileStatus
+  import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.SparkException
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.errors.QueryExecutionErrors
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  /** Spark's listing filter: a file or directory with this name is not
+    * part of a file-source table (`_`/`.` names other than the parquet
+    * summary files and `k=v` partition dirs, in-flight `._COPYING_`).
+    */
+  def hiddenName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The merged schema of `files`' footers, or None when none could be
+    * read (no files, or every one corrupt under ignoreCorruptFiles).
+    */
+  def schema(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footers = files.flatMap { f =>
+      // the footer reader throws RuntimeException, not IOException, on a
+      // file it cannot parse
+      try Some(new Footer(f.getPath,
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)))
+      catch {
+        case _: RuntimeException if conf.ignoreCorruptFiles => None
+        case e: RuntimeException => throw QueryExecutionErrors.cannotReadFooterForFileError(f.getPath, e)
+      }
+    }
+    footers.map(ParquetFileFormat.readSchemaFromFooter(_, converter)).reduceOption { (a, b) =>
+      try a.merge(b, conf.caseSensitiveAnalysis)
+      catch { case e: SparkException => throw QueryExecutionErrors.failedMergingSchemaError(a, b, e) }
+    }
+  }
+}

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.ListenerBusBridge
@@ -206,8 +207,9 @@ class TablesSpec extends SparkTestBase {
     assert(jobsDuring(Tables.parquet(spark, path))._2 == 0)
     Files.copy(Paths.get(s"$sf/nation.parquet"), file, StandardCopyOption.REPLACE_EXISTING)
     val (df, jobs) = jobsDuring(Tables.parquet(spark, path))
-    assert(jobs > 0, "a rewritten file must be re-inferred")
-    assert(df.columns.toSeq == Seq("n_nationkey", "n_name", "n_regionkey"))
+    assert(jobs == 0, "re-reading the rewritten file's footer ran a job")
+    assert(df.columns.toSeq == Seq("n_nationkey", "n_name", "n_regionkey"),
+      "the schema of the file before the rewrite was served")
     assert(df.count() == 25L)
     // the Spark layout: a directory of part files, overwritten
     val sparkDir = dir.resolve("s.parquet").toString
@@ -221,14 +223,20 @@ class TablesSpec extends SparkTestBase {
 
   test("schema reuse: toggling spark.sql.legacy.parquet.nanosAsLong re-infers") {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val path = s"$sf/region.parquet"
-    Tables.parquet(spark, path)
-    val flipped = (!spark.conf.getOption(key).contains("true")).toString
-    withConf(key, flipped) {
-      assert(jobsDuring(Tables.parquet(spark, path))._2 > 0,
-        "a changed parquet conf must force a re-inference")
+    val path = nanosFixture()
+    withConf(key, "true") {
+      assert(Tables.parquet(spark, path).schema("ts").dataType == LongType)
       assert(jobsDuring(Tables.parquet(spark, path))._2 == 0,
-        "the re-inferred schema is reused under the same conf")
+        "the schema is reused under the same conf")
+    }
+    withConf(key, "false") {
+      // the footer is read again under the flipped conf and rejected, not
+      // answered with the nanos-as-long schema remembered above
+      val e = intercept[Throwable](Tables.parquet(spark, path))
+      assert(causes(e).exists(_.contains("NANOS")), causes(e))
+    }
+    withConf(key, "true") {
+      assert(Tables.parquet(spark, path).schema("ts").dataType == LongType)
     }
   }
 
@@ -246,6 +254,193 @@ class TablesSpec extends SparkTestBase {
     } finally {
       (Tables.names :+ "orders_ddl").foreach(spark.catalog.dropTempView)
     }
+  }
+
+  // --- Tables.parquet: a miss reads footers on the driver, never a job
+
+  /** A parquet file written by parquet-mr itself, with no Spark schema in
+    * its footer: the converter confs decide its Spark types.
+    */
+  private def exampleParquet(path: java.nio.file.Path, schema: String)(
+      fill: (org.apache.parquet.example.data.Group, Int) => Unit): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path.toUri))
+      .withType(msg).build()
+    val groups = new SimpleGroupFactory(msg)
+    try (0 until 5).foreach { i =>
+      val g = groups.newGroup()
+      fill(g, i)
+      writer.write(g)
+    } finally writer.close()
+    path.toString
+  }
+
+  /** An events-shaped file whose `ts` is the legacy TIMESTAMP(NANOS). */
+  private def nanosFixture(): String =
+    exampleParquet(tmpDir("graft_nanos_").resolve("events.parquet"),
+      "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }") {
+      (g, i) => g.add("event_id", i.toLong); g.add("ts", 1700000000000000000L + i * 1000000L)
+    }
+
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(c => String.valueOf(c.getMessage)).toSeq
+
+  /** `Tables.parquet` on a path no earlier read has seen starts no Spark
+    * job and gives the plain inferring read's schema and analyzed output;
+    * so does the repeat read that serves the remembered schema.
+    */
+  private def assertFooterParity(path: String): DataFrame = {
+    val (df, jobs) = jobsDuring(Tables.parquet(spark, path))
+    assert(jobs == 0, s"$path: the schema read ran $jobs job(s)")
+    val plain = spark.read.parquet(path)
+    assert(df.schema == plain.schema, s"$path: footer schema differs from inference")
+    assert(output(df) == output(plain), s"$path: analyzed output differs from inference")
+    val again = Tables.parquet(spark, path)
+    assert(output(again) == output(plain), s"$path: the remembered schema differs")
+    df
+  }
+
+  private def sparkWritten(dir: java.nio.file.Path): String = {
+    spark.range(0, 300).selectExpr("id", "CAST(id AS STRING) AS s", "id % 3 AS k")
+      .repartition(3).write.parquet(dir.toString)
+    dir.toString
+  }
+
+  test("footer schema: the ten sf0.01 tables, read fresh, start no job and match inference") {
+    val dir = tmpDir("graft_footer_tables_")
+    Tables.names.foreach(n =>
+      Files.copy(Paths.get(s"$sf001/$n.parquet"), dir.resolve(s"$n.parquet")))
+    val (_, viewJobs) = jobsDuring(Tables.views(spark, dir.toString))
+    try assert(viewJobs == 0, s"Tables.views over fresh copies ran $viewJobs job(s)")
+    finally Tables.names.foreach(spark.catalog.dropTempView)
+    val fresh = tmpDir("graft_footer_tables_")
+    Tables.names.foreach(n =>
+      Files.copy(Paths.get(s"$sf001/$n.parquet"), fresh.resolve(s"$n.parquet")))
+    for (name <- Tables.names) {
+      val (df, jobs) = jobsDuring(Tables.t(spark, fresh.toString, name))
+      assert(jobs == 0, s"$name: a first read ran $jobs job(s)")
+      val raw = spark.read.parquet(s"$fresh/$name.parquet")
+      val inferred = if (name == "events") Tables.normalizeEvents(raw) else raw
+      assert(df.schema == inferred.schema, s"$name: footer schema differs from inference")
+      assert(output(df) == output(inferred), s"$name: analyzed output differs from inference")
+    }
+  }
+
+  test("footer schema: a Spark-written multi-part dir with _SUCCESS and .crc files") {
+    val dir = tmpDir("graft_footer_parts_").resolve("t")
+    sparkWritten(dir)
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.startsWith("part-")) == 3, names)
+    assert(assertFooterParity(dir.toString).count() == 300L)
+  }
+
+  test("footer schema: a hive-partitioned dir keeps its partition column") {
+    val dir = tmpDir("graft_footer_hive_").resolve("t")
+    spark.range(0, 300).selectExpr("id", "CAST(id AS STRING) AS s", "id % 3 AS k")
+      .write.partitionBy("k").parquet(dir.toString)
+    val df = assertFooterParity(dir.toString)
+    assert(df.columns.toSeq == Seq("id", "s", "k") && df.schema("k").dataType == IntegerType)
+    assert(df.filter("k = 2").count() == 100L)
+  }
+
+  test("footer schema: a file in a non-partition subdirectory is not read") {
+    // `a/` sorts before the root's part files; the file index offers only
+    // files directly under the root (or under k=v dirs) to inference
+    val dir = tmpDir("graft_footer_nested_").resolve("t")
+    spark.range(10).selectExpr("id AS x").coalesce(1).write.parquet(dir.toString)
+    spark.range(10).selectExpr("id AS y", "id AS z").coalesce(1)
+      .write.parquet(dir.resolve("a").toString)
+    assert(assertFooterParity(dir.toString).columns.toSeq == Seq("x"))
+    // with no file left to read, it fails as the plain read does
+    val only = tmpDir("graft_footer_nested_").resolve("t")
+    spark.range(10).selectExpr("id AS y").coalesce(1).write.parquet(only.resolve("a").toString)
+    val plain = intercept[Throwable](spark.read.parquet(only.toString))
+    assert(intercept[Throwable](Tables.parquet(spark, only.toString)).getMessage == plain.getMessage)
+  }
+
+  test("footer schema: _common_metadata, else _metadata, is read before any part file") {
+    // the summary files carry a wider schema than the part files, so
+    // reading a part file's footer instead shows as a missing column
+    def withSummaries(summaries: String*): String = {
+      val dir = tmpDir("graft_footer_summary_").resolve("t")
+      sparkWritten(dir)
+      summaries.zipWithIndex.foreach { case (name, i) =>
+        val wide = dir.getParent.resolve(s"wide$i")
+        spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s", "id AS k", s"id AS extra$i")
+          .coalesce(1).write.parquet(wide.toString)
+        val part = Files.list(wide).iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+        Files.copy(part, dir.resolve(name))
+      }
+      dir.toString
+    }
+    assert(assertFooterParity(withSummaries("_metadata")).columns.contains("extra0"))
+    assert(assertFooterParity(withSummaries("_metadata", "_common_metadata")).columns.toSeq ==
+      Seq("id", "s", "k", "extra1"), "_common_metadata comes before _metadata")
+  }
+
+  test("footer schema: spark.sql.parquet.mergeSchema merges every part file") {
+    val dir = tmpDir("graft_footer_merge_").resolve("t")
+    spark.range(3).selectExpr("id", "id AS a").coalesce(1).write.parquet(dir.toString)
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS b").coalesce(1)
+      .write.mode("append").parquet(dir.toString)
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      assert(assertFooterParity(dir.toString).columns.toSet == Set("id", "a", "b"))
+    }
+    withConf("spark.sql.parquet.mergeSchema", "false") {
+      assert(assertFooterParity(dir.toString).columns.length == 2)
+    }
+  }
+
+  test("footer schema: spark.sql.parquet.binaryAsString decides an unannotated binary column") {
+    val file = exampleParquet(tmpDir("graft_footer_binary_").resolve("b.parquet"),
+      "message m { required int64 id; required binary raw; }") {
+      (g, i) => g.add("id", i.toLong); g.add("raw", s"v$i")
+    }
+    for ((flag, want) <- Seq("true" -> StringType, "false" -> BinaryType, "true" -> StringType))
+      withConf("spark.sql.parquet.binaryAsString", flag) {
+        assert(assertFooterParity(file).schema("raw").dataType == want, s"binaryAsString=$flag")
+      }
+  }
+
+  test("footer schema: a NANOS events file still takes the nanosAsLong retry") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val path = nanosFixture()
+    withConf(key, "false") {
+      val e = intercept[Throwable](Tables.parquet(spark, path))
+      assert(causes(e).exists(m => m.contains("NANOS") || m.contains("nanosAsLong")), causes(e))
+      // readEvents sets the flag on that rejection and reads again
+      val (events, jobs) = jobsDuring(Tables.t(spark, Paths.get(path).getParent.toString, "events"))
+      assert(jobs == 0)
+      assert(spark.conf.get(key) == "true")
+      assert(events.schema("ts").dataType == TimestampType)
+      assert(events.orderBy("event_id").collect().map(_.getTimestamp(1).getTime).toSeq ==
+        (0 until 5).map(i => 1700000000000L + i))
+    }
+  }
+
+  test("footer schema: a truncated non-parquet file fails with the plain read's root message") {
+    val dir = tmpDir("graft_footer_corrupt_").resolve("t")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve("part-00000.parquet"), "PAR".getBytes)
+    val plain = intercept[Throwable](spark.read.parquet(dir.toString).schema)
+    val (ours, jobs) = jobsDuring(intercept[Throwable](Tables.parquet(spark, dir.toString)))
+    assert(jobs == 0)
+    assert(causes(ours).last == causes(plain).last, s"ours: ${causes(ours)}\nplain: ${causes(plain)}")
+    assert(causes(ours).last.contains("is not a Parquet file"), causes(ours))
+  }
+
+  test("Tables.parquet is the only schema-less parquet read in src/main") {
+    val plainRead = """read\s*\.\s*parquet\(""".r
+    val root = Paths.get("src/main/scala")
+    val readers = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => plainRead.findFirstIn(Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toSeq
+    assert(readers == Seq("graft/Tables.scala"))
   }
 
   test("tFan: the cached split count follows a table rewrite") {
