@@ -389,17 +389,81 @@ private[graft] object ArtifactCache {
       }
     }
 
-  // ---- versioned-registry surface: CURRENT pointer + retention --------
+  // ---- versioned registry: the verb, the CURRENT pointer, retention ----
   //
-  // The blue/green lifecycle (REFRESH) leaves versions side by side
-  // (`v0/`, `v1/`, … under one artifact dir); production consumers must
-  // not re-derive "which one" from the trigger — the registry publishes
-  // an atomic CURRENT pointer, and a retention verb deletes only the
+  // The blue/green lifecycle (REFRESH) keeps versions side by side, and
+  // consumers never re-derive "which one" from the trigger: the registry
+  // publishes an atomic CURRENT pointer, and retention deletes only the
   // versions the pointer does not reference. Laws (ConcurrencySpec):
   // readers see the old or the new pointer value, never a partial write;
   // GC never deletes the pointed version; both compose with the build
   // lease (pointer flips happen inside lease-held build stages, GC takes
   // the same lease).
+
+  /** The VERSIONED REGISTRY verb. Layout of the returned artifact dir
+    * (keyed like [[dir]] on `table` at `sfDir` and `tag`):
+    * {{{
+    *   v<N>/                           one whole version
+    *   current                         the pointer, content "v<N>"
+    *   markers/{v0,refresh,gc}.done    stage markers
+    * }}}
+    * The markers sit OUTSIDE the version dirs, so retiring a version
+    * cannot un-mark the lifecycle. Three [[staged]] stages, each writing
+    * its marker last (a crash resumes at the first missing marker):
+    *   1. v0 — `snapshot(<dir>/v0)`, then publish v0;
+    *   2. refresh — if `trips(<dir>/v0)`: `rebuild(<dir>/v1)`, then flip
+    *      the pointer to v1 (a reader serves v0 whole or v1 whole);
+    *   3. gc — retire every version the pointer does not reference,
+    *      under the build lease the stages already hold.
+    * Terminal state: v1 alone and pointed on a trip, else v0.
+    */
+  def registry(s: SparkSession, sfDir: String, table: String, tag: String)(
+      snapshot: String => Unit, trips: String => Boolean,
+      rebuild: String => Unit): String = {
+    def stage(name: String)(body: String => Unit): (String, String => Unit) = {
+      val marker = s"markers/$name.done"
+      marker -> { dir =>
+        body(dir)
+        val p = new Path(s"$dir/$marker")
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
+      }
+    }
+    staged(s, sfDir, table, tag, Seq(
+      stage("v0") { dir =>
+        snapshot(s"$dir/v0")
+        publishCurrent(s, dir, "v0")
+      },
+      stage("refresh") { dir =>
+        if (trips(s"$dir/v0")) {
+          rebuild(s"$dir/v1")
+          publishCurrent(s, dir, "v1")
+        }
+      },
+      stage("gc") { dir => retireLocked(s, dir): Unit }))
+  }
+
+  /** The version a registry's CURRENT pointer names; throws, naming the
+    * registry dir, when there is no pointer (a registry [[registry]]
+    * returned always has one).
+    */
+  def current(s: SparkSession, dir: String): String =
+    readCurrent(s, dir).getOrElse(
+      throw new IllegalStateException(s"registry $dir has no current pointer"))
+
+  /** The `v<N>` version DIRECTORIES under `dir`, in version order; empty
+    * when `dir` does not exist. Anything else (`markers/`, `current`, a
+    * `v1.bak` backup, a plain file named like a version) is not a version.
+    */
+  def versions(s: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val vName = "v(\\d+)".r
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && vName.matches(st.getPath.getName))
+      .map(_.getPath.getName)
+      .sortBy(v => (v.length, v))
+  }
 
   /** Atomically publish `version` as `dir`'s CURRENT pointer (`
     * <dir>/current`, content = the version subdir name). Write-tmp +
@@ -446,7 +510,7 @@ private[graft] object ArtifactCache {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** RETENTION verb: delete every `v<N>/` version under `dir` the
+  /** RETENTION verb: delete every [[versions]] entry under `dir` the
     * CURRENT pointer does not reference; returns the retired names.
     * Takes the dir's build lease (and the in-JVM per-dir monitor), so it
     * can never race a builder mid-write or a pointer flip — a version
@@ -460,30 +524,21 @@ private[graft] object ArtifactCache {
     val lock = locks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
       withLease(fs, dir, leaseTtlMs(s), () => false) { _ =>
-        retired = retireLocked(s, fs, dir)
+        retired = retireLocked(s, dir)
       }
     }
     retired
   }
 
-  /** GC body — caller MUST hold `dir`'s build lease (a registered gc
-    * STAGE already does; the standalone verb is [[retireUnreferenced]]).
+  /** GC body — caller MUST hold `dir`'s build lease ([[registry]]'s gc
+    * stage does; the standalone verb is [[retireUnreferenced]]).
     */
-  private[queries] def retireLocked(s: SparkSession, fs: FileSystem,
-      dir: String): Seq[String] =
+  private def retireLocked(s: SparkSession, dir: String): Seq[String] =
     readCurrent(s, dir) match {
       case None => Seq.empty
       case Some(cur) =>
-        val vName = "v(\\d+)".r
-        if (!fs.exists(new Path(dir))) Seq.empty
-        else fs.listStatus(new Path(dir)).toSeq
-          .filter(st => st.isDirectory && (st.getPath.getName match {
-            case vName(_) => true
-            case _ => false
-          }))
-          .map(_.getPath.getName)
-          .filterNot(_ == cur)
-          .sorted
+        val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+        versions(s, dir).filterNot(_ == cur)
           .map { v => fs.delete(new Path(s"$dir/$v"), true); v }
     }
 

@@ -180,18 +180,8 @@ object PipelineQueries {
     */
   private def materializedManifestDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ArtifactCache.dir(s, d, "documents", "manifest", Seq("_SUCCESS")) { dir =>
-      val docs = tFan(s, d, "documents")
-      val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
-      val gated = docs.filter(col("source") =!= "src0").filter(gate)
-      val losers = Tables.parquet(s, materializedClusterDir(s, d))
-        .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
-      val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
-      Decontaminate.decontaminate(deduped,
-          docs.filter(col("source") === "src0"), "doc_id", "text", n = 13)
-        .select("doc_id", "source")
-        .write.mode("overwrite").parquet(dir)
-    }
+    ArtifactCache.dir(s, d, "documents", "manifest", Seq("_SUCCESS"))(
+      buildManifest(s, d, materializedClusterDir(s, d), _))
 
   /** The manifest under the APPEND lifecycle
     * (`q_curation_manifest_incr`): identical composition to
@@ -207,18 +197,35 @@ object PipelineQueries {
     */
   private def materializedManifestIncrDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ArtifactCache.dir(s, d, "documents", "manifestincr", Seq("_SUCCESS")) { dir =>
-      val docs = tFan(s, d, "documents")
-      val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
-      val gated = docs.filter(col("source") =!= "src0").filter(gate)
-      val losers = Tables.parquet(s, materializedCompactClusterDir(s, d) + "/clusters")
-        .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
-      val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
-      Decontaminate.decontaminate(deduped,
-          docs.filter(col("source") === "src0"), "doc_id", "text", n = 13)
-        .select("doc_id", "source")
-        .write.mode("overwrite").parquet(dir)
-    }
+    ArtifactCache.dir(s, d, "documents", "manifestincr", Seq("_SUCCESS"))(
+      buildManifest(s, d, materializedCompactClusterDir(s, d) + "/clusters", _))
+
+  /** The manifest recipe over the whole corpus, its near-dup stage
+    * reading the loser set of the cluster table at `clusterDir`: the
+    * ONE body behind the full-rebuild and the incremental manifest.
+    */
+  private def buildManifest(s: org.apache.spark.sql.SparkSession, d: String,
+      clusterDir: String, dir: String): Unit = {
+    val docs = tFan(s, d, "documents")
+    val gated = docs.filter(col("source") =!= "src0").filter(gopherGate)
+    val deduped = gated.join(losersOf(s, clusterDir), Seq("doc_id"), "left_anti")
+    Decontaminate.decontaminate(deduped,
+        docs.filter(col("source") === "src0"), "doc_id", "text", n = 13)
+      .select("doc_id", "source")
+      .write.mode("overwrite").parquet(dir)
+  }
+
+  /** All Gopher quality gates ANDed: the manifest recipe's keep rule. */
+  private def gopherGate: org.apache.spark.sql.Column =
+    TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
+
+  /** The doc ids a cluster table drops: every member that is not its
+    * cluster's representative.
+    */
+  private def losersOf(s: org.apache.spark.sql.SparkSession,
+      clusterDir: String): org.apache.spark.sql.DataFrame =
+    Tables.parquet(s, clusterDir)
+      .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
 
   /** The BASE-NIGHT manifest artifact for the delta maintenance path
     * (`q_curation_manifest_delta`): `kept/` = the recipe's keep-set over
@@ -250,11 +257,8 @@ object PipelineQueries {
         Decontaminate.ngramHashes(col("text"), 13)).as("g"))
       .distinct()
       .write.mode("overwrite").parquet(dir + "/benchgrams")
-    val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
-    val gated = base.filter(col("source") =!= "src0").filter(gate)
-    val losers = Tables.parquet(s, clusterDir)
-      .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
-    val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
+    val gated = base.filter(col("source") =!= "src0").filter(gopherGate)
+    val deduped = gated.join(losersOf(s, clusterDir), Seq("doc_id"), "left_anti")
     val contaminated = deduped
       .select(col("doc_id"), explode(
         Decontaminate.ngramHashes(col("text"), 13)).as("g"))
@@ -277,14 +281,11 @@ object PipelineQueries {
       keptDir: String, benchGramsDir: String, losersNewDir: String,
       losersOldDir: String, incr: org.apache.spark.sql.DataFrame,
       outDir: String): Unit = {
-    def losersOf(cd: String) = Tables.parquet(s, cd)
-      .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
-    val newlyLosing = losersOf(losersNewDir)
-      .join(losersOf(losersOldDir), Seq("doc_id"), "left_anti")
+    val newlyLosing = losersOf(s, losersNewDir)
+      .join(losersOf(s, losersOldDir), Seq("doc_id"), "left_anti")
     val keptOld = Tables.parquet(s, keptDir)
       .join(newlyLosing, Seq("doc_id"), "left_anti")
-    val gate = TextAnalysis.gopherGates(col("text")).map(_._2).reduce(_ && _)
-    val incrGated = incr.filter(col("source") =!= "src0").filter(gate)
+    val incrGated = incr.filter(col("source") =!= "src0").filter(gopherGate)
     val contaminated = incrGated
       .select(col("doc_id"), explode(
         Decontaminate.ngramHashes(col("text"), 13)).as("g"))
@@ -292,7 +293,7 @@ object PipelineQueries {
       .select("doc_id").distinct()
     val newKept = incrGated.select("doc_id", "source")
       .join(contaminated, Seq("doc_id"), "left_anti")
-      .join(losersOf(losersNewDir), Seq("doc_id"), "left_anti")
+      .join(losersOf(s, losersNewDir), Seq("doc_id"), "left_anti")
     keptOld.unionAll(newKept)
       .write.mode("overwrite").parquet(outDir)
   }
@@ -683,14 +684,34 @@ object PipelineQueries {
     * catches it.
     */
   private def sampledRecallMicro(s: org.apache.spark.sql.SparkSession,
-      d: String, idxDir: String): Long = {
+      d: String, idxDir: String): Long =
+    probeRecallMicro(s, d)(queries => Similarity.ivfKnnFromIndex(
+      Tables.parquet(s, idxDir + "/postings"), queries,
+      "vec_id", "embedding", k = 10,
+      Tables.parquet(s, idxDir + "/centroids"), "cell", "centroid",
+      nProbe = 4))
+
+  /** [[sampledRecallMicro]]'s compressed-store twin: the same md5 probe
+    * set replayed through the stored PQ model's ADC serving path.
+    */
+  private def sampledRecallPqMicro(s: org.apache.spark.sql.SparkSession,
+      d: String, idxDir: String): Long =
+    probeRecallMicro(s, d) { queries =>
+      val (cents, books) = readIvfPqModel(s, idxDir)
+      Pq.ivfPqTopK(Tables.parquet(s, idxDir + "/codes"), queries,
+        "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
+    }
+
+  /** Σhits·1e6/slots of `serve`'s (q_id, c_id) top-10 answers for the
+    * [[probeSet]] against exact brute-force top-10 (1e6 on an empty
+    * probe set): the hits/slots readout both recall proxies share.
+    */
+  private def probeRecallMicro(s: org.apache.spark.sql.SparkSession,
+      d: String)(serve: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Long = {
     val emb = t(s, d, "embeddings")
     val queries = probeSet(emb)
-    val approx = Similarity.ivfKnnFromIndex(
-        Tables.parquet(s, idxDir + "/postings"), queries,
-        "vec_id", "embedding", k = 10,
-        Tables.parquet(s, idxDir + "/centroids"), "cell", "centroid",
-        nProbe = 4)
+    val approx = serve(queries)
       .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
     val agg = Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
       .select("q_id", "c_id")
@@ -698,27 +719,6 @@ object PipelineQueries {
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
         count(lit(1)).as("slots"))
       .collect()(0) // one scalar row — the decision input
-    if (agg.getLong(1) == 0L) 1000000L
-    else agg.getLong(0) * 1000000L / agg.getLong(1)
-  }
-
-  /** [[sampledRecallMicro]]'s compressed-store twin: the same md5 probe
-    * set replayed through the stored PQ model's ADC serving path.
-    */
-  private def sampledRecallPqMicro(s: org.apache.spark.sql.SparkSession,
-      d: String, idxDir: String): Long = {
-    val emb = t(s, d, "embeddings")
-    val queries = probeSet(emb)
-    val (cents, books) = readIvfPqModel(s, idxDir)
-    val approx = Pq.ivfPqTopK(Tables.parquet(s, idxDir + "/codes"), queries,
-        "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
-      .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-    val agg = Similarity.bruteForceKnn(emb, queries, "vec_id", "embedding", 10)
-      .select("q_id", "c_id")
-      .join(approx, Seq("q_id", "c_id"), "left")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-        count(lit(1)).as("slots"))
-      .collect()(0)
     if (agg.getLong(1) == 0L) 1000000L
     else agg.getLong(0) * 1000000L / agg.getLong(1)
   }
@@ -806,62 +806,20 @@ object PipelineQueries {
     "spark.graft.ann.refreshFactorMicro" -> "0",
     "spark.graft.ann.refreshRecallMicro" -> "0")
 
-  /** The VERSIONED registry artifact (`q_ann_serve_current`,
-    * `q_ann_registry_versions`) — the production story
-    * [[materializedIvfRefreshDir]] stops short of: refresh leaves frozen
-    * and refreshed stores side by side with every consumer re-deriving
-    * the choice from the trigger; a registry publishes an atomic CURRENT
-    * pointer and retires unreferenced versions. Layout under one
-    * artifact dir: `v0/` = the frozen append-only store's snapshot
-    * (centroids + postings copied from [[materializedIvfIncrIndexDir]] —
-    * pure I/O, no re-assignment, same content by the compact-verb
-    * argument), `v1/` = the full-corpus rebuild ([[buildIvfFlat]], the
-    * shared builder), `current` = the pointer, flipped by atomic rename
-    * AFTER v1's markers commit (blue/green: a reader mid-refresh serves
-    * v0 whole or v1 whole, never a mix), `markers/` = stage markers
-    * OUTSIDE the version dirs so retiring a version cannot un-mark the
-    * lifecycle and trigger a spurious rebuild. The gc stage runs
-    * [[ArtifactCache.retireLocked]] under the already-held build lease;
-    * terminal state (default trigger: forced refresh) = v1 only,
-    * pointer → v1.
+  /** The IVF-Flat [[ArtifactCache.registry]] (`q_ann_serve_current`,
+    * `q_ann_registry_versions`): v0 = the frozen append-only store
+    * ([[materializedIvfIncrIndexDir]]) compacted ([[compactIvf]] — pure
+    * I/O, no re-assignment); trips = [[ivfNeedsRefresh]] on v0 (the
+    * q_ann_refresh trigger); v1 = the full-corpus rebuild
+    * ([[buildIvfFlat]], the shared builder).
     */
   private[graft] def materializedIvfRegistryDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def touch(dir: String, marker: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$marker")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p.getParent)
-      fs.create(p, true).close()
-    }
-    ArtifactCache.staged(s, d, "embeddings",
-        gatedTag(s, "ivfreg", annGates: _*), Seq(
-      "markers/v0.done" -> { dir =>
-        val incr = materializedIvfIncrIndexDir(s, d)
-        Tables.parquet(s, incr + "/centroids").coalesce(1)
-          .write.mode("overwrite").parquet(dir + "/v0/centroids")
-        Tables.parquet(s, incr + "/postings")
-          .select(col("c_id"), col("c_vec"), col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir + "/v0/postings")
-        ArtifactCache.publishCurrent(s, dir, "v0")
-        touch(dir, "markers/v0.done")
-      },
-      "markers/refresh.done" -> { dir =>
-        val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
-        if (ivfNeedsRefresh(s, d, s"$dir/$cur", "postings",
-            sampledRecallMicro(s, d, _))) {
-          buildIvfFlat(s, t(s, d, "embeddings"), dir + "/v1")
-          ArtifactCache.publishCurrent(s, dir, "v1")
-        }
-        touch(dir, "markers/refresh.done")
-      },
-      "markers/gc.done" -> { dir =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        ArtifactCache.retireLocked(s, fs, dir): Unit
-        touch(dir, "markers/gc.done")
-      }))
-  }
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ArtifactCache.registry(s, d, "embeddings",
+        gatedTag(s, "ivfreg", annGates: _*))(
+      snapshot = compactIvf(s, materializedIvfIncrIndexDir(s, d), _),
+      trips = ivfNeedsRefresh(s, d, _, "postings", sampledRecallMicro(s, d, _)),
+      rebuild = buildIvfFlat(s, t(s, d, "embeddings"), _))
 
   /** Night slices of the CYCLE simulation: the corpus arrives over three
     * nights — night 0 (the base build, id % 4 ∈ {0, 1}), night 1
@@ -880,31 +838,45 @@ object PipelineQueries {
     * serves night 1 on a fresh store and night N on an append-only one.
     */
   private def materializedIvfNightsDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def cents(dir: String) = Similarity.centroidRows(
-      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
-    def appendNight(night: Int)(dir: String): Unit = {
-      val g = ArtifactCache.nextGen(s, dir, "postings")
-      Similarity.ivfAssignCells(
-          nightSlice(t(s, d, "embeddings"), "vec_id", night),
-          "vec_id", "embedding", cents(dir))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(dir + s"/postings/gen=$g")
-    }
+      s: org.apache.spark.sql.SparkSession, d: String): String =
     ArtifactCache.staged(s, d, "embeddings", "ivfnights", Seq(
-      "centroids/_SUCCESS" -> { dir =>
-        val base = nightSlice(t(s, d, "embeddings"), "vec_id", 0)
-        val seed = Similarity.centroidRows(
-          base.orderBy("vec_id").limit(16), "vec_id", "embedding")
-        Similarity.kmeansStep(base, "vec_id", "embedding", seed)
-          .select(col("cell"),
-            expr("transform(centroid, x -> cast(x as float))").as("centroid"))
-          .write.mode("overwrite").parquet(dir + "/centroids")
-      },
-      "postings/gen=0/_SUCCESS" -> appendNight(0),
-      "postings/gen=1/_SUCCESS" -> appendNight(1),
-      "postings/gen=2/_SUCCESS" -> appendNight(2)))
+      "centroids/_SUCCESS" ->
+        (trainFrozenIvf(nightSlice(t(s, d, "embeddings"), "vec_id", 0), _)),
+      "postings/gen=0/_SUCCESS" -> appendIvfNight(s, d, 0),
+      "postings/gen=1/_SUCCESS" -> appendIvfNight(s, d, 1),
+      "postings/gen=2/_SUCCESS" -> appendIvfNight(s, d, 2)))
+
+  /** Freeze an append store's quantizer: `base`'s 16 smallest-id seeds,
+    * one exact-micro Lloyd step, float-cast centroids into `dir`.
+    */
+  private def trainFrozenIvf(base: org.apache.spark.sql.DataFrame,
+      dir: String): Unit = {
+    val seed = Similarity.centroidRows(
+      base.orderBy("vec_id").limit(16), "vec_id", "embedding")
+    Similarity.kmeansStep(base, "vec_id", "embedding", seed)
+      .select(col("cell"),
+        expr("transform(centroid, x -> cast(x as float))").as("centroid"))
+      .write.mode("overwrite").parquet(dir + "/centroids")
   }
+
+  /** Assign `slice` under `dir`'s STORED centroids and write it as
+    * postings generation `gen`, hive-partitioned by cell.
+    */
+  private def appendIvfGen(s: org.apache.spark.sql.SparkSession,
+      slice: org.apache.spark.sql.DataFrame, dir: String, gen: Int): Unit =
+    Similarity.ivfAssignCells(slice, "vec_id", "embedding",
+        Similarity.centroidRows(
+          Tables.parquet(s, dir + "/centroids"), "cell", "centroid"))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(dir + s"/postings/gen=$gen")
+
+  /** The nightly append stage: `night`'s slice lands as the next
+    * generation ([[ArtifactCache.nextGen]]) of the store at `dir`.
+    */
+  private def appendIvfNight(s: org.apache.spark.sql.SparkSession, d: String,
+      night: Int)(dir: String): Unit =
+    appendIvfGen(s, nightSlice(t(s, d, "embeddings"), "vec_id", night), dir,
+      ArtifactCache.nextGen(s, dir, "postings"))
 
   /** The lifecycle CYCLE closed (`q_ann_index_cycle`): night 1's
     * generations are COMPACTED into one, and night 2 appends INTO the
@@ -918,9 +890,7 @@ object PipelineQueries {
     * pins the served ranks).
     */
   private def materializedIvfCycleDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def cents(dir: String) = Similarity.centroidRows(
-      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
+      s: org.apache.spark.sql.SparkSession, d: String): String =
     ArtifactCache.staged(s, d, "embeddings", "ivfcycle", Seq(
       "centroids/_SUCCESS" -> { dir =>
         Tables.parquet(s, materializedIvfNightsDir(s, d) + "/centroids")
@@ -936,17 +906,9 @@ object PipelineQueries {
           .write.mode("overwrite").partitionBy("cell")
           .parquet(dir + "/postings/gen=0")
       },
-      "postings/gen=1/_SUCCESS" -> { dir =>
-        // night 2 appends into the compacted store — the SAME append
-        // body as materializedIvfNightsDir's, generation from nextGen
-        val g = ArtifactCache.nextGen(s, dir, "postings")
-        Similarity.ivfAssignCells(
-            nightSlice(t(s, d, "embeddings"), "vec_id", 2),
-            "vec_id", "embedding", cents(dir))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir + s"/postings/gen=$g")
-      }))
-  }
+      // night 2 appends into the compacted store — the SAME append body
+      // as materializedIvfNightsDir's, generation from nextGen
+      "postings/gen=1/_SUCCESS" -> appendIvfNight(s, d, 2)))
 
   /** The IVF index under the APPEND lifecycle (`q_ann_index_incr`): the
     * quantizer is trained ONCE on the base corpus (vec_id % 4 != 3, "the
@@ -962,30 +924,12 @@ object PipelineQueries {
     */
   private def materializedIvfIncrIndexDir(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def cents(dir: String) = Similarity.centroidRows(
-      Tables.parquet(s, dir + "/centroids"), "cell", "centroid")
+    def base = t(s, d, "embeddings").filter(col("vec_id") % 4 =!= 3)
     ArtifactCache.staged(s, d, "embeddings", "ivfincr", Seq(
-      "centroids/_SUCCESS" -> { dir =>
-        val base = t(s, d, "embeddings").filter(col("vec_id") % 4 =!= 3)
-        val seed = Similarity.centroidRows(
-          base.orderBy("vec_id").limit(16), "vec_id", "embedding")
-        Similarity.kmeansStep(base, "vec_id", "embedding", seed)
-          .select(col("cell"),
-            expr("transform(centroid, x -> cast(x as float))").as("centroid"))
-          .write.mode("overwrite").parquet(dir + "/centroids")
-      },
-      "postings/gen=0/_SUCCESS" -> { dir =>
-        val base = t(s, d, "embeddings").filter(col("vec_id") % 4 =!= 3)
-        Similarity.ivfAssignCells(base, "vec_id", "embedding", cents(dir))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir + "/postings/gen=0")
-      },
-      "postings/gen=1/_SUCCESS" -> { dir =>
-        val incr = t(s, d, "embeddings").filter(col("vec_id") % 4 === 3)
-        Similarity.ivfAssignCells(incr, "vec_id", "embedding", cents(dir))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir + "/postings/gen=1")
-      }))
+      "centroids/_SUCCESS" -> (trainFrozenIvf(base, _)),
+      "postings/gen=0/_SUCCESS" -> (appendIvfGen(s, base, _, 0)),
+      "postings/gen=1/_SUCCESS" -> (appendIvfGen(s,
+        t(s, d, "embeddings").filter(col("vec_id") % 4 === 3), _, 1))))
   }
 
   /** COMPACT the two-generation incremental IVF index into one postings
@@ -1004,14 +948,21 @@ object PipelineQueries {
   private def materializedIvfCompactIndexDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     ArtifactCache.dir(s, d, "embeddings", "ivfcompact",
-        Seq("centroids/_SUCCESS", "postings/_SUCCESS")) { dir =>
-      val incr = materializedIvfIncrIndexDir(s, d)
-      Tables.parquet(s, incr + "/centroids").coalesce(1)
-        .write.mode("overwrite").parquet(dir + "/centroids")
-      Tables.parquet(s, incr + "/postings")
-        .select(col("c_id"), col("c_vec"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir + "/postings")
-    }
+        Seq("centroids/_SUCCESS", "postings/_SUCCESS"))(
+      compactIvf(s, materializedIvfIncrIndexDir(s, d), _))
+
+  /** The IVF-Flat compact body: `src`'s centroids copied into one file,
+    * its postings generations read in ONE scan and rewritten as one
+    * partitionBy(cell) layout under `dir`.
+    */
+  private def compactIvf(s: org.apache.spark.sql.SparkSession, src: String,
+      dir: String): Unit = {
+    Tables.parquet(s, src + "/centroids").coalesce(1)
+      .write.mode("overwrite").parquet(dir + "/centroids")
+    Tables.parquet(s, src + "/postings")
+      .select(col("c_id"), col("c_vec"), col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir + "/postings")
+  }
 
   /** Materialize the COMPRESSED (IVF-PQ) index once per corpus version —
     * the layout production vector stores actually serve: `centroids/` =
@@ -1146,71 +1097,43 @@ object PipelineQueries {
   private def materializedIvfPqCompactIndexDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     ArtifactCache.dir(s, d, "embeddings", "ivfpqcompact",
-        Seq("centroids/_SUCCESS", "books/_SUCCESS", "codes/_SUCCESS")) { dir =>
-      val incr = materializedIvfPqIncrIndexDir(s, d)
-      Tables.parquet(s, incr + "/centroids").coalesce(1)
-        .write.mode("overwrite").parquet(dir + "/centroids")
-      Tables.parquet(s, incr + "/books").coalesce(1)
-        .write.mode("overwrite").parquet(dir + "/books")
-      Tables.parquet(s, incr + "/codes")
-        .select(col("vec_id"), col("pq_code"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir + "/codes")
+        Seq("centroids/_SUCCESS", "books/_SUCCESS", "codes/_SUCCESS"))(
+      compactIvfPq(s, materializedIvfPqIncrIndexDir(s, d), _))
+
+  /** The IVF-PQ compact body: `src`'s centroids and codebooks copied into
+    * one file each, its codes generations read in ONE scan and rewritten
+    * as one partitionBy(cell) layout under `dir`.
+    */
+  private def compactIvfPq(s: org.apache.spark.sql.SparkSession, src: String,
+      dir: String): Unit = {
+    Seq("centroids", "books").foreach { sub =>
+      Tables.parquet(s, s"$src/$sub").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/$sub")
     }
+    Tables.parquet(s, src + "/codes")
+      .select(col("vec_id"), col("pq_code"), col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir + "/codes")
+  }
+
+  /** The IVF-PQ [[ArtifactCache.registry]] (`q_pq_serve_current`): v0 =
+    * the frozen append-era store ([[materializedIvfPqIncrIndexDir]])
+    * compacted ([[compactIvfPq]]); trips = [[ivfNeedsRefresh]] on v0's
+    * codes (the q_ann_refresh_pq trigger: occupancy skew OR sampled ADC
+    * recall decay); v1 = the whole compressed index rebuilt on the
+    * current corpus ([[buildIvfPq]]).
+    */
+  private[graft] def materializedIvfPqRegistryDir(
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ArtifactCache.registry(s, d, "embeddings",
+        gatedTag(s, "ivfpqreg", annGates: _*))(
+      snapshot = compactIvfPq(s, materializedIvfPqIncrIndexDir(s, d), _),
+      trips = ivfNeedsRefresh(s, d, _, "codes", sampledRecallPqMicro(s, d, _)),
+      rebuild = buildIvfPq(s, t(s, d, "embeddings"), _))
 
   /** Reassemble (coarse centroids, PQ codebooks) from a stored IVF-PQ
     * index — two bounded collects (8 + 128 rows, the centroid-table
     * contract).
     */
-  /** The COMPRESSED index's registry under the CURRENT pointer — the
-    * fourth and last trained family at pointer parity (IVF-Flat,
-    * tokenizer, classifier, IVF-PQ): v0 = the frozen append-era store
-    * snapshotted (coarse quantizer + codebooks + codes), published; the
-    * refresh stage reads the SAME two-signal trigger as q_ann_refresh_pq
-    * (occupancy skew OR sampled ADC recall decay) and on a trip rebuilds
-    * the whole compressed index on the current corpus as v1, flipping
-    * the pointer only after all three tables commit; gc retires
-    * unpointed versions under the build lease.
-    */
-  private[graft] def materializedIvfPqRegistryDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def touch(dir: String, marker: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$marker")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p.getParent)
-      fs.create(p, true).close()
-    }
-    ArtifactCache.staged(s, d, "embeddings",
-        gatedTag(s, "ivfpqreg", annGates: _*), Seq(
-      "markers/v0.done" -> { dir =>
-        val incr = materializedIvfPqIncrIndexDir(s, d)
-        Seq("centroids", "books").foreach { t0 =>
-          Tables.parquet(s, s"$incr/$t0").coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/v0/$t0")
-        }
-        Tables.parquet(s, incr + "/codes")
-          .select(col("vec_id"), col("pq_code"), col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir + "/v0/codes")
-        ArtifactCache.publishCurrent(s, dir, "v0")
-        touch(dir, "markers/v0.done")
-      },
-      "markers/refresh.done" -> { dir =>
-        val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
-        if (ivfNeedsRefresh(s, d, s"$dir/$cur", "codes",
-            sampledRecallPqMicro(s, d, _))) {
-          buildIvfPq(s, t(s, d, "embeddings"), dir + "/v1")
-          ArtifactCache.publishCurrent(s, dir, "v1")
-        }
-        touch(dir, "markers/refresh.done")
-      },
-      "markers/gc.done" -> { dir =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        ArtifactCache.retireLocked(s, fs, dir): Unit
-        touch(dir, "markers/gc.done")
-      }))
-  }
-
   private def readIvfPqModel(s: org.apache.spark.sql.SparkSession,
       idx: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val cents = Tables.parquet(s, idx + "/centroids").collect()
@@ -1432,11 +1355,16 @@ object PipelineQueries {
   private def materializedBpeRefreshDir(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
     val frozen = materializedBpeBaseDir(s, d)
-    val threshold = s.conf.getOption("spark.graft.bpe.refreshCptMicro")
-      .map(_.toLong).getOrElse(Long.MaxValue)
-    if (bpeCompressionMicro(s, d, frozen) >= threshold) frozen
+    if (bpeCompressionMicro(s, d, frozen) >= bpeRefreshCptMicro(s)) frozen
     else materializedBpeRetrainDir(s, d)
   }
+
+  /** The tokenizer refresh threshold: compression (chars-per-token
+    * micros) below it retrains. Default Long.MaxValue forces the retrain.
+    */
+  private def bpeRefreshCptMicro(s: org.apache.spark.sql.SparkSession): Long =
+    s.conf.getOption("spark.graft.bpe.refreshCptMicro")
+      .map(_.toLong).getOrElse(Long.MaxValue)
 
   /** The retrained merge table — the fresh registry version a fired
     * tokenizer refresh serves (shared by the compression-triggered
@@ -1451,90 +1379,41 @@ object PipelineQueries {
         Bpe.trainMergesHist(t(s, d, "documents"), col("text"), 16, 3), dir)
     }
 
-  /** The tokenizer registry under the CURRENT pointer — pointer parity
-    * with the IVF store (materializedIvfRegistryDir): v0 = the frozen
-    * base-slice-trained merge table, published; the refresh stage reads
-    * v0's corpus compression (the same trigger as q_bpe_refresh) and on
-    * a trip trains v1 on the current corpus and FLIPS the pointer only
-    * after v1's table is committed; the gc stage retires unpointed
-    * versions under the build lease. Every stage is marker-committed —
-    * a crash resumes at the first missing marker.
+  /** The tokenizer [[ArtifactCache.registry]] (`q_bpe_serve_current`):
+    * v0 = the frozen base-slice merge table ([[materializedBpeBaseDir]]);
+    * trips = v0's corpus compression under `spark.graft.bpe.refreshCptMicro`
+    * (the q_bpe_refresh trigger); v1 = merges retrained on the current
+    * corpus.
     */
   private[graft] def materializedBpeRegistryDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def touch(dir: String, marker: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$marker")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p.getParent)
-      fs.create(p, true).close()
-    }
-    ArtifactCache.staged(s, d, "documents",
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ArtifactCache.registry(s, d, "documents",
         gatedTag(s, "bpereg",
-          "spark.graft.bpe.refreshCptMicro" -> Long.MaxValue.toString), Seq(
-      "markers/v0.done" -> { dir =>
-        Tables.parquet(s, materializedBpeBaseDir(s, d)).coalesce(1)
-          .write.mode("overwrite").parquet(dir + "/v0")
-        ArtifactCache.publishCurrent(s, dir, "v0")
-        touch(dir, "markers/v0.done")
-      },
-      "markers/refresh.done" -> { dir =>
-        val threshold = s.conf.getOption("spark.graft.bpe.refreshCptMicro")
-          .map(_.toLong).getOrElse(Long.MaxValue)
-        if (bpeCompressionMicro(s, d, dir + "/v0") < threshold) {
-          storeMerges(s,
-            Bpe.trainMergesHist(t(s, d, "documents"), col("text"), 16, 3),
-            dir + "/v1")
-          ArtifactCache.publishCurrent(s, dir, "v1")
-        }
-        touch(dir, "markers/refresh.done")
-      },
-      "markers/gc.done" -> { dir =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        ArtifactCache.retireLocked(s, fs, dir): Unit
-        touch(dir, "markers/gc.done")
-      }))
-  }
+          "spark.graft.bpe.refreshCptMicro" -> Long.MaxValue.toString))(
+      snapshot = copyTable(s, materializedBpeBaseDir(s, d), _),
+      trips = v0 => bpeCompressionMicro(s, d, v0) < bpeRefreshCptMicro(s),
+      rebuild = storeMerges(s,
+        Bpe.trainMergesHist(t(s, d, "documents"), col("text"), 16, 3), _))
 
-  /** The classifier registry under the CURRENT pointer — same shape:
-    * v0 = the frozen base-slice-trained weight table; the refresh stage
-    * reads the drift panel's quality PSI (the q_classifier_refresh
-    * gate) and on a trip trains v1 on the current corpus and flips the
-    * pointer after commit; gc retires unpointed versions.
+  /** The classifier [[ArtifactCache.registry]] (`q_lr_serve_current`):
+    * v0 = the frozen base-slice weight table
+    * ([[materializedLrBaseModelDir]]); trips = the drift panel's quality
+    * PSI (the q_classifier_refresh gate); v1 = the current-corpus model
+    * ([[materializedLrModelDir]]).
     */
   private[graft] def materializedLrRegistryDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    def touch(dir: String, marker: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$marker")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p.getParent)
-      fs.create(p, true).close()
-    }
-    ArtifactCache.staged(s, d, "documents",
-        gatedTag(s, "lrreg",
-          "spark.graft.lr.refreshPsiMicro" -> "-1"), Seq(
-      "markers/v0.done" -> { dir =>
-        Tables.parquet(s, materializedLrBaseModelDir(s, d)).coalesce(1)
-          .write.mode("overwrite").parquet(dir + "/v0")
-        ArtifactCache.publishCurrent(s, dir, "v0")
-        touch(dir, "markers/v0.done")
-      },
-      "markers/refresh.done" -> { dir =>
-        val psi = panelPsiBySource(s, d, "quality").localCheckpoint(true)
-        if (panelTrips(psi, s, "spark.graft.lr.refreshPsiMicro")) {
-          Tables.parquet(s, materializedLrModelDir(s, d)).coalesce(1)
-            .write.mode("overwrite").parquet(dir + "/v1")
-          ArtifactCache.publishCurrent(s, dir, "v1")
-        }
-        touch(dir, "markers/refresh.done")
-      },
-      "markers/gc.done" -> { dir =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        ArtifactCache.retireLocked(s, fs, dir): Unit
-        touch(dir, "markers/gc.done")
-      }))
-  }
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ArtifactCache.registry(s, d, "documents",
+        gatedTag(s, "lrreg", "spark.graft.lr.refreshPsiMicro" -> "-1"))(
+      snapshot = copyTable(s, materializedLrBaseModelDir(s, d), _),
+      trips = _ => panelTrips(panelPsiBySource(s, d, "quality"), s,
+        "spark.graft.lr.refreshPsiMicro"),
+      rebuild = copyTable(s, materializedLrModelDir(s, d), _))
+
+  /** Copy the single-table artifact at `src` into one file at `dst`. */
+  private def copyTable(s: org.apache.spark.sql.SparkSession, src: String,
+      dst: String): Unit =
+    Tables.parquet(s, src).coalesce(1).write.mode("overwrite").parquet(dst)
 
   /** The drift-panel term table (q_drift_panel's computation, unordered):
     * per (mixture source, feature, bucket), the exact-integer PSI and JS
@@ -1798,16 +1677,8 @@ object PipelineQueries {
     */
   private def materializedLrModelDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ArtifactCache.dir(s, d, "documents", "lrmodel", Seq("_SUCCESS")) { dir =>
-      import s.implicits._
-      val docs = tFan(s, d, "documents")
-      val trained = TextAnalysis.logisticTrainN(docs, "text",
-        when(col("source") === "src0", 1L).otherwise(0L),
-        LrInitWeights, steps = 2, lrMicro = 1000000L, n = docs.count())
-      trained.zipWithIndex.map { case (w, b) => (b.toLong, w) }
-        .toDF("bucket", "w_micro").coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-    }
+    ArtifactCache.dir(s, d, "documents", "lrmodel", Seq("_SUCCESS"))(
+      storeLr(s, tFan(s, d, "documents"), _))
 
   /** The FROZEN classifier model — trained on the base slice only
     * (doc_id % 4 ≠ 3, the as-of slice every frozen artifact in the
@@ -1817,16 +1688,23 @@ object PipelineQueries {
     */
   private def materializedLrBaseModelDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ArtifactCache.dir(s, d, "documents", "lrbase", Seq("_SUCCESS")) { dir =>
-      import s.implicits._
-      val base = t(s, d, "documents").filter(col("doc_id") % 4 =!= 3)
-      val trained = TextAnalysis.logisticTrainN(base, "text",
-        when(col("source") === "src0", 1L).otherwise(0L),
-        LrInitWeights, steps = 2, lrMicro = 1000000L, n = base.count())
-      trained.zipWithIndex.map { case (w, b) => (b.toLong, w) }
-        .toDF("bucket", "w_micro").coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-    }
+    ArtifactCache.dir(s, d, "documents", "lrbase", Seq("_SUCCESS"))(
+      storeLr(s, t(s, d, "documents").filter(col("doc_id") % 4 =!= 3), _))
+
+  /** Train the two-step classifier on `corpus` (label: source == src0)
+    * and store its 256-row (bucket, w_micro) weight table in `dir` — the
+    * ONE trainer behind the current-corpus and the frozen model.
+    */
+  private def storeLr(s: org.apache.spark.sql.SparkSession,
+      corpus: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    import s.implicits._
+    val trained = TextAnalysis.logisticTrainN(corpus, "text",
+      when(col("source") === "src0", 1L).otherwise(0L),
+      LrInitWeights, steps = 2, lrMicro = 1000000L, n = corpus.count())
+    trained.zipWithIndex.map { case (w, b) => (b.toLong, w) }
+      .toDF("bucket", "w_micro").coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+  }
 
   /** DuckDB word-frequency histogram of the spaced form — the oracle twin
     * of `Bpe.wordHistogram` (words = `|`-separated segments, guard-spaced,
@@ -2974,23 +2852,16 @@ object PipelineQueries {
       }),
 
     // SERVE THROUGH THE POINTER — the registry's production read path:
-    // the consumer never re-derives the blue/green choice from the
-    // trigger; it reads the atomic CURRENT pointer and queries that
-    // version whole (materializedIvfRegistryDir: v0 = frozen snapshot,
-    // v1 = forced refresh, pointer flipped AFTER v1's markers commit,
-    // then the gc stage retires v0 under the same lease). Pointer → v1,
-    // so the oracle is the unrestricted full-corpus IVF chain — the
-    // registered row also PROVES the gc never touched the pointed
-    // version, because the serve runs after it. ConcurrencySpec pins
-    // the pointer/GC laws; SimilaritySpec pins serve-current ==
-    // q_ann_refresh row-for-row.
+    // the consumer reads the CURRENT pointer of materializedIvfRegistryDir
+    // and queries that version whole. Pointer → v1 (forced refresh), so
+    // the oracle is the unrestricted full-corpus IVF chain; the serve
+    // runs after gc, so the row also proves gc spared the pointed
+    // version. SimilaritySpec pins serve-current == q_ann_refresh.
     Q("q_ann_serve_current", IvfOracleSql,
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val reg = materializedIvfRegistryDir(s, d)
-        val cur = ArtifactCache.readCurrent(s, reg).getOrElse(
-          throw new IllegalStateException(s"registry $reg has no current pointer"))
-        val idx = s"$reg/$cur"
+        val idx = s"$reg/${ArtifactCache.current(s, reg)}"
         Similarity.ivfKnnFromIndex(
             Tables.parquet(s, idx + "/postings"),
             emb.filter(col("vec_id") < 5),
@@ -3016,18 +2887,8 @@ object PipelineQueries {
       (s, d) => {
         import s.implicits._
         val reg = materializedIvfRegistryDir(s, d)
-        val cur = ArtifactCache.readCurrent(s, reg).getOrElse("")
-        val fs = new org.apache.hadoop.fs.Path(reg)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val vName = "v(\\d+)".r
-        val versions = fs.listStatus(new org.apache.hadoop.fs.Path(reg))
-          .toSeq
-          .filter(st => st.isDirectory && (st.getPath.getName match {
-            case vName(_) => true
-            case _ => false
-          }))
-          .map(_.getPath.getName).sorted
-        versions.map { v =>
+        val cur = ArtifactCache.current(s, reg)
+        ArtifactCache.versions(s, reg).map { v =>
           (v, if (v == cur) 1L else 0L,
             Tables.parquet(s, s"$reg/$v/postings").count())
         }.toDF("version", "is_current", "n_vecs")
@@ -3063,18 +2924,10 @@ object PipelineQueries {
              |) ORDER BY family""".stripMargin),
       (s, d) => {
         import s.implicits._
-        val vName = "v(\\d+)".r
         def audit(family: String, reg: String, nGens: Long,
             payload: String => String): (String, String, Long, Long, Long) = {
-          val cur = ArtifactCache.readCurrent(s, reg).getOrElse("")
-          val fs = new org.apache.hadoop.fs.Path(reg)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val nVersions = fs.listStatus(new org.apache.hadoop.fs.Path(reg))
-            .count(st => st.isDirectory && (st.getPath.getName match {
-              case vName(_) => true
-              case _ => false
-            })).toLong
-          (family, cur, nVersions, nGens,
+          val cur = ArtifactCache.current(s, reg)
+          (family, cur, ArtifactCache.versions(s, reg).size.toLong, nGens,
             Tables.parquet(s, payload(s"$reg/$cur")).count())
         }
         Seq(
@@ -3669,23 +3522,17 @@ object PipelineQueries {
           .orderBy("q_id", "rn")
       }),
 
-    // The COMPRESSED index served THROUGH THE REGISTRY POINTER — the
-    // fourth and last trained family at pointer parity: v0 = the frozen
-    // append-era PQ store snapshotted, the refresh stage reads the same
-    // occupancy-OR-recall trigger as q_ann_refresh_pq and flips to the
-    // full rebuild (v1) after centroids + codebooks + codes all commit,
-    // gc retires v0 under the lease. Pointer → v1, shared builder ⇒ the
-    // oracle is the unrestricted IVF-PQ chain; the serve running after
-    // gc proves retention spared the pointed version. PqSpec pins
-    // serve-current == q_ann_refresh_pq row-for-row and
-    // exactly-one-surviving-version.
+    // The COMPRESSED index served THROUGH THE REGISTRY POINTER
+    // (materializedIvfPqRegistryDir). Pointer → v1, shared builder ⇒ the
+    // oracle is the unrestricted IVF-PQ chain. PqSpec pins serve-current
+    // == q_ann_refresh_pq row-for-row and exactly-one-surviving-version.
     Q("q_pq_serve_current", IvfPqOracleSql,
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val dir = materializedIvfPqRegistryDir(s, d)
-        val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
-        val (cents, books) = readIvfPqModel(s, s"$dir/$cur")
-        Pq.ivfPqTopK(Tables.parquet(s, s"$dir/$cur/codes"),
+        val reg = materializedIvfPqRegistryDir(s, d)
+        val idx = s"$reg/${ArtifactCache.current(s, reg)}"
+        val (cents, books) = readIvfPqModel(s, idx)
+        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
             emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
           .select(col("q_id"), col("c_id"), col("rn"))
@@ -4292,21 +4139,15 @@ object PipelineQueries {
           .orderBy("source")
       }),
 
-    // The classifier served THROUGH THE REGISTRY POINTER — the third
-    // family at pointer parity (IVF, tokenizer, classifier): v0 = the
-    // frozen base-slice model, the refresh stage reads the drift
-    // panel's quality PSI and flips to the current-corpus retrain (v1)
-    // after its weight table commits, gc retires v0 under the lease.
-    // Pointer → v1 and exact-Long training round-trips parquet, so the
-    // oracle is the unrestricted two-step train→apply chain; the serve
-    // running after gc proves retention never touched the pointed
-    // version. TextAnalysisSpec pins serve-current ==
+    // The classifier served THROUGH THE REGISTRY POINTER
+    // (materializedLrRegistryDir). Pointer → v1 and exact-Long training
+    // round-trips parquet, so the oracle is the unrestricted two-step
+    // train→apply chain. TextAnalysisSpec pins serve-current ==
     // q_linear_train_apply row-for-row.
     Q("q_lr_serve_current", LrTrainApplyOracleSql,
       (s, d) => {
-        val dir = materializedLrRegistryDir(s, d)
-        val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
-        val weights = Tables.parquet(s, s"$dir/$cur")
+        val reg = materializedLrRegistryDir(s, d)
+        val weights = Tables.parquet(s, s"$reg/${ArtifactCache.current(s, reg)}")
           .collect().map(r => (r.getLong(0), r.getLong(1)))
           .sortBy(_._1).map(_._2).toSeq
         TextAnalysis.linearMargins(t(s, d, "documents"), "doc_id", "text",
@@ -4959,20 +4800,14 @@ object PipelineQueries {
           .orderBy("source")
       }),
 
-    // The tokenizer served THROUGH THE REGISTRY POINTER — pointer parity
-    // with q_ann_serve_current: the consumer reads the atomic CURRENT
-    // pointer (v0 = frozen base table, flipped to v1 after the
-    // compression-triggered retrain commits, unpointed versions retired
-    // under the lease) and encodes under that version, never re-deriving
-    // the trigger. Pointer → v1, so the oracle is the retrained-encode
-    // chain shared with q_bpe_refresh — and the row also proves the gc
-    // stage never touched the pointed version, because the serve runs
-    // after it. BpeSpec pins serve-current == q_bpe_refresh row-for-row.
+    // The tokenizer served THROUGH THE REGISTRY POINTER
+    // (materializedBpeRegistryDir). Pointer → v1, so the oracle is the
+    // retrained-encode chain shared with q_bpe_refresh. BpeSpec pins
+    // serve-current == q_bpe_refresh row-for-row.
     Q("q_bpe_serve_current", BpeRetrainedEncodeOracleSql,
       (s, d) => {
-        val dir = materializedBpeRegistryDir(s, d)
-        val cur = ArtifactCache.readCurrent(s, dir).getOrElse("v0")
-        val merges = loadMerges(s, s"$dir/$cur")
+        val reg = materializedBpeRegistryDir(s, d)
+        val merges = loadMerges(s, s"$reg/${ArtifactCache.current(s, reg)}")
         val toks = Bpe.encode(col("text"), merges)
         t(s, d, "documents").filter(col("doc_id") < 300)
           .select(col("doc_id"),

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Concurrent-caller contract: the library runs inside notebook servers
   * and multi-tenant drivers where SEVERAL queries execute on ONE
@@ -402,6 +403,124 @@ class ConcurrencySpec extends SparkTestBase {
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
     }
+  }
+
+  // ---- the registry verb: v0 -> refresh -> gc over stub stages --------
+
+  /** A registry over stub stages that count their runs; each version
+    * stage writes one file into the version dir it is handed.
+    */
+  private class StubRegistry(tag: String, trip: Boolean, failRebuilds: Int = 0) {
+    val snapshots = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tripReads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rebuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+    private def write(v: String): Unit = {
+      assert(new java.io.File(v).mkdirs())
+      assert(new java.io.File(v, "part-0").createNewFile())
+    }
+    def run(): String = graft.queries.ArtifactCache.registry(
+        spark, sf, "documents", tag)(
+      snapshot = v => { snapshots.incrementAndGet(); write(v) },
+      trips = v0 => {
+        tripReads.incrementAndGet()
+        assert(v0.endsWith("/v0") && new java.io.File(v0, "part-0").exists(),
+          s"trips must be handed the committed v0 dir, got $v0")
+        trip
+      },
+      rebuild = v => {
+        if (rebuilds.incrementAndGet() <= failRebuilds)
+          throw new IllegalStateException("rebuild failed")
+        write(v)
+      })
+    def counts: (Int, Int, Int) = (snapshots.get(), tripReads.get(), rebuilds.get())
+  }
+
+  private def versions(dir: String): Seq[String] =
+    graft.queries.ArtifactCache.versions(spark, dir)
+
+  private def current(dir: String): String =
+    graft.queries.ArtifactCache.current(spark, dir)
+
+  test("registry verb: a trip ends at v1 alone and pointed; a second call runs no stage") {
+    withScratchRegistry { _ =>
+      val reg = new StubRegistry("regtrip", trip = true)
+      val dir = reg.run()
+      assert(versions(dir) == Seq("v1"))
+      assert(current(dir) == "v1")
+      assert(reg.counts == ((1, 1, 1)), "snapshot, trips and rebuild must each run once")
+      Seq("v0", "refresh", "gc").foreach { m =>
+        assert(new java.io.File(dir, s"markers/$m.done").exists(), s"no $m marker")
+      }
+      assert(reg.run() == dir)
+      assert(reg.counts == ((1, 1, 1)), "a complete registry must run no stage")
+    }
+  }
+
+  test("registry verb: no trip ends at v0 alone and pointed; rebuild never runs") {
+    withScratchRegistry { _ =>
+      val reg = new StubRegistry("regfrozen", trip = false)
+      val dir = reg.run()
+      assert(versions(dir) == Seq("v0"))
+      assert(current(dir) == "v0")
+      assert(reg.counts == ((1, 1, 0)))
+    }
+  }
+
+  test("registry verb: a failed rebuild keeps the pointer on v0; the next call runs only refresh and gc") {
+    withScratchRegistry { root =>
+      val reg = new StubRegistry("regretry", trip = true, failRebuilds = 1)
+      val e = intercept[IllegalStateException](reg.run())
+      assert(e.getMessage == "rebuild failed")
+      val dirs = new java.io.File(root).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("graft_regretry_cache_"))
+        .map(_.getPath).toSeq
+      assert(dirs.size == 1, dirs)
+      val dir = dirs.head
+      assert(current(dir) == "v0")
+      assert(versions(dir) == Seq("v0"))
+      assert(new java.io.File(dir, "markers/v0.done").exists())
+      assert(!new java.io.File(dir, "markers/refresh.done").exists(),
+        "a failed refresh must not commit its marker")
+      assert(!new java.io.File(dir + ".lease").exists(), "the lease must be released")
+      assert(reg.run() == dir)
+      assert(reg.counts == ((1, 2, 2)), "the retry must not re-run the snapshot")
+      assert(versions(dir) == Seq("v1"))
+      assert(current(dir) == "v1")
+    }
+  }
+
+  test("registry current: a cold registry dir throws, naming the dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    try {
+      val e = intercept[IllegalStateException](current(root))
+      assert(e.getMessage.contains(root), e.getMessage)
+    } finally new java.io.File(root).delete(): Unit
+  }
+
+  test("registry versions: only v<N> directories, in version order") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ver").toFile
+    try {
+      Seq("v0", "v10", "v3", "v1.bak", "markers", "version").foreach { d =>
+        assert(new java.io.File(root, d).mkdirs())
+      }
+      assert(new java.io.File(root, "v2").createNewFile()) // a file, not a version
+      graft.queries.ArtifactCache.publishCurrent(spark, root.getPath, "v3")
+      assert(versions(root.getPath) == Seq("v0", "v3", "v10"))
+      assert(versions(new java.io.File(root, "absent").getPath).isEmpty)
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(root.getPath)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
+    }
+  }
+
+  test("the registry layout is written only by ArtifactCache in src/main") {
+    val layout = """publishCurrent\(|readCurrent\(|retireLocked\(|"markers/""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => layout.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toSeq
+    assert(hits == Seq("graft/queries/ArtifactCache.scala"))
   }
 
   test("nextGen: cold store -> 0; only COMMITTED generations count; gaps resume past the max") {
