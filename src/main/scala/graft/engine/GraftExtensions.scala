@@ -13,7 +13,9 @@ import graft.functions.GraftFunctions
   * (name-keyed function nodes with no registry,
   * /root/reference/src/planner/logicalplan.rs:64-80). Sessions not built
   * with extensions can still call GraftFunctions.register for the same
-  * effect at runtime.
+  * effect at runtime. The size rule is not injected here: an injected
+  * optimizer rule runs in another batch than one added at runtime, so
+  * both paths reach it through GraftFunctions.installPlanner.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

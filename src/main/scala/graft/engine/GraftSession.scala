@@ -10,14 +10,19 @@ import org.apache.spark.sql.SparkSession
   * /root/reference) whose "session" is a fresh parser+planner per line. Our
   * session is a configured SparkSession: Catalyst supplies the
   * parse/analyze/optimize/execute lifecycle the reference only declares
-  * (`README.md:10`), and [[GraftExtensions]] adds our custom functions and
-  * the as-of planner strategy.
+  * (`README.md:10`), [[GraftExtensions]] adds our custom functions and
+  * the as-of planner strategy, and
+  * [[graft.functions.GraftFunctions.installPlanner]] the size rule.
   *
   * Scale notes (100 TB posture, tested at local[32]):
   *  - AQE on: runtime coalescing, skew-join splitting, join-strategy switch.
   *  - shuffle.partitions = the context's default parallelism (the core
   *    count locally); on a real cluster this is overridden per-job (or left
   *    to AQE's coalescing from a high initial).
+  *  - a batch query whose file inputs sum under
+  *    [[graft.plans.SmallInput.ThresholdBytes]] runs as one partition with
+  *    no exchange ([[graft.plans.SmallInput]]); everything above it plans
+  *    exactly as the two points above say.
   *  - session TZ pinned UTC so timestamp semantics match the DuckDB oracle.
   */
 object GraftSession {
@@ -38,6 +43,7 @@ object GraftSession {
     spark.conf.set("spark.sql.shuffle.partitions",
       spark.sparkContext.defaultParallelism.toString)
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.installPlanner(spark)
     spark
   }
 }

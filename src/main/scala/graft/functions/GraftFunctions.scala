@@ -70,25 +70,36 @@ object GraftFunctions {
       "sorted_intersect_size(a, b) - intersection size of two ascending long arrays",
       exprs => SortedIntersectSize(exprs(0), exprs(1))))
 
-  /** Registers every [[table]] function and the as-of join on `spark`.
-    * Idempotent; safe to call per-query on a shared session.
+  /** Registers every [[table]] function and the planner additions of
+    * [[installPlanner]] on `spark`. Idempotent; safe to call per-query on a
+    * shared session.
     */
   def register(spark: SparkSession): Unit = {
-    installAsOf(spark)
+    installPlanner(spark)
     val reg = spark.sessionState.functionRegistry
     table.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
   }
 
-  /** Adds the as-of planner strategy and its filter-pushdown rule unless the
-    * session's planner already has the strategy — also when the extensions
-    * injected it. Idempotent.
+  /** Adds graft's planner additions to `spark`, each unless already there:
+    *  - the as-of planner strategy and its filter-pushdown rule, unless the
+    *    session's planner has the strategy (also when the extensions
+    *    injected it);
+    *  - the size rule [[graft.plans.SmallInput]] and the strategy that
+    *    plans its nodes, unless the session runs a size rule (of any
+    *    threshold); the rule runs in the optimizer's user-provided batch.
+    * The session factory, [[register]] and the as-of join all call this, so
+    * every session plans with the same rules in the same batches.
+    * Idempotent.
     */
-  def installAsOf(spark: SparkSession): Unit = synchronized {
+  def installPlanner(spark: SparkSession): Unit = synchronized {
+    val exp = spark.experimental
     if (!spark.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PushFilterThroughAsOfJoin
+      exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.PushFilterThroughAsOfJoin
+    }
+    if (!exp.extraOptimizations.exists(_.isInstanceOf[graft.plans.SmallInput])) {
+      exp.extraStrategies = exp.extraStrategies :+ graft.plans.OnePartitionStrategy
+      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.SmallInput.rule
     }
   }
 }

@@ -192,13 +192,13 @@ object AsOfJoin {
   /** The same semantics through the custom-operator path: a Catalyst
     * logical node ([[graft.plans.AsOfJoinNode]]) lowered by a planner
     * strategy to a merge-based physical operator. The strategy is installed
-    * on the session on first use (GraftFunctions.installAsOf).
+    * on the session on first use (GraftFunctions.installPlanner).
     */
   def native(left: DataFrame, right: DataFrame, keyCol: String,
       leftTsCol: String, rightTsCol: String,
       payloadCols: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    graft.functions.GraftFunctions.installAsOf(spark)
+    graft.functions.GraftFunctions.installPlanner(spark)
     val lPlan = left.queryExecution.analyzed
     // Re-alias every right column: when both sides derive from the same
     // base DataFrame they share exprIds, and an ambiguous key attribute

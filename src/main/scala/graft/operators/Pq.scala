@@ -161,7 +161,7 @@ object Pq {
   /** Approximate distance of one code against a query's LUT: an O(m)
     * fold of O(1) lookups.
     */
-  private def adcDist(lut: Column, code: Column, m: Int): Column =
+  private[graft] def adcDist(lut: Column, code: Column, m: Int): Column =
     aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
       (acc, s) => acc +
         element_at(element_at(lut, s + 1), element_at(code, s + 1) + 1))
@@ -190,29 +190,6 @@ object Pq {
       .as[Scored]
     Similarity.partialTopK(scored, k)
       .select(col("q_id"), col("c_id"), col("rn"), negate(col("sim")).as("adc_dist"))
-  }
-
-  /** Single-vector convenience over [[adcTopKBatch]]'s plan shape — the
-    * per-subspace distance table becomes a literal; kept for callers
-    * with one ad-hoc query. Returns (idCol, adc_dist), the k smallest
-    * by (distance, id) — lowers to TakeOrderedAndProject.
-    */
-  def adcTopK(encoded: DataFrame, idCol: String, codeCol: String,
-      query: Array[Double], books: Array[Array[Array[Double]]], k: Int): DataFrame = {
-    val m = books.length
-    val d0 = books(0)(0).length
-    val table: Seq[Seq[Double]] = (0 until m).map { s =>
-      val q = query.slice(s * d0, (s + 1) * d0)
-      books(s).toSeq.map { c =>
-        var acc = 0.0; var i = 0
-        while (i < d0) { val dx = q(i) - c(i); acc += dx * dx; i += 1 }
-        acc
-      }
-    }
-    val tbl = typedLit(table)
-    encoded.select(col(idCol), adcDist(tbl, col(codeCol), m).as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col(idCol).asc)
-      .limit(k)
   }
 
   /** Build the IVF-PQ index: every corpus row gets its coarse cell

@@ -117,17 +117,6 @@ object Similarity {
       }
     }
 
-  /** Bucket id = sign bits of the vector against nPlanes hyperplanes.
-    * Cosine-similar vectors collide with probability (1 - theta/pi) per
-    * plane (Charikar '02) — the standard LSH for angular distance.
-    */
-  def hyperplaneBuckets(vec: Column, nPlanes: Int, dim: Int, seed: Long = 42L): Column = {
-    val planes = hyperplanes(nPlanes, dim, seed)
-    planes.zipWithIndex.map { case (plane, p) =>
-      when(dot_product(vec, typedLit(plane.toSeq)) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** IVF-style ANN: a fixed coarse quantizer (first nCentroids corpus
     * vectors standing in for offline k-means centroids — deterministic, no
     * training pass) partitions the corpus into cells; queries probe their

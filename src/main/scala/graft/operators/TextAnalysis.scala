@@ -720,26 +720,6 @@ object TextAnalysis {
     } finally { if (steps > 1) { feats.unpersist(blocking = false); () } }
   }
 
-  /** Mean logistic loss of `weightsMicro` on the labeled frame — the
-    * training-progress metric for specs/monitoring (double-valued; not an
-    * oracle surface).
-    */
-  def logisticLoss(df: DataFrame, textCol: String, label: Column,
-      weightsMicro: Seq[Long], buckets: Int = 256): Double = {
-    val wArr = typedLit(weightsMicro)
-    val bucketOf: Column => Column = t =>
-      pmod(conv(substring(md5(t), 1, 8), 16, 10).cast("long"), lit(buckets.toLong))
-    val m = aggregate(
-      transform(filter(tokens(col(textCol)), t => t =!= ""),
-        t => element_at(wArr, (bucketOf(t) + 1).cast("int"))),
-      lit(0L), (acc, x) => acc + x).cast("double") / lit(1e6)
-    val y = label.cast("double")
-    // -[y ln p + (1-y) ln(1-p)] in the stable log1p(exp(..)) form
-    df.select(avg(
-        when(y === 1.0, log1p(exp(-m))).otherwise(log1p(exp(m)))).as("l"))
-      .collect()(0).getDouble(0)
-  }
-
   /** Confusion-matrix evaluation of a trained hashed-BoW classifier over
     * a labeled frame — the metric pass that closes the train → apply →
     * EVALUATE loop (a quality gate nobody measured is a quality gate

@@ -140,7 +140,7 @@ case class AsOfJoinExec(
 
 /** Planner strategy lowering [[AsOfJoinNode]] to [[AsOfJoinExec]] —
   * injected by [[graft.engine.GraftExtensions]], or added once by
-  * [[graft.functions.GraftFunctions.installAsOf]] on other sessions.
+  * [[graft.functions.GraftFunctions.installPlanner]] on other sessions.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -477,16 +477,18 @@ private[graft] object ArtifactCache {
   def publishCurrent(s: SparkSession, dir: String, version: String): Unit = {
     val cur = new Path(s"$dir/current")
     val fs = cur.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$dir/current.tmp.${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(version.getBytes("UTF-8"))
-    out.close()
+    val tmp = new Path(s"$dir/$TmpPrefix${java.util.UUID.randomUUID()}")
     if (fs.getScheme == "file") {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(cur.toUri.getPath),
+      // written through NIO, not Hadoop's checksummed local FS: its `.crc`
+      // sidecar would not follow the rename and stay behind on every flip
+      val local = java.nio.file.Paths.get(tmp.toUri.getPath)
+      java.nio.file.Files.write(local, version.getBytes("UTF-8"))
+      java.nio.file.Files.move(local, java.nio.file.Paths.get(cur.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
     } else {
+      val out = fs.create(tmp, true)
+      out.write(version.getBytes("UTF-8"))
+      out.close()
       if (fs.exists(cur)) fs.delete(cur, false): Unit
       if (!fs.rename(tmp, cur))
         throw new java.io.IOException(s"cannot publish pointer $cur")
@@ -533,14 +535,25 @@ private[graft] object ArtifactCache {
   /** GC body — caller MUST hold `dir`'s build lease ([[registry]]'s gc
     * stage does; the standalone verb is [[retireUnreferenced]]).
     */
-  private def retireLocked(s: SparkSession, dir: String): Seq[String] =
+  private def retireLocked(s: SparkSession, dir: String): Seq[String] = {
+    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a pointer temp file outlives its flip only as litter (a `.crc`
+    // sidecar of an older checksummed write, or a flip cut short); flips
+    // hold the same lease, so none is in flight here
+    if (fs.exists(new Path(dir)))
+      fs.listStatus(new Path(dir)).map(_.getPath)
+        .filter(p => p.getName.startsWith(TmpPrefix) || p.getName.startsWith(s".$TmpPrefix"))
+        .foreach(fs.delete(_, false))
     readCurrent(s, dir) match {
       case None => Seq.empty
       case Some(cur) =>
-        val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
         versions(s, dir).filterNot(_ == cur)
           .map { v => fs.delete(new Path(s"$dir/$v"), true); v }
     }
+  }
+
+  /** Name prefix of [[publishCurrent]]'s temp file. */
+  private val TmpPrefix = "current.tmp."
 
   /** The append-night GENERATION COUNTER: the next free generation under
     * `dir/sub` (hive layout `sub/gen=N`, committed = `_SUCCESS` present)

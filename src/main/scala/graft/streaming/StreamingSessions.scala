@@ -79,8 +79,7 @@ class GapSessionProcessor(gapMs: Long)
 /** Structured-Streaming forms of the event-time operators. The reference is
   * batch-only (a REPL'd compiler, /root/reference/src/main.rs:31-59);
   * streaming is north-star surface, realized with Spark's native event-time
-  * machinery: watermarks bound state, windows/session windows aggregate,
-  * dropDuplicatesWithinWatermark dedups late-arriving retries.
+  * machinery: watermarks bound state, session windows aggregate.
   *
   * Every function takes a streaming *or* batch DataFrame — the plans are
   * identical modulo the sink, which is how the batch oracle queries
@@ -88,22 +87,6 @@ class GapSessionProcessor(gapMs: Long)
   * streaming jobs run in production.
   */
 object StreamingSessions {
-
-  /** Tumbling/sliding window counts with a watermark bounding state. */
-  def windowedCounts(events: DataFrame, tsCol: String, watermark: String,
-      window_ : String, slide: Option[String] = None): DataFrame = {
-    val win = slide match {
-      case Some(sl) => window(col(tsCol), window_, sl)
-      case None     => window(col(tsCol), window_)
-    }
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(win, col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
-      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("event_type"), col("n"), col("value_cents"))
-  }
 
   /** Per-user session windows (gap-merge), streaming-safe. */
   def sessionCounts(events: DataFrame, tsCol: String, watermark: String,
@@ -202,13 +185,4 @@ object StreamingSessions {
       .select(col("k") +: col("l_ts") +: col("r_ts") +:
         (carryLeft.map(c => col(s"l_$c")) ++ carryRight.map(c => col(s"r_$c"))): _*)
   }
-
-  /** Exactly-once-ish event dedup within the watermark horizon — the
-    * streaming analog of Dedup.exact for at-least-once upstreams.
-    */
-  def dedupWithinWatermark(events: DataFrame, tsCol: String,
-      watermark: String, keyCols: Seq[String]): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 }

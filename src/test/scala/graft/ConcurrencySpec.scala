@@ -309,6 +309,30 @@ class ConcurrencySpec extends SparkTestBase {
 
   // ---- versioned registry: CURRENT pointer + retention laws -----------
 
+  test("registry pointer: N flips leave no temp file or .crc sidecar; gc sweeps old ones") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ptr").toFile
+    def litter: Seq[String] = root.list().toSeq.filter(_.contains("current.tmp")).sorted
+    try {
+      (0 until 20).foreach { i =>
+        graft.queries.ArtifactCache.publishCurrent(spark, root.getPath, s"v${i % 2}")
+        assert(litter.isEmpty, s"flip $i left ${litter.mkString(", ")}")
+      }
+      assert(root.list().toSeq.sorted == Seq("current"))
+      assert(graft.queries.ArtifactCache.readCurrent(spark, root.getPath).contains("v1"))
+      // what a checksummed write left behind before: the gc verb removes it
+      val old = java.util.UUID.randomUUID()
+      assert(new java.io.File(root, s".current.tmp.$old.crc").createNewFile())
+      assert(new java.io.File(root, s"current.tmp.$old").createNewFile())
+      assert(new java.io.File(root, "v1").mkdir())
+      assert(graft.queries.ArtifactCache.retireUnreferenced(spark, root.getPath).isEmpty)
+      assert(litter.isEmpty, s"gc left ${litter.mkString(", ")}")
+      assert(root.list().toSeq.sorted == Seq("current", "v1"))
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(root.getPath)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
+    }
+  }
+
   test("registry pointer: concurrent flips are atomic — readers see old or new, never partial") {
     val root = java.nio.file.Files.createTempDirectory("graft-ptr").toString
     try {

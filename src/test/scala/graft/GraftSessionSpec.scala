@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.graft.PlainSession
 import graft.functions.GraftFunctions
 
@@ -63,6 +63,9 @@ class GraftSessionSpec extends SparkTestBase {
     assert(cos == 1.0)
   }
 
+  private def sizeRules(s: SparkSession): Int =
+    s.experimental.extraOptimizations.count(_.isInstanceOf[graft.plans.SmallInput])
+
   test("the as-of strategy is installed once whichever path ran") {
     import spark.implicits._
     def asOfJoin(s: SparkSession): Unit = {
@@ -72,18 +75,38 @@ class GraftSessionSpec extends SparkTestBase {
         .select(col("v")).as[Long].collect()
       assert(got.toSeq == Seq(7L))
     }
+    assert(sizeRules(spark) == 1)
     GraftFunctions.register(spark)
     asOfJoin(spark)
     GraftFunctions.register(spark)
     assert(asOfStrategies(spark) == 1)
+    assert(sizeRules(spark) == 1)
     assert(!spark.experimental.extraOptimizations.contains(graft.plans.PushFilterThroughAsOfJoin))
 
     val plain = PlainSession.on(spark)
-    assert(asOfStrategies(plain) == 0)
+    assert(asOfStrategies(plain) == 0 && sizeRules(plain) == 0)
     asOfJoin(plain)
+    assert(asOfStrategies(plain) == 1 && sizeRules(plain) == 1)
     GraftFunctions.register(plain)
     asOfJoin(plain)
     assert(asOfStrategies(plain) == 1)
     assert(plain.experimental.extraOptimizations.count(_ eq graft.plans.PushFilterThroughAsOfJoin) == 1)
+    assert(plain.experimental.extraOptimizations.count(_ eq graft.plans.SmallInput.rule) == 1)
+  }
+
+  test("the factory session and a register-only session optimize a query the same way") {
+    val plain = PlainSession.on(spark)
+    GraftFunctions.register(plain)
+    def optimized(s: SparkSession): String = {
+      val orders = Tables.t(s, sf, "orders")
+      val customer = Tables.t(s, sf, "customer")
+      orders.join(customer, col("o_custkey") === col("c_custkey"))
+        .groupBy("c_name").agg(sum("o_totalprice").as("t"))
+        .orderBy(col("t").desc, col("c_name"))
+        .queryExecution.optimizedPlan.treeString.replaceAll("#\\d+", "#")
+    }
+    val factory = optimized(spark)
+    assert(factory.contains("Repartition 1, false"), factory)
+    assert(optimized(plain) == factory)
   }
 }

@@ -68,7 +68,7 @@ class LintSpec extends SparkTestBase {
   }
 
   test("SINGLE_PARTITION warns on repartition(1) of raw rows, not on a global aggregate") {
-    val li = Tables.t(spark, sf, "lineitem")
+    val li = Tables.t(distributed, sf, "lineitem")
     assert(rules(li.repartition(1)).contains("SINGLE_PARTITION"))
     // global agg funnels through SinglePartition BELOW a partial agg — fine
     assert(!rules(li.agg(sum("l_quantity"))).contains("SINGLE_PARTITION"))

@@ -7,11 +7,11 @@ package graft
   */
 class PlanAuditSpec extends SparkTestBase {
 
-  private def physical(q: String): String = {
+  private def physical(q: String, s: org.apache.spark.sql.SparkSession = spark): String = {
     // other suites cache these tables; cached plans replace FileSourceScan
     // with InMemoryTableScan and would hide the scan-level assertions
     spark.catalog.clearCache()
-    SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.queries(q)(s, sf).queryExecution.executedPlan.toString
   }
 
   /** Untruncated pushed-filter metadata of every parquet scan in the plan
@@ -44,8 +44,8 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("dimension joins broadcast (no shuffle of the fact side)") {
-    assert(physical("q_join_inner").contains("BroadcastHashJoin"))
-    val multi = physical("q_join_multi")
+    assert(physical("q_join_inner", distributed).contains("BroadcastHashJoin"))
+    val multi = physical("q_join_multi", distributed)
     assert("BroadcastHashJoin".r.findAllIn(multi).size == 3,
       "star join should be three chained broadcast hash joins")
     assert(!multi.contains("SortMergeJoin"), "dim join fell back to SMJ")
@@ -70,7 +70,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("TPC-H Q5 star: lineitem never shuffles; all dims broadcast") {
-    val p = physical("q_tpch_q5")
+    val p = physical("q_tpch_q5", distributed)
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 4,
       s"expected >=4 broadcast joins in Q5:\n$p")
     assert(!p.contains("SortMergeJoin"), "Q5 fell back to a shuffle join")
@@ -90,7 +90,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("native as-of join lowers to the custom merge exec, no nested loop") {
-    val p = physical("q_asof_native")
+    val p = physical("q_asof_native", distributed)
     assert(p.contains("AsOfJoin"), s"custom operator missing from plan:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"),
       "as-of fell back to a nested loop")
@@ -266,7 +266,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("scd2 shuffles once: both windows share one hash partitioning") {
-    val plan = physical("q_scd2")
+    val plan = physical("q_scd2", distributed)
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(hashExchanges == 1,
       s"expected 1 keyed shuffle for both stacked windows, got $hashExchanges:\n$plan")
@@ -305,7 +305,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("upsert plans as anti-join + union, no window or global sort of base") {
-    val plan = physical("q_upsert")
+    val plan = physical("q_upsert", distributed)
     assert(plan.contains("LeftAnti"), s"anti-join missing:\n$plan")
     assert(!plan.contains("Window"), s"unexpected window in upsert:\n$plan")
     // exactly ONE range exchange: the query's own final orderBy — any

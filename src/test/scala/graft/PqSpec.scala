@@ -26,7 +26,7 @@ class PqSpec extends SparkTestBase {
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
     val recalls = queries.map { case (qid, qvec) =>
-      val approx = Pq.adcTopK(encoded.filter(col("vec_id") =!= qid),
+      val approx = PqSpec.adcTopK(encoded.filter(col("vec_id") =!= qid),
           "vec_id", "pq_code", qvec, books, k)
         .collect().map(_.getLong(0)).toSet
       val exact = emb.filter(col("vec_id") =!= qid)
@@ -56,7 +56,7 @@ class PqSpec extends SparkTestBase {
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
     queries.foreach { case (qid, qvec) =>
-      val single = Pq.adcTopK(encoded.filter(col("vec_id") =!= qid),
+      val single = PqSpec.adcTopK(encoded.filter(col("vec_id") =!= qid),
           "vec_id", "pq_code", qvec, books, k)
         .collect().map(_.getLong(0)).toSet
       assert(batch(qid) == single,
@@ -347,5 +347,31 @@ class PqSpec extends SparkTestBase {
       .filter(_.matches("v\\d+")).sorted.toSeq
     assert(versions == Seq("v1"),
       s"PQ registry ${reg.getName} should hold exactly the pointed v1: $versions")
+  }
+}
+
+object PqSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Single-vector ADC top-k, the reference the batch form
+    * ([[Pq.adcTopKBatch]]) is checked against: the query's per-subspace
+    * distance table becomes a literal. Returns (idCol, adc_dist), the k
+    * smallest by (distance, id).
+    */
+  def adcTopK(encoded: DataFrame, idCol: String, codeCol: String,
+      query: Array[Double], books: Array[Array[Array[Double]]], k: Int): DataFrame = {
+    val m = books.length
+    val d0 = books(0)(0).length
+    val table: Seq[Seq[Double]] = (0 until m).map { s =>
+      val q = query.slice(s * d0, (s + 1) * d0)
+      books(s).toSeq.map { c =>
+        var acc = 0.0; var i = 0
+        while (i < d0) { val dx = q(i) - c(i); acc += dx * dx; i += 1 }
+        acc
+      }
+    }
+    encoded.select(col(idCol), Pq.adcDist(typedLit(table), col(codeCol), m).as("adc_dist"))
+      .orderBy(col("adc_dist").asc, col(idCol).asc)
+      .limit(k)
   }
 }

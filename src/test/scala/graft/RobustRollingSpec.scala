@@ -109,7 +109,7 @@ class RobustRollingSpec extends SparkTestBase {
   }
 
   test("prefix frame stays one shuffle: a single Window partition spec") {
-    import spark.implicits._
+    import distributed.implicits._
     val df = (0 until 100).map(i => ("a", i.toLong, i.toLong, i.toLong))
       .toDF("grp", "seq", "tie", "v")
     val plan = Robust.rollingZPrefix(df, "grp", "seq", "tie", col("v"), 1000)

@@ -54,7 +54,7 @@ class SimilaritySpec extends SparkTestBase {
   test("fused sign_lsh_buckets == composed per-plane hyperplane buckets") {
     val composed = emb.select(col("vec_id"),
         array((0 until 4).map { t =>
-          graft.operators.Similarity.hyperplaneBuckets(
+          SimilaritySpec.hyperplaneBuckets(
             col("embedding"), 6, 64, 42L + t * 7919L)
         }: _*).as("b"))
       .orderBy("vec_id").collect().map(_.getSeq[Long](1))
@@ -545,4 +545,18 @@ class SimilaritySpec extends SparkTestBase {
     assert(big.length == k,
       s"probe must stay $k on the 4x corpus, got ${big.length}")
   }
+}
+
+object SimilaritySpec {
+  import org.apache.spark.sql.Column
+
+  /** Bucket id = sign bits of the vector against nPlanes hyperplanes
+    * (Charikar '02), one plane per `when`: the composed form the fused
+    * `sign_lsh_buckets` expression is checked against.
+    */
+  def hyperplaneBuckets(vec: Column, nPlanes: Int, dim: Int, seed: Long): Column =
+    Similarity.hyperplanes(nPlanes, dim, seed).zipWithIndex.map { case (plane, p) =>
+      when(graft.functions.dot_product(vec, typedLit(plane.toSeq)) > 0, lit(1L << p))
+        .otherwise(lit(0L))
+    }.reduce(_ + _)
 }

@@ -68,16 +68,16 @@ class SourcesSpec extends SparkTestBase {
       "lineitem_b", "o_orderkey", 4, Some("o_orderkey"))
     // bucketed joins shortcut broadcast selection only above the threshold;
     // disable auto-broadcast so the shuffle-avoidance is what's under test
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    distributed.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = spark.table("orders_b")
-        .join(spark.table("lineitem_b"), "o_orderkey")
+      val joined = distributed.table("orders_b")
+        .join(distributed.table("lineitem_b"), "o_orderkey")
         .groupBy("o_orderstatus").count()
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning(o_orderkey"),
         s"bucketed join still shuffles on the key:\n$plan")
       assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    } finally distributed.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
   test("salted join equals plain join on skewed data") {

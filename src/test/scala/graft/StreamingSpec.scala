@@ -39,7 +39,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val out = StreamingSessions.windowedCounts(mem.toDF(), "ts", "1 hour", "10 minutes")
+    val out = StreamingSpec.windowedCounts(mem.toDF(), "ts", "1 hour", "10 minutes")
     val q = out.writeStream.outputMode("complete")
       .format("memory").queryName("windows_out").start()
     try {
@@ -96,7 +96,7 @@ class StreamingSpec extends SparkTestBase {
     def startQuery() = {
       val in = spark.readStream.schema(rawSchema).parquet(inDir)
         .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      graft.streaming.StreamingSessions
+      StreamingSpec
         .dedupWithinWatermark(in, "ts", "1 hour", Seq("event_id"))
         .writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
@@ -163,7 +163,7 @@ class StreamingSpec extends SparkTestBase {
     // not on an id column — retries with identical bodies collapse
     val keyed = mem.toDF().withColumn("fp",
       graft.functions.fingerprint64(concat_ws("|", col("user_id"), col("event_type"), col("value"))))
-    val out = graft.streaming.StreamingSessions.dedupWithinWatermark(
+    val out = StreamingSpec.dedupWithinWatermark(
       keyed, "ts", "1 hour", Seq("fp"))
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("fpdedup_out").start()
@@ -202,7 +202,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val out = StreamingSessions.dedupWithinWatermark(
+    val out = StreamingSpec.dedupWithinWatermark(
       mem.toDF().withColumn("event_key", concat(col("user_id"), lit("-"), col("event_type"))),
       "ts", "1 hour", Seq("event_key"))
     val q = out.writeStream.outputMode("append")
@@ -281,4 +281,33 @@ class StreamingSpec extends SparkTestBase {
         (2L, "view", 1L), (3L, "other", 1L)))
     } finally q.stop()
   }
+}
+
+object StreamingSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Tumbling/sliding window counts with a watermark bounding state. */
+  def windowedCounts(events: DataFrame, tsCol: String, watermark: String,
+      window_ : String, slide: Option[String] = None): DataFrame = {
+    val win = slide match {
+      case Some(sl) => window(col(tsCol), window_, sl)
+      case None     => window(col(tsCol), window_)
+    }
+    events
+      .withWatermark(tsCol, watermark)
+      .groupBy(win, col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
+      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
+        col("event_type"), col("n"), col("value_cents"))
+  }
+
+  /** Event dedup within the watermark horizon, the streaming analog of
+    * Dedup.exact for at-least-once upstreams.
+    */
+  def dedupWithinWatermark(events: DataFrame, tsCol: String,
+      watermark: String, keyCols: Seq[String]): DataFrame =
+    events
+      .withWatermark(tsCol, watermark)
+      .dropDuplicatesWithinWatermark(keyCols)
 }

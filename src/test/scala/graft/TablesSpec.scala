@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.ListenerBusBridge
 import org.apache.spark.sql.types._
 import graft.engine.GraftSql
 
@@ -146,32 +143,6 @@ class TablesSpec extends SparkTestBase {
   // --- Tables.parquet: schema inferred once per unchanged file set
 
   private val sf001 = s"${new java.io.File(sf).getParent}/sf0.01"
-
-  /** Run `body` and count the Spark jobs it started. Jobs are matched by a
-    * local property set on this thread only, so a job from any other
-    * thread cannot land in the count.
-    */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == tag)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      val a = body
-      ListenerBusBridge.drain(spark)
-      (a, jobs.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def output(df: DataFrame) =
     df.queryExecution.analyzed.output.map(a => (a.name, a.dataType, a.nullable, a.metadata))

@@ -461,14 +461,14 @@ class TextAnalysisSpec extends SparkTestBase {
     val df = (pos ++ neg).toDF("text", "y").cache()
     val y = col("y")
     val zeros = Seq.fill(256)(0L)
-    val l0 = TextAnalysis.logisticLoss(df, "text", y, zeros)
+    val l0 = TextAnalysisSpec.logisticLoss(df, "text", y, zeros)
     assert(math.abs(l0 - math.log(2.0)) < 1e-9) // zero weights = ln 2 exactly
     val w5 = TextAnalysis.logisticTrainN(df, "text", y, zeros,
       steps = 5, lrMicro = 2000000L, n = 120L)
-    val l5 = TextAnalysis.logisticLoss(df, "text", y, w5)
+    val l5 = TextAnalysisSpec.logisticLoss(df, "text", y, w5)
     val w10 = TextAnalysis.logisticTrainN(df, "text", y, w5,
       steps = 5, lrMicro = 2000000L, n = 120L)
-    val l10 = TextAnalysis.logisticLoss(df, "text", y, w10)
+    val l10 = TextAnalysisSpec.logisticLoss(df, "text", y, w10)
     assert(l5 < l0 * 0.8, s"5 steps did not train: $l0 -> $l5")
     assert(l10 < l5, s"further steps did not train: $l5 -> $l10")
     // the gradient step itself is partitioning-invariant (exact integer
@@ -503,10 +503,10 @@ class TextAnalysisSpec extends SparkTestBase {
     // the regularized step still moves loss toward the 2/3 optimum
     val conflict = ((1 to 40).map(_ => ("alpha beta gamma", 1L)) ++
       (1 to 20).map(_ => ("alpha beta gamma", 0L))).toDF("text", "y").cache()
-    val l0 = TextAnalysis.logisticLoss(conflict, "text", y, Seq.fill(256)(0L))
+    val l0 = TextAnalysisSpec.logisticLoss(conflict, "text", y, Seq.fill(256)(0L))
     val w = TextAnalysis.logisticTrainReg(conflict, "text", y, Seq.fill(257)(0L),
       steps = 5, lrMicro = 1000000L, n = 60L, l2Micro = 10000L)
-    val l5 = TextAnalysis.logisticLoss(conflict, "text", y, w.dropRight(1))
+    val l5 = TextAnalysisSpec.logisticLoss(conflict, "text", y, w.dropRight(1))
     assert(l5 < l0, s"regularized steps did not reduce loss: $l0 -> $l5")
     conflict.unpersist()
   }
@@ -828,5 +828,28 @@ class TextAnalysisSpec extends SparkTestBase {
     assert((at0._2, at0._3, at0._4, at0._5) ==
       ((ev.getLong(0), ev.getLong(1), ev.getLong(2), ev.getLong(3))),
       "curve at the eval cut drifted from q_classifier_eval_holdout")
+  }
+}
+
+object TextAnalysisSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  /** Mean logistic loss of `weightsMicro` on the labeled frame: the
+    * training-progress metric the trainer specs check.
+    */
+  def logisticLoss(df: DataFrame, textCol: String, label: Column,
+      weightsMicro: Seq[Long], buckets: Int = 256): Double = {
+    val wArr = typedLit(weightsMicro)
+    val bucketOf: Column => Column = t =>
+      pmod(conv(substring(md5(t), 1, 8), 16, 10).cast("long"), lit(buckets.toLong))
+    val m = aggregate(
+      transform(filter(TextAnalysis.tokens(col(textCol)), t => t =!= ""),
+        t => element_at(wArr, (bucketOf(t) + 1).cast("int"))),
+      lit(0L), (acc, x) => acc + x).cast("double") / lit(1e6)
+    val y = label.cast("double")
+    // -[y ln p + (1-y) ln(1-p)] in the stable log1p(exp(..)) form
+    df.select(avg(
+        when(y === 1.0, log1p(exp(-m))).otherwise(log1p(exp(m)))).as("l"))
+      .collect()(0).getDouble(0)
   }
 }

@@ -77,6 +77,18 @@ object ExplainDump {
     sb.append(s"Generated by `graft.ExplainDump` on `$sfDir` " +
       "(local[4], AQE initial plans). Regenerate after plan-affecting " +
       "changes: `sbt \"Test/runMain graft.ExplainDump\"`.\n")
+    val threshold = graft.plans.SmallInput.ThresholdBytes
+    val (below, above) = new java.io.File(sfDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .partition(f => org.apache.commons.io.FileUtils.sizeOf(f) < threshold)
+    def names(fs: Seq[java.io.File]) = fs.map(_.getName.stripSuffix(".parquet")).mkString(", ")
+    sb.append(s"\nThe size rule (`graft.plans.SmallInput`) plans a query over file scans " +
+      s"and local relations whose files sum under ${threshold >> 10} KB with no " +
+      "`Exchange`: `Coalesce 1` under each aggregate, window and global sort, " +
+      "`OnePartition` under each join side, equi-joins as shuffled-hash joins. " +
+      s"Tables under it on their own here: ${names(below.toSeq)}; over it: " +
+      s"${if (above.isEmpty) "none" else names(above.toSeq)}. A plan over a `Range`, a " +
+      "checkpointed or cached frame, or a repartition of its own keeps the distributed shape.\n")
     headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -13,3 +13,19 @@ object PlainSession {
   def on(spark: SparkSession): SparkSession =
     new classic.SparkSession(spark.sparkContext)
 }
+
+/** A clone of `spark` (conf, temp views, functions, planner additions)
+  * whose size rule is `rule`, or that runs none. `cloneSession` is
+  * private[sql], hence this package. Specs that pin a distributed plan
+  * shape on tiny inputs plan on `SizedSession.of(spark, Some(SmallInput(0)))`.
+  */
+object SizedSession {
+  import graft.plans.SmallInput
+
+  def of(spark: SparkSession, rule: Option[SmallInput]): SparkSession = {
+    val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    val exp = clone.experimental
+    exp.extraOptimizations = exp.extraOptimizations.filterNot(_.isInstanceOf[SmallInput]) ++ rule
+    clone
+  }
+}
