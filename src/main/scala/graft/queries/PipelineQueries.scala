@@ -579,9 +579,9 @@ object PipelineQueries {
 
   /** Build the IVF-Flat layout (trained centroids + cell-partitioned
     * postings) from `corpus` into `dir` — the ONE builder behind the
-    * nightly build ([[materializedIvfIndexDir]]) and the model REFRESH
-    * ([[materializedIvfRefreshDir]]), so "refreshed == rebuilt from
-    * scratch" holds by construction: 16-smallest-id seeds, one
+    * nightly build ([[materializedIvfIndexDir]]) and the registry's
+    * refreshed v1 ([[materializedIvfRegistryDir]]), so "refreshed ==
+    * rebuilt from scratch" holds by construction: 16-smallest-id seeds, one
     * exact-micro Lloyd step (q_embed_knn_ivf's training), float-cast
     * centroids, postings PARTITIONED BY cell so a query's probe set
     * prunes unread partitions at the listing.
@@ -612,26 +612,41 @@ object PipelineQueries {
       buildIvfFlat(s, t(s, d, "embeddings"), dir)
     }
 
+  /** Cell occupancy of a stored cell-partitioned layout — per cell
+    * (cell, n_vecs, share_micro, ratio_mean_micro): its vector count,
+    * its corpus share, and its fill ratio vs fair share (n · k / total)
+    * as exact integer micros. The q_ann_refresh_trigger readout and,
+    * collapsed to its max ratio, the trigger scalar
+    * ([[hottestCellRatioMicro]]). Bounded: the per-cell histogram is
+    * ≤ k rows (k = trained cell count, from the centroid table),
+    * collected once; BigInt keeps n·k·1e6 exact past Long at extreme
+    * cell counts without changing the rounding of the in-range values
+    * (ADVICE r18), so the threshold compare is engine- and
+    * parallelism-stable.
+    */
+  private def cellOccupancy(s: org.apache.spark.sql.SparkSession,
+      idxDir: String, sub: String): Seq[(Long, Long, Long, Long)] = {
+    val k = Tables.parquet(s, idxDir + "/centroids").count()
+    val counts = Tables.parquet(s, s"$idxDir/$sub")
+      .groupBy(col("cell").cast("long")).agg(count(lit(1)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val total = counts.map(_._2).sum
+    counts.map { case (cell, n) =>
+      (cell, n, (BigInt(n) * 1000000 / total).toLong,
+        (BigInt(n) * k * 1000000 / total).toLong)
+    }
+  }
+
   /** Hottest-cell fill ratio (vs fair share, in micros) of a stored
     * cell-partitioned layout — the REFRESH TRIGGER scalar: a quantizer
     * trained on yesterday's corpus drifts as appends skew the cells, and
-    * max_cell · k / total is the standard imbalance alarm. Bounded: the
-    * per-cell histogram is ≤ k rows (k = trained cell count, from the
-    * centroid table), collected once; exact Long arithmetic so the
-    * threshold compare is engine- and parallelism-stable.
+    * max_cell · k / total is the standard imbalance alarm. An empty
+    * store reads 0 (nothing to rebalance).
     */
   private def hottestCellRatioMicro(s: org.apache.spark.sql.SparkSession,
       idxDir: String, sub: String): Long = {
-    val k = Tables.parquet(s, idxDir + "/centroids").count()
-    val counts = Tables.parquet(s, s"$idxDir/$sub")
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect().map(_.getLong(1))
-    val total = counts.sum
-    // empty store → 0 (nothing to rebalance, never div-by-zero/empty
-    // max); BigInt keeps n·k·1e6 exact past Long at extreme cell counts
-    // without changing the rounding of the in-range values (ADVICE r18)
-    if (counts.isEmpty || total == 0L) 0L
-    else counts.map(n => (BigInt(n) * k * 1000000 / total).toLong).max
+    val occupancy = cellOccupancy(s, idxDir, sub)
+    if (occupancy.isEmpty) 0L else occupancy.map(_._4).max
   }
 
   /** Fixed size of the recall-proxy probe set. A COUNT, not a corpus
@@ -745,36 +760,6 @@ object PipelineQueries {
     }
   }
 
-  /** The model-REFRESH verb (`q_ann_refresh`) — the gap a store that
-    * only appends accumulates: every nightly append is pinned under the
-    * FROZEN base-trained quantizer ([[materializedIvfIncrIndexDir]]),
-    * and recall decays as the corpus outgrows the base centroids. The
-    * decision is [[ivfNeedsRefresh]] — occupancy skew
-    * ([[hottestCellRatioMicro]] over `spark.graft.ann.refreshFactorMicro`,
-    * default 0 — the registered query FORCES the refresh so the oracle
-    * prices the full retrain path; the threshold wiring both ways is
-    * spec-pinned in SimilaritySpec) OR sampled recall decay
-    * ([[sampledRecallMicro]] under `spark.graft.ann.refreshRecallMicro`
-    * — the signal that catches balanced-but-wrong centroids). Past
-    * either, the quantizer is retrained on the CURRENT corpus and every
-    * vector re-encoded into a fresh index VERSION — its own registry
-    * artifact, so the frozen store keeps serving until the refreshed
-    * markers commit (the blue/green swap). Returns the dir to SERVE.
-    * Refreshed == built-from-scratch by construction ([[buildIvfFlat]]
-    * is the shared builder), which is why the oracle is the
-    * unrestricted full-corpus IVF chain.
-    */
-  private def materializedIvfRefreshDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val frozen = materializedIvfIncrIndexDir(s, d)
-    if (!ivfNeedsRefresh(s, d, frozen, "postings", sampledRecallMicro(s, d, _)))
-      frozen
-    else ArtifactCache.dir(s, d, "embeddings", "ivfrefresh",
-        Seq("centroids/_SUCCESS", "postings/_SUCCESS")) { dir =>
-      buildIvfFlat(s, t(s, d, "embeddings"), dir)
-    }
-  }
-
   /** Registry artifact tag keyed on the EFFECTIVE values of the gate
     * confs its staged refresh decision reads (ADVICE r19): the staged
     * chain commits the trip/no-trip decision into the marker-protected
@@ -806,12 +791,16 @@ object PipelineQueries {
     "spark.graft.ann.refreshFactorMicro" -> "0",
     "spark.graft.ann.refreshRecallMicro" -> "0")
 
-  /** The IVF-Flat [[ArtifactCache.registry]] (`q_ann_serve_current`,
-    * `q_ann_registry_versions`): v0 = the frozen append-only store
-    * ([[materializedIvfIncrIndexDir]]) compacted ([[compactIvf]] — pure
-    * I/O, no re-assignment); trips = [[ivfNeedsRefresh]] on v0 (the
-    * q_ann_refresh trigger); v1 = the full-corpus rebuild
-    * ([[buildIvfFlat]], the shared builder).
+  /** The IVF-Flat [[ArtifactCache.registry]] (`q_ann_refresh`,
+    * `q_ann_serve_current`, `q_ann_registry_versions`) — the model
+    * REFRESH of a store that only appends: every nightly append is pinned
+    * under the FROZEN base-trained quantizer, and recall decays as the
+    * corpus outgrows the base centroids. v0 = the frozen append-only
+    * store ([[materializedIvfIncrIndexDir]]) compacted ([[compactIvf]] —
+    * pure I/O, no re-assignment); trips = [[ivfNeedsRefresh]] on v0;
+    * v1 = the full-corpus rebuild ([[buildIvfFlat]], the shared builder,
+    * so refreshed == built-from-scratch and the oracle is the
+    * unrestricted full-corpus IVF chain).
     */
   private[graft] def materializedIvfRegistryDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
@@ -820,6 +809,23 @@ object PipelineQueries {
       snapshot = compactIvf(s, materializedIvfIncrIndexDir(s, d), _),
       trips = ivfNeedsRefresh(s, d, _, "postings", sampledRecallMicro(s, d, _)),
       rebuild = buildIvfFlat(s, t(s, d, "embeddings"), _))
+
+  /** q_ann_refresh / q_ann_serve_current: top-10 neighbours of the first
+    * five vectors from the IVF-Flat registry's CURRENT version.
+    */
+  private def serveIvfCurrent(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val reg = materializedIvfRegistryDir(s, d)
+    val idx = s"$reg/${ArtifactCache.current(s, reg)}"
+    Similarity.ivfKnnFromIndex(
+        Tables.parquet(s, idx + "/postings"),
+        t(s, d, "embeddings").filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 10,
+        Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
+        nProbe = 4)
+      .select("q_id", "c_id", "rn")
+      .orderBy("q_id", "rn")
+  }
 
   /** Night slices of the CYCLE simulation: the corpus arrives over three
     * nights — night 0 (the base build, id % 4 ∈ {0, 1}), night 1
@@ -964,20 +970,18 @@ object PipelineQueries {
       .write.mode("overwrite").partitionBy("cell").parquet(dir + "/postings")
   }
 
-  /** Materialize the COMPRESSED (IVF-PQ) index once per corpus version —
-    * the layout production vector stores actually serve: `centroids/` =
+  /** Build the COMPRESSED (IVF-PQ) index from `corpus` into `dir` — the
+    * layout production vector stores actually serve: `centroids/` =
     * the 3-iteration-Lloyd coarse quantizer, `books/` = the residual PQ
     * codebooks (m=8 subspaces × ks=16 codewords × 8 dims of doubles —
     * KBs), `codes/` = every vector's 8-byte PQ code, PARTITIONED BY cell
     * (32× smaller than the IVF-Flat postings' raw float vectors: the
     * probe scan reads codes, never vectors). Doubles round-trip parquet
     * exactly, so the served chain is bit-identical to the inline one.
-    */
-  /** Build the IVF-PQ layout (coarse centroids + residual codebooks +
-    * cell-partitioned codes) from `corpus` into `dir` — the ONE builder
-    * behind the nightly build ([[materializedIvfPqIndexDir]]) and the
-    * compressed-index REFRESH ([[materializedIvfPqRefreshDir]]), so
-    * "refreshed == rebuilt" holds for the PQ family by construction.
+    * The ONE builder behind the nightly build
+    * ([[materializedIvfPqIndexDir]]) and the registry's refreshed v1
+    * ([[materializedIvfPqRegistryDir]]), so "refreshed == rebuilt" holds
+    * for the PQ family by construction.
     */
   private def buildIvfPq(s: org.apache.spark.sql.SparkSession,
       corpus: org.apache.spark.sql.DataFrame, dir: String): Unit = {
@@ -1007,25 +1011,6 @@ object PipelineQueries {
         Seq("centroids/_SUCCESS", "books/_SUCCESS", "codes/_SUCCESS")) { dir =>
       buildIvfPq(s, t(s, d, "embeddings"), dir)
     }
-
-  /** [[materializedIvfRefreshDir]]'s compressed-index twin
-    * (`q_ann_refresh_pq`): the decision is the same [[ivfNeedsRefresh]]
-    * pair of signals — cell histogram over the CODES layout, recall
-    * proxy through the stored model's ADC path
-    * ([[sampledRecallPqMicro]]); past either, coarse quantizer AND
-    * residual codebooks retrain on the current corpus and every vector
-    * re-encodes into a fresh version.
-    */
-  private def materializedIvfPqRefreshDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val frozen = materializedIvfPqIncrIndexDir(s, d)
-    if (!ivfNeedsRefresh(s, d, frozen, "codes", sampledRecallPqMicro(s, d, _)))
-      frozen
-    else ArtifactCache.dir(s, d, "embeddings", "ivfpqrefresh",
-        Seq("centroids/_SUCCESS", "books/_SUCCESS", "codes/_SUCCESS")) { dir =>
-      buildIvfPq(s, t(s, d, "embeddings"), dir)
-    }
-  }
 
   /** The COMPRESSED index under the APPEND lifecycle
     * (`q_ann_index_incr_pq`) — q_ann_index_incr's production sibling:
@@ -1115,12 +1100,13 @@ object PipelineQueries {
       .write.mode("overwrite").partitionBy("cell").parquet(dir + "/codes")
   }
 
-  /** The IVF-PQ [[ArtifactCache.registry]] (`q_pq_serve_current`): v0 =
-    * the frozen append-era store ([[materializedIvfPqIncrIndexDir]])
-    * compacted ([[compactIvfPq]]); trips = [[ivfNeedsRefresh]] on v0's
-    * codes (the q_ann_refresh_pq trigger: occupancy skew OR sampled ADC
-    * recall decay); v1 = the whole compressed index rebuilt on the
-    * current corpus ([[buildIvfPq]]).
+  /** The IVF-PQ [[ArtifactCache.registry]] (`q_ann_refresh_pq`,
+    * `q_pq_serve_current`): v0 = the frozen append-era store
+    * ([[materializedIvfPqIncrIndexDir]]) compacted ([[compactIvfPq]]);
+    * trips = [[ivfNeedsRefresh]] on v0's codes (occupancy skew OR
+    * sampled ADC recall decay, [[sampledRecallPqMicro]]); v1 = coarse
+    * quantizer AND residual codebooks retrained on the current corpus,
+    * every vector re-encoded ([[buildIvfPq]]).
     */
   private[graft] def materializedIvfPqRegistryDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
@@ -1129,6 +1115,21 @@ object PipelineQueries {
       snapshot = compactIvfPq(s, materializedIvfPqIncrIndexDir(s, d), _),
       trips = ivfNeedsRefresh(s, d, _, "codes", sampledRecallPqMicro(s, d, _)),
       rebuild = buildIvfPq(s, t(s, d, "embeddings"), _))
+
+  /** q_ann_refresh_pq / q_pq_serve_current: ADC top-10 neighbours of the
+    * first five vectors from the IVF-PQ registry's CURRENT version.
+    */
+  private def servePqCurrent(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val reg = materializedIvfPqRegistryDir(s, d)
+    val idx = s"$reg/${ArtifactCache.current(s, reg)}"
+    val (cents, books) = readIvfPqModel(s, idx)
+    Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
+        t(s, d, "embeddings").filter(col("vec_id") < 5),
+        "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
+      .select(col("q_id"), col("c_id"), col("rn"))
+      .orderBy("q_id", "rn")
+  }
 
   /** Reassemble (coarse centroids, PQ codebooks) from a stored IVF-PQ
     * index — two bounded collects (8 + 128 rows, the centroid-table
@@ -1271,10 +1272,9 @@ object PipelineQueries {
 
   /** The retrained-tokenizer SERVE oracle — re-derives the full-corpus
     * 3-round training trajectory from data and applies the 48 learned
-    * merges through scalar subqueries. Shared by q_bpe_refresh (serve
-    * after a forced refresh) and q_bpe_serve_current (serve through the
-    * registry's CURRENT pointer): pointer → the retrained version, so
-    * both price the identical encode.
+    * merges through scalar subqueries. The oracle of q_bpe_refresh and
+    * q_bpe_serve_current (one body: serve through the registry's CURRENT
+    * pointer, which a forced refresh points at the retrained version).
     */
   private lazy val BpeRetrainedEncodeOracleSql: Option[String] =
     Some(s"""WITH ${duckBpeTrainedCtes("", "")},
@@ -1300,63 +1300,65 @@ object PipelineQueries {
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
 
+  /** Store the merges the one-scan histogram trainer learns on `docs`
+    * (16 per round, 3 rounds) into `dir` — the ONE tokenizer trainer
+    * behind the frozen table, the drift-gated retrain and the
+    * registry's v1.
+    */
+  private def trainMergesInto(s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    storeMerges(s, Bpe.trainMergesHist(docs, col("text"), 16, 3), dir)
+
   /** The FROZEN tokenizer of the refresh story — merges trained on the
     * "corpus as of the tokenizer build" (doc_id % 4 != 3, the same
-    * as-of slice the ANN stores freeze on) via the one-scan histogram
-    * trainer, stored as a registry artifact. Appends encode fine under
-    * it until the corpus drifts — which is exactly what
-    * [[materializedBpeRefreshDir]] watches.
+    * as-of slice the ANN stores freeze on), stored as an artifact.
+    * Appends encode fine under it until the corpus drifts — which is
+    * exactly what [[materializedBpeRegistryDir]]'s trigger watches.
     */
   private def materializedBpeBaseDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ArtifactCache.dir(s, d, "documents", "bpebase", Seq("_SUCCESS")) { dir =>
-      val base = t(s, d, "documents").filter(col("doc_id") % 4 =!= 3)
-      storeMerges(s, Bpe.trainMergesHist(base, col("text"), 16, 3), dir)
-    }
+    ArtifactCache.dir(s, d, "documents", "bpebase", Seq("_SUCCESS"))(
+      trainMergesInto(s, t(s, d, "documents").filter(col("doc_id") % 4 =!= 3), _))
+
+  /** Per mixture source (source, n_docs, n_bpe, n_chars,
+    * chars_per_tok_micro) of the CURRENT corpus under the stored merge
+    * table at `modelDir` — the compression readout of q_bpe_eval,
+    * q_bpe_refresh_trigger and q_bpe_refresh_gated, and, summed over
+    * sources, the trigger scalar ([[bpeCompressionMicro]]). One scan;
+    * the token count rides it as the codegen'd replace chain.
+    */
+  private def bpeCompressionBySource(s: org.apache.spark.sql.SparkSession,
+      d: String, modelDir: String): org.apache.spark.sql.DataFrame = {
+    val merges = loadMerges(s, modelDir)
+    // tFan, not t: a 48-merge replace-chain tokenCount over the corpus
+    // is the heavy-per-row class the r20 fan-out classification keeps
+    // fanned (a single-split scan of it cost 1.44 s of a 2.3 s probe)
+    tFan(s, d, "documents")
+      .select(col("source"), length(col("text")).cast("long").as("nc"),
+        Bpe.tokenCount(col("text"), merges).cast("long").as("nt"))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_bpe"),
+        sum("nc").as("n_chars"))
+      // integral `div`, matching the oracle's exact BIGINT `//` — Long
+      // `/` detours through DOUBLE and can drift by 1 micro once
+      // 1e6·Σchars crosses 2^53 (ADVICE r17)
+      .withColumn("chars_per_tok_micro", expr("(n_chars * 1000000) div n_bpe"))
+  }
 
   /** Corpus-wide compression (chars-per-token, exact integer micros) of
     * the CURRENT corpus under a stored merge table — the tokenizer
     * refresh TRIGGER scalar (q_bpe_eval's metric collapsed to one
     * number): merges frozen on yesterday's corpus lose compression as
-    * the corpus drifts out of their domain. One scan; the token count
-    * rides it as the codegen'd replace chain.
+    * the corpus drifts out of their domain. Zero tokens read
+    * Long.MaxValue.
     */
   private def bpeCompressionMicro(s: org.apache.spark.sql.SparkSession,
       d: String, modelDir: String): Long = {
-    val merges = loadMerges(s, modelDir)
-    // tFan, not t: this readout is a 48-merge replace-chain tokenCount
-    // over the corpus — the heavy-per-row class the r20 fan-out
-    // classification keeps fanned (the four registered readout twins all
-    // ride tFan; this decision-input scan was the one missed site, and
-    // its single-split scan was q_bpe_refresh's dominant job, 1.44 s of
-    // a 2.3 s probe min).
-    val agg = tFan(s, d, "documents")
-      .select(length(col("text")).cast("long").as("nc"),
-        Bpe.tokenCount(col("text"), merges).cast("long").as("nt"))
-      .agg(sum("nc").as("nc"), sum("nt").as("nt"))
+    val agg = bpeCompressionBySource(s, d, modelDir)
+      .agg(sum("n_chars"), sum("n_bpe"))
       .collect()(0) // one scalar row — the decision input
     if (agg.getLong(1) == 0L) Long.MaxValue
     else agg.getLong(0) * 1000000L / agg.getLong(1)
-  }
-
-  /** The tokenizer model-REFRESH verb (`q_bpe_refresh`) — the last
-    * artifact family without a refresh edge: frozen merges encode any
-    * APPEND, but a drifted corpus compresses worse and worse under
-    * them. The decision reads the current corpus's compression under
-    * the FROZEN base-trained table ([[bpeCompressionMicro]]): below
-    * `spark.graft.bpe.refreshCptMicro` (default Long.MaxValue — the
-    * registered query FORCES the retrain so the oracle prices the full
-    * path; wiring both ways is spec-pinned in BpeSpec) the merges
-    * retrain on the CURRENT corpus via the one-scan histogram trainer
-    * into a fresh registry version; the frozen table keeps serving
-    * until the new artifact's marker commits. Returns the model dir to
-    * SERVE.
-    */
-  private def materializedBpeRefreshDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val frozen = materializedBpeBaseDir(s, d)
-    if (bpeCompressionMicro(s, d, frozen) >= bpeRefreshCptMicro(s)) frozen
-    else materializedBpeRetrainDir(s, d)
   }
 
   /** The tokenizer refresh threshold: compression (chars-per-token
@@ -1366,24 +1368,23 @@ object PipelineQueries {
     s.conf.getOption("spark.graft.bpe.refreshCptMicro")
       .map(_.toLong).getOrElse(Long.MaxValue)
 
-  /** The retrained merge table — the fresh registry version a fired
-    * tokenizer refresh serves (shared by the compression-triggered
-    * [[materializedBpeRefreshDir]] and the drift-gated
-    * q_bpe_refresh_gated: both decisions land the SAME artifact, so the
-    * registry never holds two "current corpus" tokenizer versions).
+  /** The merge table retrained on the current corpus that the
+    * drift-gated q_bpe_refresh_gated serves when its `tok_est` PSI gate
+    * fires (that gate is not the registry's trigger, so it keeps its own
+    * artifact).
     */
   private def materializedBpeRetrainDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ArtifactCache.dir(s, d, "documents", "bperefresh", Seq("_SUCCESS")) { dir =>
-      storeMerges(s,
-        Bpe.trainMergesHist(t(s, d, "documents"), col("text"), 16, 3), dir)
-    }
+    ArtifactCache.dir(s, d, "documents", "bperefresh", Seq("_SUCCESS"))(
+      trainMergesInto(s, t(s, d, "documents"), _))
 
-  /** The tokenizer [[ArtifactCache.registry]] (`q_bpe_serve_current`):
-    * v0 = the frozen base-slice merge table ([[materializedBpeBaseDir]]);
-    * trips = v0's corpus compression under `spark.graft.bpe.refreshCptMicro`
-    * (the q_bpe_refresh trigger); v1 = merges retrained on the current
-    * corpus.
+  /** The tokenizer [[ArtifactCache.registry]] (`q_bpe_refresh`,
+    * `q_bpe_serve_current`) — the tokenizer model REFRESH: frozen merges
+    * encode any APPEND, but a drifted corpus compresses worse and worse
+    * under them. v0 = the frozen base-slice merge table
+    * ([[materializedBpeBaseDir]]); trips = v0's corpus compression
+    * ([[bpeCompressionMicro]]) under `spark.graft.bpe.refreshCptMicro`;
+    * v1 = merges retrained on the current corpus.
     */
   private[graft] def materializedBpeRegistryDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
@@ -1392,14 +1393,28 @@ object PipelineQueries {
           "spark.graft.bpe.refreshCptMicro" -> Long.MaxValue.toString))(
       snapshot = copyTable(s, materializedBpeBaseDir(s, d), _),
       trips = v0 => bpeCompressionMicro(s, d, v0) < bpeRefreshCptMicro(s),
-      rebuild = storeMerges(s,
-        Bpe.trainMergesHist(t(s, d, "documents"), col("text"), 16, 3), _))
+      rebuild = trainMergesInto(s, t(s, d, "documents"), _))
 
-  /** The classifier [[ArtifactCache.registry]] (`q_lr_serve_current`):
-    * v0 = the frozen base-slice weight table
+  /** q_bpe_refresh / q_bpe_serve_current: the first 300 documents
+    * encoded under the tokenizer registry's CURRENT merge table.
+    */
+  private def serveBpeCurrent(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val reg = materializedBpeRegistryDir(s, d)
+    val toks = Bpe.encode(col("text"),
+      loadMerges(s, s"$reg/${ArtifactCache.current(s, reg)}"))
+    t(s, d, "documents").filter(col("doc_id") < 300)
+      .select(col("doc_id"),
+        size(toks).cast("long").as("n_bpe"),
+        array_join(slice(toks, 1, 12), ",").as("head"))
+      .orderBy("doc_id")
+  }
+
+  /** The classifier [[ArtifactCache.registry]] (`q_classifier_refresh`,
+    * `q_lr_serve_current`): v0 = the frozen base-slice weight table
     * ([[materializedLrBaseModelDir]]); trips = the drift panel's quality
-    * PSI (the q_classifier_refresh gate); v1 = the current-corpus model
-    * ([[materializedLrModelDir]]).
+    * PSI over `spark.graft.lr.refreshPsiMicro` ([[panelTrips]]); v1 = the
+    * current-corpus model ([[materializedLrModelDir]]).
     */
   private[graft] def materializedLrRegistryDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
@@ -1409,6 +1424,15 @@ object PipelineQueries {
       trips = _ => panelTrips(panelPsiBySource(s, d, "quality"), s,
         "spark.graft.lr.refreshPsiMicro"),
       rebuild = copyTable(s, materializedLrModelDir(s, d), _))
+
+  /** The classifier registry's CURRENT weight table, in bucket order. */
+  private def currentLrWeights(s: org.apache.spark.sql.SparkSession,
+      d: String): Seq[Long] = {
+    val reg = materializedLrRegistryDir(s, d)
+    Tables.parquet(s, s"$reg/${ArtifactCache.current(s, reg)}")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1).map(_._2).toSeq
+  }
 
   /** Copy the single-table artifact at `src` into one file at `dst`. */
   private def copyTable(s: org.apache.spark.sql.SparkSession, src: String,
@@ -1682,8 +1706,8 @@ object PipelineQueries {
 
   /** The FROZEN classifier model — trained on the base slice only
     * (doc_id % 4 ≠ 3, the as-of slice every frozen artifact in the
-    * registry shares). This is the model a drifted corpus outgrows;
-    * q_classifier_refresh serves it only when the drift gate does NOT
+    * registry shares). This is the model a drifted corpus outgrows: the
+    * classifier registry's v0, served only while the drift gate does NOT
     * trip (the spec's frozen leg).
     */
   private def materializedLrBaseModelDir(
@@ -2760,18 +2784,9 @@ object PipelineQueries {
               |  CAST((1000000 * n_vecs * kk.k) // t AS BIGINT) AS ratio_mean_micro
               |FROM cnt, tot, kk ORDER BY cell""".stripMargin),
       (s, d) => {
-        val idx = materializedIvfIncrIndexDir(s, d)
-        val k = Tables.parquet(s, idx + "/centroids").count()
-        // checkpoint the <=k-row histogram: its two consumers (rows +
-        // the total) must not re-pay the postings scan (review r18)
-        val cnt = Tables.parquet(s, idx + "/postings")
-          .groupBy(col("cell").cast("long").as("cell"))
-          .agg(count(lit(1)).as("n_vecs"))
-          .localCheckpoint(true)
-        cnt.crossJoin(broadcast(cnt.agg(sum("n_vecs").as("t"))))
-          .select(col("cell"), col("n_vecs"),
-            expr("(1000000 * n_vecs) div t").as("share_micro"),
-            expr(s"(1000000 * n_vecs * ${k}L) div t").as("ratio_mean_micro"))
+        import s.implicits._
+        cellOccupancy(s, materializedIvfIncrIndexDir(s, d), "postings")
+          .toDF("cell", "n_vecs", "share_micro", "ratio_mean_micro")
           .orderBy("cell")
       }),
 
@@ -2829,48 +2844,23 @@ object PipelineQueries {
     // missing: build → append → compact all pin the quantizer FROZEN,
     // but a store that only appends never retrains, and recall decays as
     // the corpus outgrows the base-trained centroids. q_ann_refresh
-    // reads the frozen store's trigger (the q_ann_refresh_trigger
-    // histogram), retrains on the CURRENT corpus, re-encodes every
-    // vector into a fresh index version (blue/green: the frozen store
-    // serves until the new markers commit), and serves from it. The
-    // registered query forces the refresh (threshold 0) so the oracle
-    // prices the full path; refreshed == built-from-scratch by shared
-    // builder, so the oracle is the UNRESTRICTED full-corpus IVF chain —
-    // and SimilaritySpec pins recall(refreshed) >= recall(frozen).
-    Q("q_ann_refresh", IvfOracleSql,
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val idx = materializedIvfRefreshDir(s, d)
-        Similarity.ivfKnnFromIndex(
-            Tables.parquet(s, idx + "/postings"),
-            emb.filter(col("vec_id") < 5),
-            "vec_id", "embedding", k = 10,
-            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
-            nProbe = 4)
-          .select("q_id", "c_id", "rn")
-          .orderBy("q_id", "rn")
-      }),
+    // serves the CURRENT version of materializedIvfRegistryDir, whose
+    // trigger reads the frozen store's cell histogram (the
+    // q_ann_refresh_trigger readout) and, past it, retrains on the
+    // CURRENT corpus and re-encodes every vector into v1 before the
+    // pointer flips. The registered query forces the refresh (threshold
+    // 0) so the oracle prices the full path; refreshed ==
+    // built-from-scratch by shared builder, so the oracle is the
+    // UNRESTRICTED full-corpus IVF chain — and SimilaritySpec pins
+    // recall(refreshed) >= recall(frozen).
+    Q("q_ann_refresh", IvfOracleSql, serveIvfCurrent),
 
-    // SERVE THROUGH THE POINTER — the registry's production read path:
-    // the consumer reads the CURRENT pointer of materializedIvfRegistryDir
-    // and queries that version whole. Pointer → v1 (forced refresh), so
-    // the oracle is the unrestricted full-corpus IVF chain; the serve
-    // runs after gc, so the row also proves gc spared the pointed
-    // version. SimilaritySpec pins serve-current == q_ann_refresh.
-    Q("q_ann_serve_current", IvfOracleSql,
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val reg = materializedIvfRegistryDir(s, d)
-        val idx = s"$reg/${ArtifactCache.current(s, reg)}"
-        Similarity.ivfKnnFromIndex(
-            Tables.parquet(s, idx + "/postings"),
-            emb.filter(col("vec_id") < 5),
-            "vec_id", "embedding", k = 10,
-            Tables.parquet(s, idx + "/centroids"), "cell", "centroid",
-            nProbe = 4)
-          .select("q_id", "c_id", "rn")
-          .orderBy("q_id", "rn")
-      }),
+    // SERVE THROUGH THE POINTER — q_ann_refresh's body under its registry
+    // name: the consumer reads the CURRENT pointer and queries that
+    // version whole. The serve runs after gc, so the row also proves gc
+    // spared the pointed version. SimilaritySpec pins serve-current ==
+    // the built-from-scratch index (q_ann_from_index).
+    Q("q_ann_serve_current", IvfOracleSql, serveIvfCurrent),
 
     // The registry INVENTORY after the full lifecycle (build v0 →
     // refresh to v1 → pointer flip → GC): exactly one version must
@@ -3502,42 +3492,22 @@ object PipelineQueries {
           .orderBy("q_id", "rn")
       }),
 
-    // q_ann_refresh's COMPRESSED twin: the trigger reads the frozen
+    // q_ann_refresh's COMPRESSED twin, served from the CURRENT version of
+    // materializedIvfPqRegistryDir: the trigger reads the frozen
     // append-only PQ store's cell histogram (over the codes layout —
     // same hottest-cell ratio), and past the threshold the coarse
     // quantizer AND the residual codebooks retrain on the current
-    // corpus, every vector re-encoding into a fresh index version. The
-    // registered query forces the refresh (threshold 0), and refreshed
-    // == rebuilt by shared builder, so the oracle is the UNRESTRICTED
-    // full-corpus IVF-PQ chain (q_embed_knn_ivfpq's text).
-    Q("q_ann_refresh_pq", IvfPqOracleSql,
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val idx = materializedIvfPqRefreshDir(s, d)
-        val (cents, books) = readIvfPqModel(s, idx)
-        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
-            emb.filter(col("vec_id") < 5),
-            "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
-          .select(col("q_id"), col("c_id"), col("rn"))
-          .orderBy("q_id", "rn")
-      }),
+    // corpus, every vector re-encoding into v1. The registered query
+    // forces the refresh (threshold 0), and refreshed == rebuilt by
+    // shared builder, so the oracle is the UNRESTRICTED full-corpus
+    // IVF-PQ chain (q_embed_knn_ivfpq's text).
+    Q("q_ann_refresh_pq", IvfPqOracleSql, servePqCurrent),
 
-    // The COMPRESSED index served THROUGH THE REGISTRY POINTER
-    // (materializedIvfPqRegistryDir). Pointer → v1, shared builder ⇒ the
-    // oracle is the unrestricted IVF-PQ chain. PqSpec pins serve-current
-    // == q_ann_refresh_pq row-for-row and exactly-one-surviving-version.
-    Q("q_pq_serve_current", IvfPqOracleSql,
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val reg = materializedIvfPqRegistryDir(s, d)
-        val idx = s"$reg/${ArtifactCache.current(s, reg)}"
-        val (cents, books) = readIvfPqModel(s, idx)
-        Pq.ivfPqTopK(Tables.parquet(s, idx + "/codes"),
-            emb.filter(col("vec_id") < 5),
-            "vec_id", "embedding", cents, books, k = 10, nProbe = 3)
-          .select(col("q_id"), col("c_id"), col("rn"))
-          .orderBy("q_id", "rn")
-      }),
+    // The COMPRESSED index served THROUGH THE REGISTRY POINTER — the
+    // same body under its registry name. PqSpec pins serve-current ==
+    // the built-from-scratch index (q_ann_from_index_pq) and
+    // exactly-one-surviving-version.
+    Q("q_pq_serve_current", IvfPqOracleSql, servePqCurrent),
 
     // Recall@10 of the COMPRESSED index — q_ann_recall's PQ sibling,
     // and the number that actually governs a PQ deployment: quantizing
@@ -4091,11 +4061,12 @@ object PipelineQueries {
     // the decision reads q_drift_panel's own term table collapsed to
     // the per-source PSI of the 'quality' feature (panelPsiBySource —
     // the same 16 bucket terms the panel publishes, so the monitor and
-    // the trigger cannot drift apart). Past the threshold
-    // (spark.graft.lr.refreshPsiMicro, default -1: PSI ≥ 0, so the
-    // registered query always fires and the oracle prices the retrained
-    // serve) the model RETRAINS on the current corpus into the shared
-    // registry version (the q_linear_apply_from_model artifact — exact
+    // the trigger cannot drift apart). The model served is the CURRENT
+    // version of materializedLrRegistryDir, whose trigger is that gate:
+    // past the threshold (spark.graft.lr.refreshPsiMicro, default -1:
+    // PSI ≥ 0, so the registered query always fires and the oracle
+    // prices the retrained serve) v1 is the model RETRAINED on the
+    // current corpus (the q_linear_apply_from_model artifact — exact
     // Long training makes retrained == the two-step chain). Output is
     // the trigger readout JOINED with the served scores per source:
     // the oracle composes the panel-PSI CTEs with the unrestricted
@@ -4117,23 +4088,12 @@ object PipelineQueries {
               |ORDER BY c.source""".stripMargin)
     },
       (s, d) => {
-        val docs = t(s, d, "documents")
-        // ONE panel scan feeds both the output readout and the gate
-        // (eager checkpoint: ≤ n_sources rows)
-        val psi = panelPsiBySource(s, d, "quality").localCheckpoint(true)
-        val modelDir =
-          if (panelTrips(psi, s, "spark.graft.lr.refreshPsiMicro"))
-            materializedLrModelDir(s, d) // retrain on the current corpus
-          else materializedLrBaseModelDir(s, d) // frozen keeps serving
-        val weights = Tables.parquet(s, modelDir)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-          .sortBy(_._1).map(_._2).toSeq
-        val comp = TextAnalysis.linearMargins(docs, "doc_id", "text",
-            weights, keepCols = Seq("source"))
+        val comp = TextAnalysis.linearMargins(t(s, d, "documents"),
+            "doc_id", "text", currentLrWeights(s, d), keepCols = Seq("source"))
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum("score_micro").as("score_sum_micro"))
-        comp.join(psi, Seq("source"))
+        comp.join(panelPsiBySource(s, d, "quality"), Seq("source"))
           .select(col("source"), col("psi_micro"), col("n_docs"),
             col("score_sum_micro"))
           .orderBy("source")
@@ -4145,15 +4105,9 @@ object PipelineQueries {
     // train→apply chain. TextAnalysisSpec pins serve-current ==
     // q_linear_train_apply row-for-row.
     Q("q_lr_serve_current", LrTrainApplyOracleSql,
-      (s, d) => {
-        val reg = materializedLrRegistryDir(s, d)
-        val weights = Tables.parquet(s, s"$reg/${ArtifactCache.current(s, reg)}")
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-          .sortBy(_._1).map(_._2).toSeq
-        TextAnalysis.linearMargins(t(s, d, "documents"), "doc_id", "text",
-            weights)
-          .orderBy("doc_id")
-      }),
+      (s, d) => TextAnalysis.linearMargins(t(s, d, "documents"),
+          "doc_id", "text", currentLrWeights(s, d))
+        .orderBy("doc_id")),
 
     // EVALUATION of the trained classifier — the verb that closes the
     // train → apply → EVALUATE loop (q_linear_train_apply scores; this
@@ -4668,24 +4622,8 @@ object PipelineQueries {
               |  CAST(sum(nc) AS BIGINT) AS n_chars,
               |  CAST((1000000 * CAST(sum(nc) AS BIGINT)) // CAST(sum(nt) AS BIGINT) AS BIGINT) AS chars_per_tok_micro
               |FROM tk GROUP BY source ORDER BY source""".stripMargin),
-      (s, d) => {
-        val dir = materializedBpeMergesDir(s, d)
-        val merges = Tables.parquet(s, dir).orderBy("ord").collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-        tFan(s, d, "documents")
-          .select(col("source"),
-            length(col("text")).cast("long").as("nc"),
-            Bpe.tokenCount(col("text"), merges).cast("long").as("nt"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_bpe"),
-            sum("nc").as("n_chars"))
-          .select(col("source"), col("n_docs"), col("n_bpe"), col("n_chars"),
-            // integral `div`, matching the oracle's exact BIGINT `//` —
-            // Long `/` detours through DOUBLE and can drift by 1 micro
-            // once 1e6·Σchars crosses 2^53 (ADVICE r17)
-            expr("(n_chars * 1000000) div n_bpe").as("chars_per_tok_micro"))
-          .orderBy("source")
-      }),
+      (s, d) => bpeCompressionBySource(s, d, materializedBpeMergesDir(s, d))
+        .orderBy("source")),
 
     // The tokenizer refresh TRIGGER readout — q_bpe_eval's per-source
     // compression, but under the FROZEN base-slice-trained merge table
@@ -4708,43 +4646,23 @@ object PipelineQueries {
               |  CAST(sum(nc) AS BIGINT) AS n_chars,
               |  CAST((1000000 * CAST(sum(nc) AS BIGINT)) // CAST(sum(nt) AS BIGINT) AS BIGINT) AS chars_per_tok_micro
               |FROM tk GROUP BY source ORDER BY source""".stripMargin),
-      (s, d) => {
-        val merges = loadMerges(s, materializedBpeBaseDir(s, d))
-        tFan(s, d, "documents")
-          .select(col("source"),
-            length(col("text")).cast("long").as("nc"),
-            Bpe.tokenCount(col("text"), merges).cast("long").as("nt"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_bpe"),
-            sum("nc").as("n_chars"))
-          .select(col("source"), col("n_docs"), col("n_bpe"), col("n_chars"),
-            expr("(n_chars * 1000000) div n_bpe").as("chars_per_tok_micro"))
-          .orderBy("source")
-      }),
+      (s, d) => bpeCompressionBySource(s, d, materializedBpeBaseDir(s, d))
+        .orderBy("source")),
 
     // The tokenizer model-REFRESH verb — the last artifact row without a
     // refresh edge (SURVEY §2.3.2: "frozen merges encode any increment"
-    // is true for APPEND, false under drift). The decision reads the
+    // is true for APPEND, false under drift). It serves the CURRENT
+    // version of materializedBpeRegistryDir, whose trigger reads the
     // current corpus's compression under the frozen base-trained table;
     // past the threshold (default: forced, so the oracle prices the full
     // retrain) the merges RETRAIN on the current corpus via the one-scan
-    // histogram trainer into a fresh registry version, and the serve
-    // re-encodes under the new table. The oracle is fully data-dependent:
-    // it re-derives the retrained 3-round trajectory in SQL and applies
-    // the 48 learned merges through scalar subqueries — the first
-    // runtime-trained model with a cross-engine-verified serve. BpeSpec
-    // pins threshold wiring both ways and that the refreshed table never
-    // compresses the corpus worse than the frozen one.
-    Q("q_bpe_refresh", BpeRetrainedEncodeOracleSql,
-      (s, d) => {
-        val merges = loadMerges(s, materializedBpeRefreshDir(s, d))
-        val toks = Bpe.encode(col("text"), merges)
-        t(s, d, "documents").filter(col("doc_id") < 300)
-          .select(col("doc_id"),
-            size(toks).cast("long").as("n_bpe"),
-            array_join(slice(toks, 1, 12), ",").as("head"))
-          .orderBy("doc_id")
-      }),
+    // histogram trainer into v1 and the pointer flips. The oracle is fully
+    // data-dependent: it re-derives the retrained 3-round trajectory in
+    // SQL and applies the 48 learned merges through scalar subqueries —
+    // the first runtime-trained model with a cross-engine-verified serve.
+    // BpeSpec pins threshold wiring both ways and that the refreshed
+    // table never compresses the corpus worse than the frozen one.
+    Q("q_bpe_refresh", BpeRetrainedEncodeOracleSql, serveBpeCurrent),
 
     // The tokenizer refresh gated by the DRIFT PANEL — q_bpe_refresh's
     // decision input swapped from the compression scalar to the
@@ -4753,14 +4671,13 @@ object PipelineQueries {
     // shifts under a frozen tokenizer), read from the SAME term table
     // q_drift_panel publishes. Past spark.graft.bpe.refreshPsiMicro
     // (default -1 = fire, so the oracle prices the retrained serve) the
-    // merges retrain on the current corpus into the SAME registry
-    // version the compression-triggered refresh lands
-    // (materializedBpeRetrainDir — one "current" tokenizer, two
-    // triggers). Output composes trigger + serve: per mixture source,
-    // the panel PSI joined with the corpus compression readout under
-    // the SERVED merge table; the oracle re-derives both sides (panel
-    // CTEs + the data-dependent retrained-trainer unroll), so drift in
-    // the panel arithmetic, the trainer, OR the encode breaks the hash.
+    // merges retrain on the current corpus (materializedBpeRetrainDir,
+    // the registry's trainer in its own artifact). Output composes
+    // trigger + serve: per mixture source, the panel PSI joined with the
+    // corpus compression readout under the SERVED merge table; the
+    // oracle re-derives both sides (panel CTEs + the data-dependent
+    // retrained-trainer unroll), so drift in the panel arithmetic, the
+    // trainer, OR the encode breaks the hash.
     // BpeSpec pins the threshold wiring both ways.
     Q("q_bpe_refresh_gated",
       Some(s"""WITH ${panelPsiCtes("len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))", 256L)},
@@ -4786,35 +4703,17 @@ object PipelineQueries {
           if (panelTrips(psi, s, "spark.graft.bpe.refreshPsiMicro"))
             materializedBpeRetrainDir(s, d) // fresh version, current corpus
           else materializedBpeBaseDir(s, d) // frozen keeps serving
-        val merges = loadMerges(s, servedDir)
-        val comp = tFan(s, d, "documents")
-          .select(col("source"), length(col("text")).cast("long").as("nc"),
-            Bpe.tokenCount(col("text"), merges).cast("long").as("nt"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_bpe"),
-            sum("nc").as("n_chars"))
-        comp.join(psi, Seq("source"))
+        bpeCompressionBySource(s, d, servedDir).join(psi, Seq("source"))
           .select(col("source"), col("psi_micro"), col("n_docs"),
-            col("n_bpe"),
-            expr("(n_chars * 1000000) div n_bpe").as("chars_per_tok_micro"))
+            col("n_bpe"), col("chars_per_tok_micro"))
           .orderBy("source")
       }),
 
-    // The tokenizer served THROUGH THE REGISTRY POINTER
-    // (materializedBpeRegistryDir). Pointer → v1, so the oracle is the
-    // retrained-encode chain shared with q_bpe_refresh. BpeSpec pins
-    // serve-current == q_bpe_refresh row-for-row.
-    Q("q_bpe_serve_current", BpeRetrainedEncodeOracleSql,
-      (s, d) => {
-        val reg = materializedBpeRegistryDir(s, d)
-        val merges = loadMerges(s, s"$reg/${ArtifactCache.current(s, reg)}")
-        val toks = Bpe.encode(col("text"), merges)
-        t(s, d, "documents").filter(col("doc_id") < 300)
-          .select(col("doc_id"),
-            size(toks).cast("long").as("n_bpe"),
-            array_join(slice(toks, 1, 12), ",").as("head"))
-          .orderBy("doc_id")
-      }),
+    // The tokenizer served THROUGH THE REGISTRY POINTER — q_bpe_refresh's
+    // body under its registry name. Pointer → v1, so the oracle is the
+    // retrained-encode chain. BpeSpec pins serve-current == the encode
+    // under merges retrained from first principles.
+    Q("q_bpe_serve_current", BpeRetrainedEncodeOracleSql, serveBpeCurrent),
 
     // Packing with SUBWORD-real budgets: q_pack's window-cumsum shape,
     // but sized by the BPE token count instead of the whitespace estimate.

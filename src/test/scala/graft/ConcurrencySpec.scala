@@ -537,6 +537,21 @@ class ConcurrencySpec extends SparkTestBase {
     }
   }
 
+  test("refresh queries: a warm call starts as many Spark jobs as its serve_current twin") {
+    // one refresh path: the refresh query serves its registry's pointer,
+    // so once the registry is built no trigger re-runs on a call
+    def warmJobs(name: String): Int = {
+      SparkEntry.queries(name)(spark, sf).collect()
+      jobsDuring(SparkEntry.queries(name)(spark, sf).collect())._2
+    }
+    Seq("q_ann_refresh" -> "q_ann_serve_current",
+        "q_ann_refresh_pq" -> "q_pq_serve_current",
+        "q_bpe_refresh" -> "q_bpe_serve_current").foreach { case (refresh, twin) =>
+      val (r, t) = (warmJobs(refresh), warmJobs(twin))
+      assert(r == t, s"warm $refresh started $r jobs, $twin $t")
+    }
+  }
+
   test("the registry layout is written only by ArtifactCache in src/main") {
     val layout = """publishCurrent\(|readCurrent\(|retireLocked\(|"markers/""".r
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -334,10 +334,10 @@ class PqSpec extends SparkTestBase {
   test("q_pq_serve_current == q_ann_refresh_pq: the pointer serves the refreshed version; only the pointed one survives gc") {
     val viaPointer = SparkEntry.queries("q_pq_serve_current")(spark, sf)
       .collect().map(_.toString).toSeq
-    val viaRefresh = SparkEntry.queries("q_ann_refresh_pq")(spark, sf)
+    val rebuilt = SparkEntry.queries("q_ann_from_index_pq")(spark, sf)
       .collect().map(_.toString).toSeq
-    assert(viaPointer == viaRefresh,
-      "PQ pointer serve drifted from the refresh-verb serve")
+    assert(viaPointer == rebuilt,
+      "PQ pointer serve drifted from the built-from-scratch compressed index")
     // resolve THIS sf's registry via the cache keying the query uses,
     // not a tmpdir glob (ADVICE r19: globs sweep in stale registries)
     val reg = new java.io.File(

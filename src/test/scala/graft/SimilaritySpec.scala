@@ -504,11 +504,11 @@ class SimilaritySpec extends SparkTestBase {
     val nVecs = emb.count()
     try {
       // default trigger (forced refresh): the pointer must serve exactly
-      // what the trigger-derived refresh verb serves, and the inventory
+      // what the built-from-scratch index serves, and the inventory
       // must show ONE surviving version — the pointed, full-corpus v1
       coldRegistry()
-      assert(rows("q_ann_serve_current") == rows("q_ann_refresh"),
-        "pointer-served rows diverged from the refresh verb")
+      assert(rows("q_ann_serve_current") == rows("q_ann_from_index"),
+        "pointer-served rows diverged from the built-from-scratch index")
       assert(rows("q_ann_registry_versions") == Seq(s"[v1,1,$nVecs]"),
         "terminal registry state must be exactly {v1 = current, whole corpus}")
       // un-triggered lifecycle on a COLD registry: the pointer stays on
