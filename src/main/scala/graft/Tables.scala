@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.ParquetFooterBridge
 import org.apache.spark.sql.types.StructType
@@ -109,11 +109,23 @@ object Tables {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val qualified = fs.makeQualified(p)
-      val it = fs.listFiles(qualified, true)
-      val files = Seq.newBuilder[FileStatus]
-      while (it.hasNext) files += it.next()
-      Some((qualified, files.result()))
+      Some((qualified, files(fs, qualified)))
     } catch { case _: java.io.IOException => None }
+  }
+
+  /** Every file under `path` (the path itself when it is a file), depth
+    * first in listing order: the files `fs.listFiles(path, true)` yields,
+    * from `listStatus` alone. `listFiles` builds a `LocatedFileStatus` per
+    * file, which looks up block locations and reads the permission — a
+    * forked `ls -ld` on a local filesystem without native IO, even where
+    * the cached `file:` FileSystem is Hadoop's own.
+    */
+  private[graft] def files(fs: FileSystem, path: Path): Seq[FileStatus] = {
+    val out = Seq.newBuilder[FileStatus]
+    def walk(p: Path): Unit =
+      fs.listStatus(p).foreach(st => if (st.isFile) out += st else walk(st.getPath))
+    walk(path)
+    out.result()
   }
 
   /** The (path, length, modification time) of every leaf file. */

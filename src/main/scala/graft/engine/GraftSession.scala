@@ -24,6 +24,13 @@ import org.apache.spark.sql.SparkSession
   *    no exchange ([[graft.plans.SmallInput]]); everything above it plans
   *    exactly as the two points above say.
   *  - session TZ pinned UTC so timestamp semantics match the DuckDB oracle.
+  *  - the `file:` scheme runs on [[graft.sources.LocalFs]] (set here as
+  *    `spark.hadoop.*` confs, and on the context by
+  *    [[graft.functions.GraftFunctions.installPlanner]]): Hadoop's local
+  *    filesystem minus the `chmod` / `ls` / `readlink` process it forks
+  *    per file op without native IO. Checkpoints, state-store uploads and
+  *    artifact IO on a local disk pay no fork; an hdfs or object-store
+  *    path is untouched.
   */
 object GraftSession {
 
@@ -31,7 +38,10 @@ object GraftSession {
     * the brackets (`"*"`, `"8"`, `"4,2"` for 4 threads with 2 task tries).
     */
   def local(cores: String): SparkSession = {
-    val spark = SparkSession.builder()
+    val session = SparkSession.builder()
+    graft.sources.LocalFs.install(k => sys.props.getOrElse(s"spark.hadoop.$k", null),
+      (k, v) => session.config(s"spark.hadoop.$k", v))
+    val spark = session
       .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
       .config("spark.sql.adaptive.enabled", "true")

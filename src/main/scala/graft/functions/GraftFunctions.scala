@@ -81,6 +81,10 @@ object GraftFunctions {
   }
 
   /** Adds graft's planner additions to `spark`, each unless already there:
+    *  - the fork-free local filesystem ([[graft.sources.LocalFs.install]])
+    *    on the context's Hadoop conf, before anything here touches the
+    *    session state: building the session state qualifies the warehouse
+    *    path, which creates (and caches JVM-wide) the `file:` FileSystem;
     *  - the as-of planner strategy and its filter-pushdown rule, unless the
     *    session's planner has the strategy (also when the extensions
     *    injected it);
@@ -92,6 +96,8 @@ object GraftFunctions {
     * Idempotent.
     */
   def installPlanner(spark: SparkSession): Unit = synchronized {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    graft.sources.LocalFs.install(hadoop.get, hadoop.set)
     val exp = spark.experimental
     if (!spark.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy)) {
       exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy

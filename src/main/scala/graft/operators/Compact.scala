@@ -22,16 +22,10 @@ object Compact {
   /** Recursive listing of the parquet data files under `dir` — the ONE
     * file-matching rule compaction sizing and its tests share.
     */
-  def parquetFiles(spark: SparkSession, dir: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+  def parquetFiles(spark: SparkSession, dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    val buf = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) buf += f
-    }
-    buf.result()
+    Tables.files(fs, path).filter(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** Total byte size of the parquet files under `dir` from the listing

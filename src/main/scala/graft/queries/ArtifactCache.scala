@@ -106,17 +106,9 @@ private[graft] object ArtifactCache {
     val conf = s.sparkContext.hadoopConfiguration
     val src = new Path(s"$sfDir/$table.parquet")
     val srcFs = src.getFileSystem(conf)
-    var nFiles = 0L
-    var sumLen = 0L
-    var sumMtime = 0L
-    val it = srcFs.listFiles(src, true)
-    while (it.hasNext) {
-      val st = it.next()
-      nFiles += 1
-      sumLen += st.getLen
-      sumMtime += st.getModificationTime
-    }
-    val key = s"${srcFs.makeQualified(src)}|$nFiles|$sumLen|$sumMtime"
+    val files = graft.Tables.files(srcFs, src)
+    val key = s"${srcFs.makeQualified(src)}|${files.size}|${files.map(_.getLen).sum}|" +
+      files.map(_.getModificationTime).sum
     val hash = java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val d = root(s) + s"/graft_${tag}_cache_$hash"

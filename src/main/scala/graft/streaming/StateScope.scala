@@ -29,6 +29,17 @@ import org.apache.spark.sql.streaming.Trigger
   *    same window): 8 → 27.2 s, 4 → 24.9 s, 2 → 25.6 s — 2 re-serializes
   *    the drains with real per-key work (neardedup's band buckets,
   *    the interval join), so 4 is the volume-honest floor here.
+  *    Re-measured once the local filesystem stopped forking a process per
+  *    checkpoint file op ([[graft.sources.LocalFs]]): traced perfbench
+  *    `board_mix` (its drain is `q_stream_anomaly`), seeds 41–43, four
+  *    builds alternating in one window, medians:
+  *      partitions 4 → state_commit_ms 146, triggerExecution_ms 637;
+  *      partitions 2 → 84.5, 698.5; partitions 1 → 24.5, 615.5;
+  *      4 + changelog checkpointing → 155.5, 596.
+  *    The commit sum scales with the store count, but the drain's wall
+  *    time does not move beyond its spread (537–907 ms), and one small
+  *    drain cannot outweigh the 14-drain bracket above: 4 stays, and
+  *    changelog checkpointing stays off (no commit gain either).
   */
 object StateScope {
   val RocksDb =
@@ -111,8 +122,9 @@ object StateScope {
     //  - changelog checkpointing is deliberately NOT pinned: measured +9 %
     //    on these one-or-two-batch drains and rejected (OPTIMIZATION_r21
     //    §5) — the changelog writer costs more than the tiny-SST snapshot
-    //    it replaces at this state volume. Revisit at production state
-    //    sizes, where snapshot uploads dominate the commit.
+    //    it replaces at this state volume; re-measured fork-free on
+    //    state_commit_ms itself (class doc): 155.5 vs 146 ms. Revisit at
+    //    production state sizes, where snapshot uploads dominate the commit.
     val pinned = Seq(
       "spark.sql.streaming.stateStore.providerClass" -> RocksDb,
       "spark.sql.shuffle.partitions" -> statePartitions.toString,

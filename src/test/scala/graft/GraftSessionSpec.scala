@@ -94,6 +94,31 @@ class GraftSessionSpec extends SparkTestBase {
     assert(plain.experimental.extraOptimizations.count(_ eq graft.plans.SmallInput.rule) == 1)
   }
 
+  test("the factory session and a register-only session resolve file: to graft's LocalFs") {
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    import graft.sources.LocalFs
+    val root = java.net.URI.create("file:///")
+    def resolved(s: SparkSession): (Class[_], Class[_]) = {
+      val conf = s.sessionState.newHadoopConf()
+      (FileSystem.get(root, conf).getClass,
+        FileContext.getFileContext(root, conf).getDefaultFileSystem.getClass)
+    }
+    val graftFs = (classOf[LocalFs.FileSystemImpl], classOf[LocalFs.FileContextImpl])
+    assert(resolved(spark) == graftFs)
+    // register alone puts the keys back on a context that lost them
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl")
+    val before = keys.map(hadoop.get)
+    hadoop.unset("fs.file.impl")
+    hadoop.set("fs.AbstractFileSystem.file.impl", classOf[org.apache.hadoop.fs.local.LocalFs].getName)
+    try {
+      val plain = PlainSession.on(spark)
+      GraftFunctions.register(plain)
+      assert(keys.map(hadoop.get) == before)
+      assert(resolved(plain) == graftFs)
+    } finally keys.zip(before).foreach { case (k, v) => hadoop.set(k, v) }
+  }
+
   test("the factory session and a register-only session optimize a query the same way") {
     val plain = PlainSession.on(spark)
     GraftFunctions.register(plain)

@@ -5,7 +5,13 @@ import java.nio.file.{Files, Paths}
 /** Dev utility: dump `.explain("formatted")` for the headline queries into
   * EXPLAINS.md so plan shape (pushdown, broadcast, partial agg, codegen
   * spans) is reviewable without running Spark.
-  * Usage: `sbt "Test/runMain graft.ExplainDump [sfDir]"`.
+  * Usage: `sbt "Test/runMain graft.ExplainDump [sfDir]"` (default sf0.01,
+  * the scale the committed file is made on).
+  *
+  * Artifacts are built under a fresh root each run, and every token that
+  * differs between two runs of the same plan is [[normalize]]d, so
+  * regenerating with no plan change leaves the file byte-identical and
+  * its diff shows plan changes only.
   */
 object ExplainDump {
   val headline: Seq[String] = Seq(
@@ -68,9 +74,28 @@ object ExplainDump {
     "q_bpe_serve_current", "q_lr_serve_current", "q_pq_serve_current",
     "q_registry_audit")
 
+  /** `plan` with its run-specific tokens replaced: expression, plan and
+    * RDD ids, lambda classes, `Object.toString` hashes, and the artifact root,
+    * artifact keys and per-run directory suffixes in paths.
+    */
+  def normalize(plan: String, artifacts: String, tmp: String): String = Seq(
+    java.util.regex.Pattern.quote(artifacts) -> "<artifacts>",
+    java.util.regex.Pattern.quote(tmp) + "/graft" -> "<tmp>/graft",
+    "_cache_[0-9a-f]{32}" -> "_cache_<key>",
+    "(<tmp>/graft_\\w+?)_[0-9a-f]{1,8}(?!\\w)" -> "$1_<run>",
+    "plan_id=\\d+" -> "plan_id=x",
+    "(?<=RDD)\\[\\d+\\]" -> "[x]",
+    "#\\d+" -> "#x",
+    "\\$Lambda\\$\\d+/0x[0-9a-f]+" -> "\\$Lambda",
+    "(?<=[\\w$])@[0-9a-f]{4,8}(?![\\w.])" -> "@x"
+  ).foldLeft(plan) { case (text, (re, to)) => text.replaceAll(re, to) }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val artifacts = Files.createTempDirectory("graft-explain").toString
+    val tmp = sys.props("java.io.tmpdir").stripSuffix("/")
     val spark = graft.engine.GraftSession.local("4")
+    spark.conf.set("spark.graft.artifacts.root", artifacts)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans of the headline queries\n\n")
@@ -93,10 +118,11 @@ object ExplainDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+      sb.append(s"\n## $name\n\n```\n${normalize(plan, artifacts, tmp)}```\n")
     }
     Files.writeString(Paths.get("EXPLAINS.md"), sb.toString)
     println(s"[explain] wrote EXPLAINS.md (${headline.size} plans)")
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(artifacts))
   }
 }
