@@ -142,9 +142,16 @@ object Bench {
       .getOrElse(Set.empty)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
-    // runTimes(r) = per-query times for run r, in `names` order.
-    val runTimes: Seq[Seq[Double]] =
-      (1 to nRuns).map(_ => names.map(runOnce))
+    // runTimes(r) = per-query times for run r, in `names` order;
+    // runCodegen(r) = the classes Spark compiled during run r and the
+    // milliseconds it spent compiling them (0 on a warm run when the
+    // codegen cache holds the board, see engine.CompiledClasses).
+    import org.apache.spark.sql.graft.CodegenBridge
+    val (runTimes, runCodegen) = (1 to nRuns).map { _ =>
+      val (c0, ms0) = (CodegenBridge.compiles, CodegenBridge.compileMs)
+      val times = names.map(runOnce)
+      (times, (CodegenBridge.compiles - c0, CodegenBridge.compileMs - ms0))
+    }.unzip
     val runTotals = runTimes.map(_.filter(_ >= 0).sum)
     // Per-query minimum over the runs where the query succeeded; -1 only
     // if it failed in every run.
@@ -204,7 +211,8 @@ object Bench {
     def fmt(v: Double): String = "%.3f".format(v)
     // Keep the slowest entries; drop from the cheap end until it fits.
     val asc = results.sortBy(_._2)
-    def line(kept: Seq[(String, Double)], omitted: Seq[(String, Double)]): String = {
+    def line(kept: Seq[(String, Double)], omitted: Seq[(String, Double)],
+        extra: String = ""): String = {
       val qs = kept.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val om =
@@ -224,7 +232,7 @@ object Bench {
       val cal = s"""[${fmt(calibPre)},${fmt(calibPost)}]"""
       val calMc = s"""[${fmt(calibMcPre)},${fmt(calibMcPost)}]"""
       val sCal = streamCalib.map(fmt).mkString("[", ",", "]")
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"runs":$nRuns,"run_totals":$rt,"calib_sec":$cal,"calib_mc_sec":$calMc,"streaming_calib_sec":$sCal,"lint_errors":$lintErrors,"batch_sec":${fmt(batchSec)},"streaming_sec":${fmt(streamingSec)},"streaming_n":${streamQ.size}$onlyField$om$fl,"queries":$qs,"value":${fmt(total)}}"""
+      s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"runs":$nRuns,"run_totals":$rt,"calib_sec":$cal,"calib_mc_sec":$calMc,"streaming_calib_sec":$sCal,"lint_errors":$lintErrors,"batch_sec":${fmt(batchSec)},"streaming_sec":${fmt(streamingSec)},"streaming_n":${streamQ.size}$onlyField$om$fl$extra,"queries":$qs,"value":${fmt(total)}}"""
     }
     var drop = 0
     while (drop < asc.size && line(asc.drop(drop), asc.take(drop)).length > BudgetChars)
@@ -238,10 +246,15 @@ object Bench {
     // the stdout line stays as-is for the driver. Comparison rule lives in
     // BASELINE.md ("Full per-query record"). Never allowed to suppress the
     // stdout artifact: failures log and the print proceeds.
+    // The record also carries each run's codegen compiles and compile
+    // time, which do not fit the stdout line's budget.
+    val codegenField = runCodegen.map { case (n, ms) =>
+      s"""{"compiles":$n,"compile_ms":${fmt(ms)}}"""
+    }.mkString(""","codegen_runs":[""", ",", "]")
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCHFULL_PATH", "BENCHFULL.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
-        (line(asc, Nil) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        (line(asc, Nil, codegenField) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] full record write failed: ${e.getMessage}")

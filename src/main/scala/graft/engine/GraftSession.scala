@@ -31,6 +31,15 @@ import org.apache.spark.sql.SparkSession
   *    per file op without native IO. Checkpoints, state-store uploads and
   *    artifact IO on a local disk pay no fork; an hdfs or object-store
   *    path is untouched.
+  *  - each generated class is compiled once per JVM ([[CompiledClasses]]):
+  *    per-session artifact isolation is off, so every session and every
+  *    streaming drain runs its tasks under the executor's one class loader
+  *    and shares the codegen cache, and that cache holds the whole board.
+  *    Both are set here as builder confs (the codegen capacity is a static
+  *    conf, read once per JVM), so `spark.newSession()` inherits them; a
+  *    `-D` system property of either key wins. A session built elsewhere
+  *    gets both from [[graft.functions.GraftFunctions.installPlanner]], on
+  *    that session only: its `spark.newSession()` stays isolated.
   */
 object GraftSession {
 
@@ -41,6 +50,7 @@ object GraftSession {
     val session = SparkSession.builder()
     graft.sources.LocalFs.install(k => sys.props.getOrElse(s"spark.hadoop.$k", null),
       (k, v) => session.config(s"spark.hadoop.$k", v))
+    CompiledClasses.install(sys.props.contains, (k, v) => session.config(k, v))
     val spark = session
       .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")

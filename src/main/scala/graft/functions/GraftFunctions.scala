@@ -85,6 +85,15 @@ object GraftFunctions {
     *    on the context's Hadoop conf, before anything here touches the
     *    session state: building the session state qualifies the warehouse
     *    path, which creates (and caches JVM-wide) the `file:` FileSystem;
+    *  - one compile per generated class ([[graft.engine.CompiledClasses]]):
+    *    artifact isolation off and the codegen cache's capacity, each as
+    *    an entry of the session's conf unless the conf has the key. The
+    *    session's artifact manager reads isolation at its first execution
+    *    and a cloned session (a streaming drain's) copies the entry;
+    *    Spark's codegen reads the capacity from the active session's conf
+    *    when it first compiles in the JVM. A session that has already run
+    *    a query keeps the isolation it started with, and a capacity set
+    *    after the JVM's first compile is ignored;
     *  - the as-of planner strategy and its filter-pushdown rule, unless the
     *    session's planner has the strategy (also when the extensions
     *    injected it);
@@ -98,6 +107,8 @@ object GraftFunctions {
   def installPlanner(spark: SparkSession): Unit = synchronized {
     val hadoop = spark.sparkContext.hadoopConfiguration
     graft.sources.LocalFs.install(hadoop.get, hadoop.set)
+    val conf = spark.sessionState.conf
+    graft.engine.CompiledClasses.install(conf.contains, conf.setConfString)
     val exp = spark.experimental
     if (!spark.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy)) {
       exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy

@@ -10,13 +10,15 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partition
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
 
 /** Size-aware execution: a batch query whose inputs are small runs as one
   * partition, with no exchange.
   *
-  * The rule fires on a batch plan whose leaves are all file scans or local
-  * relations and whose summed leaf `stats.sizeInBytes` (file lengths,
-  * known on the driver without a job) is under `thresholdBytes`. It then
+  * The rule fires on a batch plan whose leaves are all file scans, local
+  * relations or reads of a streaming query's memory sink, and whose summed
+  * leaf `stats.sizeInBytes` (file lengths, or rows held on the driver,
+  * known without a job) is under `thresholdBytes`. It then
   * gives every operator that requires a distribution a one-partition
   * input, so `EnsureRequirements` inserts no exchange and AQE plans no
   * query stage:
@@ -64,7 +66,7 @@ case class SmallInput(thresholdBytes: Long) extends Rule[LogicalPlan] {
 
   private def scanLeaf(leaf: LogicalPlan): Boolean = leaf match {
     case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-    case _: LocalRelation => true
+    case _: LocalRelation | _: MemoryPlan => true
     case _ => false
   }
 

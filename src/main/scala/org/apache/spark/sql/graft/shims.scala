@@ -124,3 +124,19 @@ object ParquetFooterBridge {
     }
   }
 }
+
+/** Spark's codegen counters for this JVM: the classes its `CodeGenerator`
+  * has compiled (each miss of its class cache) and the time it spent
+  * compiling them. `CodegenMetrics` is private[spark]. The compile time
+  * is read from `CodeGenerator` only once something has compiled, so a
+  * read never loads it (and sizes its cache) early. Access-only, like
+  * the other bridges here.
+  */
+object CodegenBridge {
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  def compileMs: Double =
+    if (compiles == 0) 0.0
+    else org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6
+}

@@ -187,27 +187,9 @@ class ConcurrencySpec extends SparkTestBase {
   // ---- TRUE second-JVM lease integration (LeaseContender) -------------
 
   private def spawnContender(mode: String, root: String, tag: String,
-      leaseMs: String): Process = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(
-      s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"),
+      leaseMs: String): Process =
+    SecondJvm.start(java.io.File.createTempFile("contender", ".log"),
       "graft.LeaseContender", mode, root, sf, tag, leaseMs)
-    new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true)
-      .redirectOutput(java.io.File.createTempFile("contender", ".log"))
-      .start()
-  }
 
   private def waitFor(cond: => Boolean, ms: Long, what: String): Unit = {
     val deadline = System.currentTimeMillis() + ms

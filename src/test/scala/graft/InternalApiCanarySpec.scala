@@ -91,4 +91,45 @@ class InternalApiCanarySpec extends SparkTestBase {
     assert(spark.table("canary_mem_sink").count() == 3,
       "MemoryStream round-trip broke — did it move out of execution.streaming.runtime?")
   }
+
+  test("canary: ArtifactManager reads isolation lazily, and a cloned session copies it") {
+    import org.apache.spark.sql.graft.{ArtifactBridge, ClonedSession, PlainSession}
+    // engine.CompiledClasses via GraftFunctions.installPlanner sets
+    // spark.sql.artifact.isolation.enabled on a session that already
+    // exists, and a streaming drain runs on a clone of its session: the
+    // session's ArtifactManager must read the key at its first execution
+    // (not when it is built), and a clone must carry the key.
+    val key = graft.engine.CompiledClasses.IsolationKey
+    def session(isolation: String) = {
+      val s = PlainSession.on(spark)
+      s.conf.set(key, isolation)
+      s.range(1).collect()
+      s
+    }
+    val off = session("false")
+    val on = session("true")
+    assert(ArtifactBridge.isolatedAs(off).isEmpty && ArtifactBridge.isolatedAs(on).isDefined,
+      s"ArtifactManager ignored $key set after its session was built — does " +
+        "org.apache.spark.sql.artifact.ArtifactManager still read it lazily?")
+    val (offClone, onClone) = (ClonedSession.of(off), ClonedSession.of(on))
+    assert(ArtifactBridge.isolatedAs(offClone).isEmpty,
+      s"a clone of a session with $key=false is isolated — does " +
+        "SparkSession.cloneSession still copy the session conf to the clone's ArtifactManager?")
+    assert(ArtifactBridge.isolatedAs(onClone).exists(!ArtifactBridge.isolatedAs(on).contains(_)),
+      "a clone of an isolated session is not isolated as itself — did " +
+        "ArtifactManager.clone / JobArtifactState change?")
+  }
+
+  test("canary: CodeGenerator sizes its class cache from SQLConf.get at the JVM's first compile") {
+    // engine.CompiledClasses via GraftFunctions.installPlanner sets
+    // spark.sql.codegen.cache.maxEntries as an entry of the session conf
+    // (a static conf, so not through spark.conf). A second JVM sets it
+    // that way to 1234 on a plain session, compiles once and reads the
+    // capacity of CodeGenerator's cache.
+    val lines = SecondJvm.run(180, "graft.CodegenProbe", "capacity", sf)
+    assert(lines.contains("CAPACITY 1234"),
+      "CodeGenerator's cache capacity did not come from the session conf entry " +
+        "spark.sql.codegen.cache.maxEntries — does CodeGenerator still build its " +
+        s"cache from SQLConf.get.codegenCacheMaxEntries? Probe output:\n${lines.mkString("\n")}")
+  }
 }

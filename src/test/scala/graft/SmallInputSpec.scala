@@ -10,8 +10,9 @@ import org.apache.spark.sql.graft.{DatasetBridge, SizedSession}
 import graft.plans.SmallInput
 
 /** The size rule: below its threshold an aggregate, a global sort, a
-  * window, an equi-join (also one over another's output) and an `except`
-  * plan with no exchange and run as one job; above it, and for every plan the rule leaves alone, the
+  * window, an equi-join (also one over another's output), an `except`
+  * and a sorted read of a memory sink plan with no exchange and run as
+  * one job; above it, and for every plan the rule leaves alone, the
   * physical plan is the one a session without the rule prints; results do
   * not depend on which of the two planned them.
   */
@@ -130,5 +131,21 @@ class SmallInputSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val hashAbove = rows(SparkEntry.queries(name)(distributed, sf)).hashCode
       assert(hashBelow == hashAbove, name)
     }
+  }
+
+  test("a read of a streaming query's memory sink: no exchange, one job, the same rows") {
+    // how every q_stream_* query reads its result: s.table(sink).orderBy(..)
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    mem.addData((3L, "c"), (1L, "a"), (5L, "e"), (2L, "b"), (4L, "d"), (1L, "z"))
+    val sink = "small_input_memory_sink"
+    val q = mem.toDF().toDF("k", "v").writeStream.format("memory").queryName(sink).start()
+    try q.processAllAvailable() finally q.stop()
+    val df = spark.table(sink).orderBy("k", "v")
+    assert(exchanges(df.queryExecution.executedPlan).isEmpty, physical(df))
+    val (_, jobs) = jobsDuring(df.write.format("noop").mode("overwrite").save())
+    assert(jobs == 1, s"the sink read ran $jobs jobs:\n${physical(df)}")
+    assert(df.collect().map(_.toString).toSeq == on(distributed, df).collect().map(_.toString).toSeq)
   }
 }

@@ -23,9 +23,17 @@ object SizedSession {
   import graft.plans.SmallInput
 
   def of(spark: SparkSession, rule: Option[SmallInput]): SparkSession = {
-    val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    val clone = ClonedSession.of(spark)
     val exp = clone.experimental
     exp.extraOptimizations = exp.extraOptimizations.filterNot(_.isInstanceOf[SmallInput]) ++ rule
     clone
   }
+}
+
+/** A clone of `spark`, as a streaming query makes one to run its
+  * micro-batches on. `cloneSession` is private[sql].
+  */
+object ClonedSession {
+  def of(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }
