@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.Tables.{t, tFan}
 import graft.operators._
+import graft.streaming.StateScope
+import graft.streaming.StateScope.rmTemp
 
 /** Warehouse-maintenance / data-quality surface (round 5): CDC upsert,
   * SCD2 history, dictionary fuzzy matching, robust outlier gates,
@@ -15,12 +17,6 @@ object WarehouseQueries {
 
   import Money.cents
 
-  /** Recursively delete per-invocation temp dirs (the 2b queries' landing
-    * parquet + RocksDB checkpoint) once their drains are done — repeated
-    * bench/correctness runs must not accumulate corpus-slice copies and
-    * state stores in /tmp. Best-effort: a failed delete never fails the
-    * query that produced a correct result.
-    */
   /** The FROZEN drift reference — src0's n_chars histogram materialized
     * once per corpus version ([[ArtifactCache]]): production drift
     * monitoring freezes the reference distribution as an artifact when a
@@ -40,18 +36,6 @@ object WarehouseQueries {
         .select(col("hq_bucket").as("bucket"), col("cnt").as("cnt_ref"))
         .write.mode("overwrite").parquet(dir)
     }
-
-  private def rmTemp(dirs: String*): Unit = dirs.foreach { d =>
-    try {
-      val p = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(p)) {
-        val it = java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator()
-        while (it.hasNext) java.nio.file.Files.deleteIfExists(it.next()): Unit
-      }
-    } catch { case _: java.io.IOException => () }
-  }
 
   val all: Seq[Q] = Seq(
 
@@ -531,11 +515,11 @@ object WarehouseQueries {
     // scoreboard: the same events flow through a real Structured Streaming
     // query — file source -> transformWithState rolling z-ring
     // (StreamingAnomaly.score, RocksDB state) -> in-stream anomaly filter
-    // -> memory sink — drained with Trigger.AvailableNow. Scores are
+    // — drained with Trigger.AvailableNow. Scores are
     // bit-identical to the batch operator (exact-long frame sums, same
     // IEEE ops; parity pinned by StreamingAnomalySpec), so the DuckDB
     // oracle is the SAME SQL as the batch query. Only confirmed anomalies
-    // reach the sink, so driver-side memory stays bounded by the alert
+    // leave the stream, so driver-side memory stays bounded by the alert
     // rate, not the stream size.
     Q("q_stream_anomaly",
       Some("""WITH d AS (SELECT event_id, event_type, ts,
@@ -553,33 +537,23 @@ object WarehouseQueries {
              |  CAST(floor(dev / sd * 1000.0) AS BIGINT) AS z_milli
              |FROM z WHERE sd > 0.0 AND abs(dev / sd) > 3.0
              |ORDER BY event_id, event_type, z_milli""".stripMargin),
-      (s, d) => {
-        val sink = "q_stream_anomaly_sink"
-        // RocksDB provider + explicit state-partition sizing for the
-        // duration of the drain (see StateScope — state partitioning is a
-        // state-volume decision, not a CPU-count one).
-        graft.streaming.StateScope.withStateConf(s) {
-          val scored = graft.streaming.StreamingAnomaly.score(
-            graft.Tables.eventsStream(s, d), "event_type", "ts", "event_id",
-            floor(col("value") * lit(100.0)), k = 100)
-          val alerts = scored
+      // single-batch contract matters MOST here: RollingZProcessor orders
+      // rows (ts, tie) only WITHIN a batch, so a multi-batch drain would
+      // score in per-key arrival order and silently diverge from the oracle
+      (s, d) => StateScope.drain(s) {
+          graft.streaming.StreamingAnomaly.score(
+              graft.Tables.eventsStream(s, d), "event_type", "ts", "event_id",
+              floor(col("value") * lit(100.0)), k = 100)
             .filter(col("n_prev") === 100 && abs(col("z")) > 3.0)
             .select(col("tie").as("event_id"), col("key").as("event_type"),
               floor(col("z") * lit(1000.0)).cast("long").as("z_milli"))
-          // single-batch contract matters MOST here: RollingZProcessor
-          // orders rows (ts, tie) only WITHIN a batch, so a multi-batch
-          // drain would score in per-key arrival order and silently
-          // diverge from the oracle
-          graft.streaming.StateScope.drainSingleBatch(alerts, sink)
-        }
-        s.table(sink).orderBy("event_id", "event_type", "z_milli")
-      }),
+        }.orderBy("event_id", "event_type", "z_milli")),
 
     // The STREAMING twin of q_events_session, on the correctness
     // scoreboard: events flow through a real Structured Streaming query —
     // file source -> transformWithState gap sessionizer
-    // (GapSessionProcessor, RocksDB state, event-time timers) -> memory
-    // sink — drained with Trigger.AvailableNow, then the trailing OPEN
+    // (GapSessionProcessor, RocksDB state, event-time timers) — drained
+    // with Trigger.AvailableNow, then the trailing OPEN
     // sessions are recovered from the checkpoint via the state data
     // source (closed log + open-session snapshot, the production
     // "sessions so far" shape). Session bounds are exact epoch-micros, so
@@ -606,23 +580,24 @@ object WarehouseQueries {
       (s, d) => {
         // Fresh checkpoint per invocation: reusing one would resume from
         // committed offsets and drain zero rows on a re-run (bench runs
-        // every query twice).
+        // every query twice). The open sessions are read from it, so the
+        // log is made local before the checkpoint is deleted.
         val ckpt = java.nio.file.Files
           .createTempDirectory("q-stream-session-ckpt").toString
-        graft.streaming.StateScope.withStateConf(s) {
-          val log = graft.streaming.StreamingSessions.drainSessionLog(
+        val log = try {
+          val l = graft.streaming.StreamingSessions.drainSessionLog(
             graft.Tables.eventsStream(s, d), "ts", "user_id",
-            gapMs = 30L * 60L * 1000L, sinkName = "q_stream_session_sink",
-            ckptDir = ckpt)
-          log.select(col("user_id"),
-              row_number().over(org.apache.spark.sql.expressions.Window
-                .partitionBy("user_id").orderBy("start_us"))
-                .cast("long").as("session_id"),
-              col("n_events"),
-              timestamp_micros(col("start_us")).as("session_start"),
-              timestamp_micros(col("last_us")).as("session_end"))
-            .orderBy("user_id", "session_id")
-        }
+            gapMs = 30L * 60L * 1000L, ckptDir = ckpt)
+          s.createDataFrame(java.util.Arrays.asList(l.collect(): _*), l.schema)
+        } finally rmTemp(ckpt)
+        log.select(col("user_id"),
+            row_number().over(org.apache.spark.sql.expressions.Window
+              .partitionBy("user_id").orderBy("start_us"))
+              .cast("long").as("session_id"),
+            col("n_events"),
+            timestamp_micros(col("start_us")).as("session_start"),
+            timestamp_micros(col("last_us")).as("session_end"))
+          .orderBy("user_id", "session_id")
       }),
 
     // The STREAMING twin of q_dedup_minhash, on the correctness
@@ -630,7 +605,7 @@ object WarehouseQueries {
     // query — file source -> minhash banding (the SAME expressions as
     // the batch path) -> transformWithState band-bucket membership
     // (StreamingNearDedup.candidatePairs, RocksDB state: 8 bytes per doc
-    // per band) -> memory sink — drained with Trigger.AvailableNow, then
+    // per band) — drained with Trigger.AvailableNow, then
     // candidates are exact-verified OUTSIDE the state store against the
     // static doc store (stream-static join shape) with the batch
     // bounded_jaccard expression. Over a drained stream the pair set
@@ -642,14 +617,12 @@ object WarehouseQueries {
       Some(s"""WITH ${PipelineQueries.duckPairCtes("0.7")}
               |SELECT id_a, id_b, jac FROM p ORDER BY id_a, id_b""".stripMargin),
       (s, d) => {
-        val sink = "q_stream_neardedup_sink"
-        graft.streaming.StateScope.withStateConf(s) {
-          val cands = graft.streaming.StreamingNearDedup.candidatePairs(
+        val cands = StateScope.drain(s) {
+          graft.streaming.StreamingNearDedup.candidatePairs(
             graft.Tables.tableStream(s, d, "documents"), "doc_id", "text")
-          graft.streaming.StateScope.drainSingleBatch(cands, sink)
         }
         graft.streaming.StreamingNearDedup.verified(
-            s.table(sink).dropDuplicates("new_id", "old_id"),
+            cands.dropDuplicates("new_id", "old_id"),
             graft.Tables.t(s, d, "documents"), "doc_id", "text", threshold = 0.7)
           .select(col("old_id").as("id_a"), col("new_id").as("id_b"), col("jac"))
           .orderBy("id_a", "id_b")
@@ -658,8 +631,8 @@ object WarehouseQueries {
     // Streaming heavy hitters by SpaceSaving (Metwally '05), on the
     // scoreboard: events flow file source -> transformWithState
     // SpaceSaving table (≤ m counters per user in RocksDB — bounded
-    // memory FOREVER, independent of stream length) -> memory sink,
-    // drained AvailableNow. With m = 16 above this data's ≤ 5 distinct
+    // memory FOREVER, independent of stream length), drained
+    // AvailableNow. With m = 16 above this data's ≤ 5 distinct
     // event types per user nothing evicts, so est is the EXACT count and
     // err = 0 at any arrival order — the oracle is a plain GROUP BY.
     // Eviction-pressure behavior (the production regime at unbounded
@@ -671,19 +644,14 @@ object WarehouseQueries {
              |FROM events GROUP BY user_id, event_type
              |HAVING count(*) >= 20
              |ORDER BY user_id, event_type""".stripMargin),
-      (s, d) => {
-        val sink = "q_stream_heavy_sink"
-        graft.streaming.StateScope.withStateConf(s) {
-          val tracked = graft.streaming.StreamingHeavyHitters.track(
+      (s, d) => StateScope.drain(s) {
+          graft.streaming.StreamingHeavyHitters.track(
             graft.Tables.eventsStream(s, d), "user_id", "event_type",
             m = 16, minGuaranteed = 20L)
-          graft.streaming.StateScope.drainSingleBatch(tracked, sink)
         }
-        s.table(sink)
           .select(col("key").cast("long").as("user_id"),
             col("item").as("event_type"), col("est"), col("err"))
-          .orderBy("user_id", "event_type")
-      }),
+          .orderBy("user_id", "event_type")),
 
     // Streaming count-min sketch: the sketch TABLE as stream state —
     // every token explodes to its depth md5 cells, each cell's counter
@@ -691,7 +659,7 @@ object WarehouseQueries {
     // CMS linearity makes the maintained table exactly the batch sketch
     // of everything seen, at ANY batching/arrival order; the drained
     // table oracles against the whole-corpus derivation (single-batch
-    // assert only so the memory sink holds one emission generation).
+    // assert only so the drain returns one emission generation).
     Q("q_stream_cms",
       Some("""WITH toks AS (SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents),
              |rows_ AS (SELECT unnest(range(4)) AS j),
@@ -701,17 +669,11 @@ object WarehouseQueries {
              |  FROM toks CROSS JOIN rows_ GROUP BY j, b)
              |SELECT CAST(j AS INT) AS cms_row, b AS cms_bucket, cnt
              |FROM cells ORDER BY cms_row, cms_bucket""".stripMargin),
-      (s, d) => {
-        val sink = "q_stream_cms_sink"
-        graft.streaming.StateScope.withStateConf(s) {
+      (s, d) => StateScope.drain(s) {
           val toks = graft.Tables.tableStream(s, d, "documents")
             .select(explode(split(lower(col("text")), " ")).as("token"))
-          graft.streaming.StateScope.drainSingleBatch(
-            graft.streaming.StreamingCms.track(toks, "token",
-              depth = 4, width = 256), sink)
-        }
-        s.table(sink).orderBy("cms_row", "cms_bucket")
-      }),
+          graft.streaming.StreamingCms.track(toks, "token", depth = 4, width = 256)
+        }.orderBy("cms_row", "cms_bucket")),
 
     // Streaming priority sampling (the monitor form of
     // q_sample_priority_grouped): per source, the k+1 highest
@@ -719,7 +681,7 @@ object WarehouseQueries {
     // functions of (id, w), so the maintained top-k SET is
     // arrival-order-independent and a full drain equals the batch
     // sampler's draw, estimator included — the oracle IS the batch SQL.
-    // Single-batch drain asserted only so the memory sink holds one
+    // Single-batch drain asserted only so the drain returns one
     // emission generation (the sample itself is batching-proof,
     // StreamingSampleSpec pins the multi-batch case).
     Q("q_stream_sample",
@@ -737,21 +699,15 @@ object WarehouseQueries {
              |  greatest(b.w * 4294967296, tau.tau) AS est_w_scaled
              |FROM b JOIN tau USING (source) WHERE rk <= 8
              |ORDER BY source, priority DESC, doc_id""".stripMargin),
-      (s, d) => {
-        val sink = "q_stream_sample_sink"
-        graft.streaming.StateScope.withStateConf(s) {
+      (s, d) => StateScope.drain(s) {
           val prioritized = Mixture.prioritized(
             graft.Tables.tableStream(s, d, "documents"), "doc_id",
             length(col("text")))
-          val tracked = graft.streaming.StreamingSample.track(
-            prioritized, "source", "doc_id", k = 8)
-          graft.streaming.StateScope.drainSingleBatch(tracked, sink)
+          graft.streaming.StreamingSample.track(prioritized, "source", "doc_id", k = 8)
         }
-        s.table(sink)
           .select(col("key").as("source"), col("id").as("doc_id"),
             col("w"), col("priority"), col("est_w_scaled"))
-          .orderBy(col("source"), col("priority").desc, col("doc_id"))
-      }),
+          .orderBy(col("source"), col("priority").desc, col("doc_id"))),
 
     // Streaming exact-dedup monitor (the streaming twin of q_dedup_exact,
     // and the monitor form of the ingest question q_dedup_incr answers in
@@ -760,24 +716,17 @@ object WarehouseQueries {
     // are both associative+commutative, so the maintained table equals
     // the batch dedup of everything seen at ANY batching/arrival order
     // (CMS-style linearity, two-slice case pinned by StreamingDedupSpec);
-    // the single-batch assert below only keeps the memory sink to one
-    // emission generation. Documents never shuffle — per-partition
+    // the single-batch assert only keeps the drain to one emission
+    // generation. Documents never shuffle — per-partition
     // (digest, min id, count) pre-reduction, then digest-keyed state.
     Q("q_stream_dedup",
       Some("""SELECT CAST(min(doc_id) AS BIGINT) AS keep_id,
              |  CAST(count(*) AS BIGINT) AS n_copies
              |FROM documents GROUP BY sha256(text) ORDER BY keep_id""".stripMargin),
-      (s, d) => {
-        val sink = "q_stream_dedup_sink"
-        graft.streaming.StateScope.withStateConf(s) {
-          graft.streaming.StateScope.drainSingleBatch(
-            graft.streaming.StreamingDedup.track(
-              graft.Tables.tableStream(s, d, "documents"), "doc_id", "text"),
-            sink)
-        }
-        s.table(sink).select(col("keep_id"), col("n_copies"))
-          .orderBy("keep_id")
-      }),
+      (s, d) => StateScope.drain(s) {
+          graft.streaming.StreamingDedup.track(
+            graft.Tables.tableStream(s, d, "documents"), "doc_id", "text")
+        }.select(col("keep_id"), col("n_copies")).orderBy("keep_id")),
 
     // The CROSS-BATCH arrival-order contract of the streaming ingest
     // gate, made DuckDB-verifiable (every other scoreboard drain asserts
@@ -788,10 +737,10 @@ object WarehouseQueries {
     // first-wins keepFirst gate. The keeper for a digest is therefore
     // min(even ids) when the content appeared in slice 1, else
     // min(odd ids): a closed-form oracle over arrival order itself.
-    // State (RocksDB, 8 partitions) persists across the two generations
-    // via the checkpoint; the memory sink can't resume one, so emissions
-    // collect through foreachBatch (driver-bounded: one row per distinct
-    // digest, the same bound as the memory-sink drains).
+    // State (RocksDB, 4 partitions: StateScope.StatePartitions) persists
+    // across the two generations via the checkpoint; each generation's
+    // drain returns its emissions (driver-bounded: one row per distinct
+    // digest), folded last-write-wins.
     Q("q_stream_dedup_2b",
       Some("""WITH d AS (SELECT doc_id, sha256(text) AS digest,
              |    doc_id % 2 AS par FROM documents),
@@ -812,33 +761,21 @@ object WarehouseQueries {
         docs.filter(col("doc_id") % 2 === 0).coalesce(1)
           .write.mode("overwrite").parquet(land)
         val schema = Tables.parquet(s, land).schema
-        // Null-tolerant accumulator: a NULL-text document's digest is
-        // restored to NULL on emission (StreamingDedup's sentinel), and
-        // ConcurrentHashMap forbids null keys — so a plain HashMap with
-        // explicit synchronization (foreachBatch runs on the stream's
-        // microbatch thread, not this one).
-        val acc = scala.collection.mutable.HashMap[String, Long]()
-        def drainGeneration(): Unit =
-          graft.streaming.StateScope.withStateConf(s) {
-            val stream = s.readStream.schema(schema).parquet(land)
-            graft.streaming.StateScope.drainSingleBatchInto(
-              graft.streaming.StreamingDedup.keepFirst(
-                stream, "doc_id", "text"), ckpt) { b =>
-              val emitted = b.collect()
-              acc.synchronized {
-                emitted.foreach(r => acc.put(r.getString(0), r.getLong(1)))
-              }
-            }
-          }
-        drainGeneration() // generation 1: the even-id slice
+        def drainGeneration() = StateScope.drain(s, Some(ckpt)) {
+          graft.streaming.StreamingDedup.keepFirst(
+            s.readStream.schema(schema).parquet(land), "doc_id", "text")
+        }.collect()
+        val gen1 = drainGeneration() // the even-id slice
         // slice 2 lands; the resumed generation sees ONLY the new file
         docs.filter(col("doc_id") % 2 === 1).coalesce(1)
           .write.mode("append").parquet(land)
-        drainGeneration() // generation 2: first-wins vs checkpointed state
-        // both generations drained and collected — the landing slices and
-        // checkpointed state have served their purpose
+        val gen2 = drainGeneration() // first-wins vs checkpointed state
+        // both generations drained — the landing slices and checkpointed
+        // state have served their purpose
         rmTemp(land, ckpt)
-        acc.synchronized(acc.toSeq)
+        // last write wins per digest; a NULL-text document's digest is
+        // NULL on emission (StreamingDedup's sentinel), a valid Map key
+        (gen1 ++ gen2).map(r => r.getString(0) -> r.getLong(1)).toMap.toSeq
           .toDF("digest", "keep_id").orderBy("keep_id")
       }),
 
@@ -874,29 +811,18 @@ object WarehouseQueries {
         docs.filter(col("doc_id") % 2 === 0).coalesce(1)
           .write.mode("overwrite").parquet(land)
         val schema = Tables.parquet(s, land).schema
-        // (row, bucket) -> latest emitted count; foreachBatch runs on the
-        // stream's microbatch thread, so guard the map explicitly.
-        val acc = scala.collection.mutable.HashMap[(Int, Long), Long]()
-        def drainGeneration(): Unit =
-          graft.streaming.StateScope.withStateConf(s) {
-            val toks = s.readStream.schema(schema).parquet(land)
-              .select(explode(split(lower(col("text")), " ")).as("token"))
-            graft.streaming.StateScope.drainSingleBatchInto(
-              graft.streaming.StreamingCms.track(toks, "token",
-                depth = 4, width = 256), ckpt) { b =>
-              val emitted = b.collect()
-              acc.synchronized {
-                emitted.foreach(r =>
-                  acc.put((r.getInt(0), r.getLong(1)), r.getLong(2)))
-              }
-            }
-          }
-        drainGeneration() // generation 1: the even-id slice
+        def drainGeneration() = StateScope.drain(s, Some(ckpt)) {
+          val toks = s.readStream.schema(schema).parquet(land)
+            .select(explode(split(lower(col("text")), " ")).as("token"))
+          graft.streaming.StreamingCms.track(toks, "token", depth = 4, width = 256)
+        }.collect()
+        val gen1 = drainGeneration() // the even-id slice
         docs.filter(col("doc_id") % 2 === 1).coalesce(1)
           .write.mode("append").parquet(land)
-        drainGeneration() // generation 2: accumulation vs resumed state
+        val gen2 = drainGeneration() // accumulation vs resumed state
         rmTemp(land, ckpt)
-        acc.synchronized(acc.toSeq)
+        // (row, bucket) -> latest emitted count: last write wins
+        (gen1 ++ gen2).map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap.toSeq
           .map { case ((r, bkt), n) => (r, bkt, n) }
           .toDF("cms_row", "cms_bucket", "cnt")
           .orderBy("cms_row", "cms_bucket")
@@ -922,16 +848,11 @@ object WarehouseQueries {
               |SELECT CAST(min(doc_id) AS BIGINT) AS keep_id
               |FROM ok GROUP BY sha256(text) ORDER BY keep_id""".stripMargin)
     },
-      (s, d) => {
-        val sink = "q_stream_curation_sink"
-        graft.streaming.StateScope.withStateConf(s) {
+      (s, d) => StateScope.drain(s) {
           val ok = graft.Tables.tableStream(s, d, "documents")
             .filter(graft.operators.TextAnalysis.gopherGate(col("text")))
-          graft.streaming.StateScope.drainSingleBatch(
-            graft.streaming.StreamingDedup.keepFirst(ok, "doc_id", "text"), sink)
-        }
-        s.table(sink).select(col("keep_id")).orderBy("keep_id")
-      }),
+          graft.streaming.StreamingDedup.keepFirst(ok, "doc_id", "text")
+        }.select(col("keep_id")).orderBy("keep_id")),
 
     // The streaming ingest CONSULTING THE STORED BATCH ARTIFACT — the
     // edge q_stream_curation leaves open: that pipeline gates + dedups
@@ -957,20 +878,17 @@ object WarehouseQueries {
               |FROM ok GROUP BY sha256(text) ORDER BY keep_id""".stripMargin)
     },
       (s, d) => {
-        val sink = "q_stream_curation_vs_store_sink"
         // the nightly artifact must exist before the stream starts — the
         // production ordering (ingest consumes what the batch job wrote)
         val losers = Tables.parquet(s,
             PipelineQueries.compactClusterArtifactDir(s, d) + "/clusters")
           .filter(col("v") =!= col("cluster_rep")).select(col("v").as("doc_id"))
-        graft.streaming.StateScope.withStateConf(s) {
+        StateScope.drain(s) {
           val ok = graft.Tables.tableStream(s, d, "documents")
             .filter(graft.operators.TextAnalysis.gopherGate(col("text")))
             .join(losers, Seq("doc_id"), "left_anti")
-          graft.streaming.StateScope.drainSingleBatch(
-            graft.streaming.StreamingDedup.keepFirst(ok, "doc_id", "text"), sink)
-        }
-        s.table(sink).select(col("keep_id")).orderBy("keep_id")
+          graft.streaming.StreamingDedup.keepFirst(ok, "doc_id", "text")
+        }.select(col("keep_id")).orderBy("keep_id")
       }),
 
     // Streaming histogram-quantile monitor (the streaming twin of
@@ -982,7 +900,7 @@ object WarehouseQueries {
     // sketch of everything seen at ANY batching/arrival order. The p50/
     // p90/p99 estimates then run over the DRAINED sketch (groups x 64
     // rows, never the corpus) — the continuously-current SLO readout.
-    // Single-batch assert keeps the memory sink to one emission
+    // Single-batch assert keeps the drain to one emission
     // generation; state is at most groups x buckets longs FOREVER.
     Q("q_stream_quantile",
       Some("""WITH v AS (SELECT event_type AS g,
@@ -999,16 +917,14 @@ object WarehouseQueries {
              |  CAST((qb + 1) * 200 AS BIGINT) AS est
              |FROM q ORDER BY event_type, phi_ppm, est""".stripMargin),
       (s, d) => {
-        val sink = "q_stream_quantile_sink"
-        graft.streaming.StateScope.withStateConf(s) {
-          val tracked = graft.streaming.StreamingHistQuantile.track(
+        val sketch = StateScope.drain(s) {
+          graft.streaming.StreamingHistQuantile.track(
             graft.Tables.eventsStream(s, d), "event_type",
             floor(col("value") * lit(100.0)).cast("long"),
             lo = 0L, hi = 12800L, buckets = 64)
-          graft.streaming.StateScope.drainSingleBatch(tracked, sink)
         }
         graft.operators.HistQuantile.quantiles(
-            s.table(sink).withColumnRenamed("g", "event_type"),
+            sketch.withColumnRenamed("g", "event_type"),
             Seq("event_type"), lo = 0L, hi = 12800L, buckets = 64,
             phisPpm = Seq(500000L, 900000L, 990000L))
           .orderBy("event_type", "phi_ppm", "est")
@@ -1023,7 +939,7 @@ object WarehouseQueries {
     // rows, never the corpus). The production shape: the reference is a
     // frozen batch artifact, the current side is live ingest, and the
     // monitor reads per-source drift at any moment. Single-batch drain
-    // asserted (memory sink holds one emission generation); the oracle
+    // asserted (the drain returns one emission generation); the oracle
     // re-derives counts and PSI terms per source in SQL.
     Q("q_stream_drift",
       Some("""WITH cur AS (SELECT source, CAST(n_chars AS BIGINT) AS v
@@ -1053,15 +969,12 @@ object WarehouseQueries {
              |FROM f JOIN tot t USING (source) ORDER BY source, bucket""".stripMargin),
       (s, d) => {
         import graft.operators.{Drift, HistQuantile}
-        val sink = "q_stream_drift_sink"
-        graft.streaming.StateScope.withStateConf(s) {
+        val curCnt = StateScope.drain(s) {
           val cur = graft.Tables.tableStream(s, d, "documents")
             .filter(col("source") =!= "src0")
-          graft.streaming.StateScope.drainSingleBatch(
-            graft.streaming.StreamingHistQuantile.track(cur, "source",
-              col("n_chars"), lo = 0L, hi = 1024L, buckets = 16), sink)
-        }
-        val curCnt = s.table(sink).select(col("g").as("source"),
+          graft.streaming.StreamingHistQuantile.track(cur, "source",
+            col("n_chars"), lo = 0L, hi = 1024L, buckets = 16)
+        }.select(col("g").as("source"),
           col("hq_bucket").as("bucket"), col("cnt").as("cnt_cur"))
         val docs = t(s, d, "documents")
         // the reference side is the FROZEN artifact, not a live recompute
@@ -1143,31 +1056,26 @@ object WarehouseQueries {
              | AND a.event_type = 'view' AND b.event_type = 'click'
              | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 2 HOUR
              |ORDER BY a.user_id, view_id, click_id""".stripMargin),
-      (s, d) => {
-        val sink = "q_stream_join_sink"
-        // State-partition sizing matters MOST here: a stream-stream join
-        // materializes FOUR state stores per shuffle partition, and store
-        // initialization is the drain's dominant fixed cost (~30 ms/store
-        // measured: 128 stores at 32 partitions ≈ 3.7 s/run vs a 0.7 s
-        // batch twin). StateScope pins 8 partitions (a state-volume
-        // decision, see its doc) and the production RocksDB provider,
-        // restoring the session defaults after.
-        graft.streaming.StateScope.withStateConf(s) {
+      // State-partition sizing matters MOST here: a stream-stream join
+      // materializes FOUR state stores per shuffle partition, and store
+      // initialization is the drain's dominant fixed cost (~30 ms/store
+      // measured: 128 stores at 32 partitions ≈ 3.7 s/run vs a 0.7 s
+      // batch twin). StateScope pins 4 partitions (StatePartitions, a
+      // state-volume decision, see its doc) and the production RocksDB
+      // provider, restoring the session defaults after.
+      (s, d) => StateScope.drain(s) {
           val views = graft.Tables.eventsStream(s, d)
             .filter(col("event_type") === "view")
           val clicks = graft.Tables.eventsStream(s, d)
             .filter(col("event_type") === "click")
-          val joined = graft.streaming.StreamingSessions.intervalJoin(
+          graft.streaming.StreamingSessions.intervalJoin(
             views, clicks, "user_id", "ts", "4 hours", "2 hours",
             carryLeft = Seq("event_id"), carryRight = Seq("event_id"))
-          graft.streaming.StateScope.drainSingleBatch(joined, sink)
         }
-        s.table(sink)
           .select(col("k").as("user_id"),
             col("l_event_id").as("view_id"), col("r_event_id").as("click_id"),
             col("l_ts").as("view_ts"), col("r_ts").as("click_ts"))
-          .orderBy("user_id", "view_id", "click_id")
-      }),
+          .orderBy("user_id", "view_id", "click_id")),
 
     // Pairwise Pearson correlation matrix (Profile.correlations): all 6
     // pairs over 4 quantized lineitem measures from ONE scan — n + 2k

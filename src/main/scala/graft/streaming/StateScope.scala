@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import scala.jdk.CollectionConverters._
 
-/** Session-conf scope for the streaming scoreboard drains.
+/** The streaming scoreboard drains: [[StateScope.drain]] runs every
+  * q_stream_* stream and returns its rows as a local relation, under a
+  * session-conf scope ([[StateScope.withStateConf]]).
   *
   * Two decisions every stateful drain shares, applied for the duration of
   * the drain and restored after (batch queries keep the session default):
@@ -48,45 +51,64 @@ object StateScope {
   /** Scoreboard drains' state-partition sizing (see class doc, point 2). */
   val StatePartitions = 4
 
-  /** The scoreboard drain harness every monitor query shares: drain `df`
-    * into a named memory sink with Trigger.AvailableNow and assert the
-    * drain was exactly ONE data micro-batch. Oracle parity depends on it
-    * two ways: monitors re-emit touched keys per batch (a multi-batch
-    * drain appends stale generations into the append-mode memory sink),
-    * and order-sensitive monitors (the anomaly scorer) order rows only
-    * WITHIN a batch. Fail loudly instead of silently diverging.
+  /** The one drain every scoreboard query (q_stream_*) runs: builds the
+    * stream with `build` inside [[withStateConf]], drains it with
+    * Trigger.AvailableNow through foreachBatch, and returns the emitted
+    * rows as a local relation on `spark`, under the stream's own schema.
+    * Nothing is left behind in the session: no sink view, no active
+    * query, no listener bus of the stream's session clone
+    * ([[org.apache.spark.sql.graft.StreamCloneBridge]]). The stream
+    * starts on the caller's session, so listeners on `spark.streams` see
+    * it.
+    *
+    * With `checkpoint = None` the drain runs on a fresh temp checkpoint
+    * and deletes it afterwards. With `Some(dir)` the state stays in `dir`
+    * and the next drain on it resumes there (the cross-generation
+    * q_stream_*_2b queries), and the caller deletes it.
+    *
+    * Each drain must be exactly ONE data micro-batch. Oracle parity
+    * depends on it two ways: monitors re-emit touched keys per batch (a
+    * multi-batch drain would return stale generations too), and
+    * order-sensitive monitors (the anomaly scorer) order rows only WITHIN
+    * a batch. Fail loudly instead of silently diverging.
     */
-  def drainSingleBatch(df: DataFrame, sinkName: String): Unit = {
-    val q = df.writeStream.outputMode("append")
-      .format("memory").queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches == 1,
-      s"$sinkName oracle requires a single-batch drain; saw $dataBatches data micro-batches")
+  def drain(spark: SparkSession, checkpoint: Option[String] = None)(
+      build: => DataFrame): DataFrame = {
+    val ckpt = checkpoint.getOrElse(
+      java.nio.file.Files.createTempDirectory("graft-drain-ckpt").toString)
+    try withStateConf(spark) {
+      val df = build
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val q = df.writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val got = b.collect()
+          rows.synchronized(rows ++= got): Unit
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally org.apache.spark.sql.graft.StreamCloneBridge.detach(q)
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      require(dataBatches == 1,
+        s"the scoreboard oracles require a single-batch drain; saw $dataBatches data micro-batches")
+      spark.createDataFrame(rows.synchronized(rows.toList).asJava, df.schema)
+    } finally if (checkpoint.isEmpty) rmTemp(ckpt)
   }
 
-  /** Checkpointed single-batch drain into a caller-owned collector — the
-    * multi-generation form of [[drainSingleBatch]]: the memory sink
-    * cannot resume a checkpoint, so cross-restart scoreboard queries
-    * (e.g. q_stream_dedup_2b's two landing slices) drain through
-    * foreachBatch instead and RESUME state from `checkpoint` on the next
-    * call. Each generation must still be exactly one DATA micro-batch
-    * (same oracle-parity rationale as [[drainSingleBatch]]: one emission
-    * generation per drain, within-batch ordering only).
+  /** Delete each local directory tree in `dirs`, in this JVM (no `rm`
+    * process); a missing or undeletable path is skipped.
     */
-  def drainSingleBatchInto(df: DataFrame, checkpoint: String)(
-      collect: DataFrame => Unit): Unit = {
-    val q = df.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, _: Long) => collect(b) }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches == 1,
-      s"checkpointed drain requires a single data micro-batch per generation; saw $dataBatches")
+  def rmTemp(dirs: String*): Unit = dirs.foreach { d =>
+    try {
+      val p = java.nio.file.Paths.get(d)
+      if (java.nio.file.Files.exists(p)) {
+        val it = java.nio.file.Files.walk(p)
+          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .iterator()
+        while (it.hasNext) java.nio.file.Files.deleteIfExists(it.next()): Unit
+      }
+    } catch { case _: java.io.IOException => () }
   }
 
   /** Serializes [[withStateConf]] bodies: two overlapping drains would
@@ -104,11 +126,11 @@ object StateScope {
     * a drain holds the scope silently plans with `statePartitions`
     * shuffle partitions and the RocksDB provider conf. Callers that mix
     * concurrent batch and streaming work must give the drain its own
-    * session (`spark.newSession()` — build the stream AND read its
-    * memory sink from that session) or accept the pinned conf. The
+    * session (`spark.newSession()`) or accept the pinned conf. The
     * scoreboard harness (Bench/Verify) runs queries sequentially, so the
     * single-drain, no-concurrent-batch precondition holds there by
-    * construction; ConcurrencySpec pins the batch-vs-batch case only.
+    * construction; ConcurrencySpec pins the batch-vs-batch case and the
+    * drain-vs-drain turn-taking.
     */
   def withStateConf[A](spark: SparkSession,
       statePartitions: Int = StatePartitions)(body: => A): A = confLock.synchronized {
@@ -129,7 +151,10 @@ object StateScope {
       "spark.sql.streaming.stateStore.providerClass" -> RocksDb,
       "spark.sql.shuffle.partitions" -> statePartitions.toString,
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
-    val prev = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // the session's own settings (getAll): a key it never set is unset
+    // again after, not set to the default getOption would read back
+    val set = spark.conf.getAll
+    val prev = pinned.map { case (k, _) => k -> set.get(k) }
     pinned.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {

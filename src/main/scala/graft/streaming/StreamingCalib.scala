@@ -37,7 +37,7 @@ class CalibProcessor extends StatefulProcessor[String, CalibRow, CalibRow] {
   */
 object StreamingCalib {
 
-  // Runs under the same StateScope sizing as the scoreboard drains (8
+  // Runs under the same StateScope sizing as the scoreboard drains (4
   // state partitions), so the probe's store-init share matches what a
   // drain actually pays — the reading is the drains' startup floor, not
   // the session-CPU-count store cost.

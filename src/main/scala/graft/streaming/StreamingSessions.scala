@@ -123,7 +123,7 @@ object StreamingSessions {
 
   /** Drain a bounded stream through [[GapSessionProcessor]] and return the
     * COMPLETE session log: sessions closed in-stream (gap exceeded, or gap
-    * timer fired as the watermark advanced) come from the sink; the trailing
+    * timer fired as the watermark advanced) come from the drain; the trailing
     * still-open sessions come from the checkpointed state store via Spark's
     * state data source — the production pattern for "sessions so far"
     * reporting over a live pipeline (closed log + open-session snapshot),
@@ -137,25 +137,18 @@ object StreamingSessions {
     * Oracle parity assumes a single data micro-batch (same contract as
     * q_stream_anomaly): the processor orders rows by ts only WITHIN a batch,
     * so a multi-batch drain would sessionize per-key arrival order.
-    * Asserted below — fails loudly instead of silently diverging.
+    * [[StateScope.drain]] asserts it: fails loudly instead of silently
+    * diverging. The open sessions are read from `ckptDir` lazily, so the
+    * caller keeps it until the log has been read.
     */
   def drainSessionLog(events: DataFrame, tsCol: String, userCol: String,
-      gapMs: Long, sinkName: String, ckptDir: String): DataFrame = {
+      gapMs: Long, ckptDir: String): DataFrame = {
     val spark = events.sparkSession
-    val q = sessionizeTws(events, tsCol, userCol, "0 seconds", gapMs)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches == 1,
-      s"drainSessionLog requires a single-batch drain; saw $dataBatches data micro-batches")
-    val closed = spark.table(sinkName).select(
-      col("user_id"), col("start_us"),
-      (col("end_us") - lit(gapMs * 1000L)).as("last_us"),
-      col("n_events"))
+    val closed = StateScope.drain(spark, Some(ckptDir))(
+        sessionizeTws(events, tsCol, userCol, "0 seconds", gapMs))
+      .select(col("user_id"), col("start_us"),
+        (col("end_us") - lit(gapMs * 1000L)).as("last_us"),
+        col("n_events"))
     val open = spark.read.format("statestore")
       .option("path", ckptDir)
       .option("stateVarName", "open_session")

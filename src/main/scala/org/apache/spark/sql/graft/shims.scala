@@ -59,6 +59,29 @@ object StateStoreBridge {
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 }
 
+/** A stopped stream's leftover listener bus. Every stream runs on a clone
+  * of the session that started it (`StreamExecution.sparkSessionForStream`).
+  * Stateful operators read the clone's `streams` for the state-store
+  * coordinator, which builds the clone a StreamingQueryManager, and that
+  * manager's StreamingQueryListenerBus joins the context's LiveListenerBus
+  * and is never removed. Nobody adds a listener to it (query events post
+  * to the starting session's manager), so each stream started would leave
+  * one dead listener on the `streams` queue for the life of the context.
+  * `detach` removes it once the query has stopped. The manager's bus is a
+  * private val, read by reflection; StreamExecution is sql-internal.
+  */
+object StreamCloneBridge {
+  def detach(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val clone = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.sparkSessionForStream
+    val bus = classOf[org.apache.spark.sql.classic.StreamingQueryManager]
+      .getDeclaredField("listenerBus")
+    bus.setAccessible(true)
+    clone.sparkContext.removeSparkListener(
+      bus.get(clone.streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+  }
+}
+
 /** Same access story for constructing a DataFrame from a custom logical
   * plan node (Dataset.ofRows is private[sql] in Spark 4).
   */

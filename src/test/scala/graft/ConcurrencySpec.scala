@@ -16,12 +16,11 @@ import scala.jdk.CollectionConverters._
   * its sequential run, plus the fixed-temp-view query raced against
   * ITSELF (createOrReplaceTempView on the same name from four threads).
   *
-  * Streaming drains: two concurrent drains of the SAME scoreboard query
-  * collide by design (per-query-constant memory-sink names — the drain
-  * harness is a bench/oracle rig, not a server surface), but drains with
-  * their OWN checkpoints and foreachBatch sinks are safe: `StateScope
-  * .withStateConf` serializes the conf scope on an internal lock, so a
-  * 2-way race degrades to turn-taking — pinned below.
+  * Streaming drains: `StateScope.drain` gives each drain its own
+  * checkpoint and returns its rows as a local relation, with no sink view
+  * or other per-query name, and it holds the conf scope
+  * (`StateScope.withStateConf`) on an internal lock, so a 2-way race
+  * degrades to turn-taking — pinned below.
   */
 class ConcurrencySpec extends SparkTestBase {
 
@@ -72,33 +71,24 @@ class ConcurrencySpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val shuffleKey = "spark.sql.shuffle.partitions"
     val prevShuffle = spark.conf.get(shuffleKey)
-    def drain(tag: String, rows: Seq[(Long, String)]): Set[(String, Long)] = {
-      val out = scala.collection.mutable.Set.empty[(String, Long)]
-      graft.streaming.StateScope.withStateConf(spark) {
-        val mem = MemoryStream[(Long, String)]
-        mem.addData(rows: _*)
-        val ckpt = java.nio.file.Files
-          .createTempDirectory(s"graft-race-$tag").toString
+    def drain(rows: Seq[(Long, String)]): Set[(String, Long)] = {
+      val mem = MemoryStream[(Long, String)]
+      mem.addData(rows: _*)
+      graft.streaming.StateScope.drain(spark) {
         val docs = mem.toDF()
           .withColumnRenamed("_1", "doc_id").withColumnRenamed("_2", "text")
-        graft.streaming.StateScope.drainSingleBatchInto(
-          graft.streaming.StreamingDedup.keepFirst(docs, "doc_id", "text"),
-          ckpt) { b =>
-          val got = b.collect().map(r => (r.getString(0), r.getLong(1)))
-          out.synchronized { out ++= got }
-        }
-      }
-      out.toSet
+        graft.streaming.StreamingDedup.keepFirst(docs, "doc_id", "text")
+      }.collect().map(r => (r.getString(0), r.getLong(1))).toSet
     }
     val rowsA = (1 to 30).map(i => (i.toLong, s"A ${i % 5}"))
     val rowsB = (1 to 40).map(i => (100L + i, s"B ${i % 7}"))
-    val seqA = drain("a0", rowsA)
-    val seqB = drain("b0", rowsB)
+    val seqA = drain(rowsA)
+    val seqB = drain(rowsB)
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val (gotA, gotB) = Await.result(
-        Future(drain("a1", rowsA)).zip(Future(drain("b1", rowsB))), 10.minutes)
+        Future(drain(rowsA)).zip(Future(drain(rowsB))), 10.minutes)
       assert(gotA == seqA, s"drain A diverged under the race: $gotA vs $seqA")
       assert(gotB == seqB, s"drain B diverged under the race: $gotB vs $seqB")
     } finally pool.shutdown()

@@ -92,6 +92,30 @@ class InternalApiCanarySpec extends SparkTestBase {
       "MemoryStream round-trip broke — did it move out of execution.streaming.runtime?")
   }
 
+  test("canary: StreamCloneBridge detaches the listener bus a stateful stream's clone leaves") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.graft.{SessionFootprint, StreamCloneBridge}
+    import spark.implicits._
+    // shims.scala: StreamExecution.sparkSessionForStream and the private
+    // StreamingQueryManager.listenerBus. StateScope.drain relies on both
+    // to leave the context's listener bus as it found it.
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[Int]
+    mem.addData(1, 2, 3)
+    spark.streams // the session's own manager and bus exist before counting
+    def buses = SessionFootprint.of(spark).streamingListenerBuses
+    val before = buses
+    val q = mem.toDS().groupBy("value").count()
+      .writeStream.outputMode("complete").format("noop").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(buses == before + 1,
+      "a stateful stream's session clone no longer leaves a listener bus behind — " +
+        "is StreamCloneBridge still needed?")
+    StreamCloneBridge.detach(q)
+    assert(buses == before, "StreamCloneBridge did not remove the clone's bus — did " +
+      "StreamExecution.sparkSessionForStream or StreamingQueryManager.listenerBus move?")
+  }
+
   test("canary: ArtifactManager reads isolation lazily, and a cloned session copies it") {
     import org.apache.spark.sql.graft.{ArtifactBridge, ClonedSession, PlainSession}
     // engine.CompiledClasses via GraftFunctions.installPlanner sets

@@ -11,7 +11,7 @@ import graft.plans.SmallInput
 
 /** The size rule: below its threshold an aggregate, a global sort, a
   * window, an equi-join (also one over another's output), an `except`
-  * and a sorted read of a memory sink plan with no exchange and run as
+  * and a sorted read of a drained stream plan with no exchange and run as
   * one job; above it, and for every plan the rule leaves alone, the
   * physical plan is the one a session without the rule prints; results do
   * not depend on which of the two planned them.
@@ -133,19 +133,20 @@ class SmallInputSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a read of a streaming query's memory sink: no exchange, one job, the same rows") {
-    // how every q_stream_* query reads its result: s.table(sink).orderBy(..)
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    mem.addData((3L, "c"), (1L, "a"), (5L, "e"), (2L, "b"), (4L, "d"), (1L, "z"))
-    val sink = "small_input_memory_sink"
-    val q = mem.toDF().toDF("k", "v").writeStream.format("memory").queryName(sink).start()
-    try q.processAllAvailable() finally q.stop()
-    val df = spark.table(sink).orderBy("k", "v")
+  test("a warm q_stream_anomaly result: no exchange, two jobs in all, the same rows") {
+    // how every q_stream_* query reads its result: StateScope.drain returns
+    // the stream's rows as a local relation, ordered and reshaped after
+    val query = SparkEntry.queries("q_stream_anomaly")
+    query(spark, sf).collect() // cold: codegen and the events stream's first listing
+    val (df, jobs) = jobsDuring {
+      val df = query(spark, sf)
+      df.write.format("noop").mode("overwrite").save()
+      df
+    }
     assert(exchanges(df.queryExecution.executedPlan).isEmpty, physical(df))
-    val (_, jobs) = jobsDuring(df.write.format("noop").mode("overwrite").save())
-    assert(jobs == 1, s"the sink read ran $jobs jobs:\n${physical(df)}")
-    assert(df.collect().map(_.toString).toSeq == on(distributed, df).collect().map(_.toString).toSeq)
+    // the drain's one micro-batch, then the result's own action
+    assert(jobs == 2, s"q_stream_anomaly ran $jobs jobs:\n${physical(df)}")
+    assert(df.collect().map(_.toString).toSeq ==
+      on(distributed, df).collect().map(_.toString).toSeq)
   }
 }

@@ -70,34 +70,22 @@ class StreamingLayoutSpec extends SparkTestBase {
     // sessionization exactly, or fail LOUDLY on its batch-count require —
     // never silently mis-order.
     import org.apache.spark.sql.functions._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tmp = Files.createTempDirectory("graft-layout-multi-").toString
-      Tables.t(spark, sf, "events").repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-      val ckpt = Files.createTempDirectory("graft-layout-multi-ckpt").toString
-      val log = graft.streaming.StreamingSessions.drainSessionLog(
-        Tables.eventsStream(spark, tmp), "ts", "user_id",
-        gapMs = 30L * 60L * 1000L, sinkName = "layout_multi_session_sink",
-        ckptDir = ckpt)
-      val streamed = log.select(col("user_id"), col("start_us"),
-          col("last_us"), col("n_events"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      val batch = graft.operators.Sessionize.aggByGap(
-          Tables.t(spark, tmp, "events"), "user_id", "ts", "event_id", 1800)
-        .select(col("user_id"), unix_micros(col("session_start")),
-          unix_micros(col("session_end")), col("n_events"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(streamed == batch,
-        s"multi-file drain diverged: ${(batch -- streamed).take(3)} / ${(streamed -- batch).take(3)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    val tmp = Files.createTempDirectory("graft-layout-multi-").toString
+    Tables.t(spark, sf, "events").repartition(4)
+      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    val ckpt = Files.createTempDirectory("graft-layout-multi-ckpt").toString
+    val log = graft.streaming.StreamingSessions.drainSessionLog(
+      Tables.eventsStream(spark, tmp), "ts", "user_id",
+      gapMs = 30L * 60L * 1000L, ckptDir = ckpt)
+    val streamed = log.select(col("user_id"), col("start_us"),
+        col("last_us"), col("n_events"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val batch = graft.operators.Sessionize.aggByGap(
+        Tables.t(spark, tmp, "events"), "user_id", "ts", "event_id", 1800)
+      .select(col("user_id"), unix_micros(col("session_start")),
+        unix_micros(col("session_end")), col("n_events"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(streamed == batch,
+      s"multi-file drain diverged: ${(batch -- streamed).take(3)} / ${(streamed -- batch).take(3)}")
   }
 }
